@@ -100,15 +100,6 @@ def keyed_clusters(
     )
 
 
-def connected_components(pairs: DataFrame, id_name: str) -> DataFrame:
-    """Distributed connected components over an undirected pair list
-    (two id columns) via min-label propagation; returns
-    (id_name, label). See operators/dedup.py for the kernel."""
-    from .operators.dedup import _min_label_components
-
-    return _min_label_components(pairs, id_name)
-
-
 # ----------------------------------------------------------- time series
 
 def sessionize(
@@ -288,69 +279,6 @@ def ewma(
         is_start, first * F.pow(F.lit(beta), n - 1) * F.lit(beta)
     ).otherwise(F.lit(0.0))
     return df.withColumn(out_col, corrected)
-
-
-# ---------------------------------------------------------------- graph
-
-def pagerank(
-    spark: SparkSession,
-    edges: DataFrame,
-    *,
-    iters: int = 15,
-    damping: float = 0.85,
-    tol: float = 1e-12,
-) -> DataFrame:
-    """Distributed PageRank over an (src, dst) edge DataFrame with
-    uniform dangling-mass redistribution. One driver action per
-    round (the convergence aggregate), lineage truncated per round;
-    see operators/graph.py for the execution-shape discussion."""
-    e = edges.toDF("src", "dst").persist()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    dang = nodes.join(deg, nodes.node == deg.src, "left_anti").persist()
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint()
-    for _ in range(iters):
-        dmass = ranks.join(dang, "node", "left_semi").agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dmass")
-        )
-        inflow = (
-            ranks.join(F.broadcast(deg), ranks.node == deg.src)
-            .select("node", (F.col("rank") / F.col("outdeg")).alias("share"))
-            .join(e, F.col("node") == e.src)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("share").alias("in_sum"))
-        )
-        new_ranks = (
-            ranks.withColumnRenamed("rank", "prev")
-            .join(inflow, "node", "left")
-            .crossJoin(F.broadcast(dmass))
-            .select(
-                "node",
-                "prev",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * F.col("dmass") / n
-                    + F.lit(damping) * F.coalesce(F.col("in_sum"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        delta = new_ranks.agg(
-            F.max(F.abs(F.col("rank") - F.col("prev")))
-        ).collect()[0][0]
-        ranks = new_ranks.select("node", "rank")
-        if delta < tol:
-            break
-    e.unpersist()
-    nodes.unpersist()
-    dang.unpersist()
-    return ranks.select("node", "rank")
 
 
 # ------------------------------------------------------------- datasets
@@ -1251,44 +1179,6 @@ def preference_pairs(
     )
 
 
-def k_core(edges: DataFrame, a_col: str, b_col: str, *, k: int = 3) -> DataFrame:
-    """k-core decomposition of an undirected graph by synchronous
-    peeling over caller-supplied edges (one row per undirected edge
-    (a, b)): repeatedly drop nodes whose current degree is below k
-    until fixpoint.  Returns the surviving (node, core_degree) set.
-    Per round: two left-semi joins + one degree aggregation; driver
-    traffic is one survivor-count scalar per round; the initial node
-    count bounds the rounds, so the fixpoint is always reached.
-    Order-independent, hence deterministic under any partitioning."""
-    u = edges.select(
-        F.col(a_col).alias("a"), F.col(b_col).alias("b")
-    ).distinct().localCheckpoint(eager=True)
-    n = u.select(F.col("a").alias("node")).union(
-        u.select(F.col("b"))
-    ).distinct().localCheckpoint(eager=True)
-    prev = n.count()
-    survivors = None
-    for _ in range(prev + 1):
-        ne = u.join(n.select(F.col("node").alias("a")), "a", "left_semi").join(
-            n.select(F.col("node").alias("b")), "b", "left_semi"
-        )
-        deg = (
-            ne.select(F.col("a").alias("node"))
-            .unionAll(ne.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        survivors = deg.where(F.col("deg") >= k).localCheckpoint(eager=True)
-        cur = survivors.count()
-        n = survivors.select("node")
-        if cur == prev:
-            break
-        prev = cur
-    return survivors.select(
-        "node", F.col("deg").cast("long").alias("core_degree")
-    )
-
-
 def link_prediction(edges: DataFrame, a_col: str, b_col: str) -> DataFrame:
     """Common-neighbor / Jaccard link-prediction scores over the
     undirected view of caller-supplied edges: for every node pair
@@ -1340,73 +1230,6 @@ def link_prediction(edges: DataFrame, a_col: str, b_col: str) -> DataFrame:
             F.coalesce(F.col("is_edge"), F.lit(0)).cast("int").alias("is_edge"),
         )
     )
-
-
-def label_propagation(
-    edges: DataFrame, a_col: str, b_col: str, *, iters: int = 10
-) -> DataFrame:
-    """Community detection by LABEL PROPAGATION over a BIPARTITE
-    graph (edges are (a, b) with disjoint id namespaces; the
-    undirected view is built internally).  Deterministic
-    semi-synchronous schedule: each round updates the b-side from
-    its a-neighbors, then the a-side from the (new) b-side — the
-    standard fix for sync-LPA's bipartite oscillation — and each
-    node takes its neighbors' MOST FREQUENT label, ties broken by
-    MINIMUM label, so the result is a pure function of the edge set
-    (no RNG, no visit-order dependence).  Initial label = own id.
-    Stops at fixpoint (zero labels changed) or after ``iters``
-    rounds.  Returns (node, label).
-
-    Shape per half-round: one shuffle joining the label table to the
-    adjacency on the neighbor key + one (node, label) count-argmax
-    aggregation; driver traffic is one changed-count scalar per
-    round; localCheckpoint truncates lineage like the other
-    iterative kernels (k_core, _min_label_components)."""
-    u = edges.select(
-        F.col(a_col).alias("a"), F.col(b_col).alias("b")
-    ).distinct().localCheckpoint(eager=True)
-    a_nodes = u.select(F.col("a").alias("node")).distinct()
-    b_nodes = u.select(F.col("b").alias("node")).distinct()
-    labels = (
-        a_nodes.unionAll(b_nodes)
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    # adjacency oriented "update DST from SRC": b<-a then a<-b
-    adj_b = u.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
-    adj_a = u.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
-
-    def _half(labels_df: DataFrame, adj: DataFrame, side: DataFrame) -> DataFrame:
-        nbr_lbl = labels_df.select(
-            F.col("node").alias("nbr"), F.col("label").alias("nlbl")
-        )
-        votes = (
-            adj.join(nbr_lbl, "nbr")
-            .groupBy("node", "nlbl")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        # argmax by (count desc, label asc): max of (cnt, -label)
-        picked = votes.groupBy("node").agg(
-            F.max(F.struct(F.col("cnt"), (-F.col("nlbl")).alias("neg"))).alias(
-                "m"
-            )
-        ).select("node", (-F.col("m.neg")).alias("label"))
-        other = labels_df.join(side, "node", "left_anti")
-        return other.unionAll(picked)
-
-    for _ in range(iters):
-        nxt = _half(labels, adj_b, b_nodes)
-        nxt = _half(nxt, adj_a, a_nodes).localCheckpoint(eager=True)
-        changed = (
-            labels.select("node", F.col("label").alias("old"))
-            .join(nxt, "node")
-            .where(F.col("old") != F.col("label"))
-            .count()
-        )
-        labels = nxt
-        if changed == 0:
-            break
-    return labels
 
 
 def pq_encode(
@@ -2067,4 +1890,10 @@ from .api_lsh import (  # noqa: E402
     minhash_near_dup_pairs,
     minhash_signatures,
     simhash_signature,
+)
+from .api_graph import (  # noqa: E402
+    connected_components,
+    k_core,
+    label_propagation,
+    pagerank,
 )

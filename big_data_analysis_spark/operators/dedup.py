@@ -490,56 +490,6 @@ def dedup_minhash_widevocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _min_label_components(pairs: DataFrame, id_name: str) -> DataFrame:
-    """Distributed connected components via min-label propagation
-    (the Pregel/GraphX kernel as DataFrame joins): labels start as
-    node id; each round every node takes min(own, neighbors');
-    converged when the monotone-decreasing global label sum stops
-    changing. Rounds = graph diameter (shallow for dup clusters);
-    each round is one join + one groupBy, driver sees only a scalar
-    checksum. ``pairs`` must have exactly two id columns; returns
-    (id_name, label)."""
-    a, b = pairs.columns
-    edges = (
-        pairs.union(pairs.select(F.col(b), F.col(a))).toDF("src", "dst").persist()
-    )
-    labels = (
-        edges.select(F.col("src").alias(id_name))
-        .distinct()
-        .withColumn("label", F.col(id_name))
-        .localCheckpoint()
-    )
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    for _ in range(20):  # >= diameter of any real dup cluster
-        neigh_min = (
-            edges.join(
-                labels.select(
-                    F.col(id_name).alias("nsrc"), F.col("label").alias("nlabel")
-                ),
-                F.col("src") == F.col("nsrc"),
-            )
-            .groupBy(F.col("dst").alias(id_name))
-            .agg(F.min("nlabel").alias("nmin"))
-        )
-        labels = (
-            labels.join(neigh_min, id_name, "left")
-            .select(
-                id_name,
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint()  # truncate lineage each round
-        )
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    edges.unpersist()
-    return labels
-
-
-
 @query(
     "dedup_cluster_cc",
     oracle=f"""
@@ -568,11 +518,11 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     min doc_id in the component; docs in no pair are singletons and
     omitted (they keep themselves).
 
-    Algorithm: _min_label_components (shared with dedup_embedding).
+    Algorithm: api.connected_components (shared with dedup_embedding).
     Oracle: DuckDB recursive-CTE reachability closure + min over
     reached nodes."""
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    labels = _min_label_components(pairs, "doc_id")
+    labels = api.connected_components(pairs, "doc_id")
     return labels.select("doc_id", F.col("label").alias("cluster_id"))
 
 
@@ -672,12 +622,11 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     At scale the edge stage is the bounded-block GEMM (swap in the
     LSH candidate path for recall<1 speed), and label propagation
     runs O(diameter) join+groupBy rounds — near-dup clusters are
-    shallow (diameter ~2-4), so convergence is a handful of
-    scans with only a scalar checksum on the driver."""
+    shallow (diameter ~2-4), so convergence is a handful of scans."""
     from .similarity import sim_threshold_pairs
 
     pairs = sim_threshold_pairs(spark, sf_dir).select("vec_a", "vec_b")
-    labels = _min_label_components(pairs, "vec_id")
+    labels = api.connected_components(pairs, "vec_id")
     return labels.select(
         "vec_id",
         F.col("label").alias("cluster_id"),

@@ -1,8 +1,9 @@
 """Iterative graph algorithms as DataFrame joins (SURVEY.md §2 —
-"iterative algorithms", the non-SQL-expressible tier): PageRank by
-power iteration, sharing the loop discipline of
-dedup._min_label_components (join + groupBy per round,
-localCheckpoint to truncate lineage, only scalars on the driver).
+"iterative algorithms", the non-SQL-expressible tier): PageRank,
+HITS, k-core, connected components, shortest paths and BFS
+centralities.  Every round loop runs through fixpoint.fixpoint
+(join + groupBy per round, lazy localCheckpoint to truncate
+lineage, one change-count scalar per round on the driver).
 
 At 100 TB the per-iteration cost is one shuffle of the rank table on
 dst — the edge table is re-used co-partitioned every round (persist +
@@ -17,6 +18,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import api
+from ..api_graph import (
+    _degrees,
+    _min_label_step,
+    _monotone_delta,
+    _n_moved,
+    _nodes,
+    _peel_step,
+)
+from ..fixpoint import fixpoint
 from ..io import table
 from ..registry import query
 
@@ -56,16 +66,10 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration in NumPy on the collected edge list and asserts 1e-9
     agreement plus rank-sum==1 and determinism across runs.
 
-    Execution shape per round — exactly ONE driver action: the
-    dangling-node rank mass (the node set is static, precomputed
-    once) is a 1-row aggregate folded back in as a broadcast
-    crossJoin, NOT a driver collect; the next iterate is marked for
-    lazy localCheckpoint and the single convergence aggregate
-    max|rank'-rank| both materializes it and drives the early exit
-    (mirroring _min_label_components' checksum loop). Contributions
-    flow through a broadcast degree join -> edge join (one shuffle
-    on src) -> groupBy dst; lineage stays O(1) deep via the
-    checkpoint."""
+    Per round (api.pagerank, run through fixpoint): a broadcast
+    degree join -> edge join (one shuffle on src) -> groupBy dst,
+    with the dangling mass folded in as a 1-row broadcast
+    crossJoin."""
     return api.pagerank(
         spark, _edges(spark, sf_dir), iters=_ITERS, damping=_DAMPING, tol=_TOL
     )
@@ -146,25 +150,20 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Execution shape per round (identical to api.pagerank): one
     broadcast degree join, one equi-join on src, one groupBy dst
     shuffle; n and the dangling mass are 1-row broadcast
-    crossJoins, never driver collects; lineage truncated per round
-    by an eager localCheckpoint on the ≤|V|-row rank vector. At
-    100 TB the edge table stays co-partitioned on src across rounds
-    — Pregel's shape on the DataFrame runtime."""
+    crossJoins.  The 15 rounds are a fixpoint budget (early exit once
+    no rank moves)."""
     S = _PR_SCALE
     e = _edges(spark, sf_dir).localCheckpoint(eager=True)
     deg = e.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst")))
-        .distinct()
-    )
+    nodes = _nodes(e)
     meta = nodes.agg(F.count(F.lit(1)).cast("long").alias("n"))
     r = (
         nodes.crossJoin(F.broadcast(meta))
         .select("node", F.expr(f"CAST({S} AS BIGINT) DIV n").alias("pr"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(_PR_EXACT_ITERS):
+
+    def step(r: DataFrame) -> DataFrame:
         rd = r.join(F.broadcast(deg), r["node"] == deg["src"]).select(
             "node", "pr", "d"
         )
@@ -178,7 +177,7 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         dm = r.join(deg, r["node"] == deg["src"], "left_anti").agg(
             F.coalesce(F.sum("pr"), F.lit(0)).cast("long").alias("dm")
         )
-        r = (
+        return (
             nodes.join(contrib, "node", "left")
             .crossJoin(F.broadcast(meta))
             .crossJoin(F.broadcast(dm))
@@ -192,9 +191,15 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("long")
                 .alias("pr"),
             )
-            .localCheckpoint(eager=True)
         )
-    e.unpersist()
+
+    r, _, _ = fixpoint(
+        "graph_pagerank_exact",
+        r,
+        step,
+        max_rounds=_PR_EXACT_ITERS,
+        changed=lambda prev, nxt: _n_moved(prev, nxt, "node", "pr"),
+    )
     return r.select("node", F.col("pr").alias("rank_scaled"))
 
 
@@ -312,6 +317,43 @@ def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BFS_MAX_HOPS = 6
 
 
+def _bfs(name: str, e: DataFrame, roots: DataFrame, max_hops: int) -> DataFrame:
+    """Multi-source BFS: (root, node, dist, frontier) for every node
+    each root in ``roots`` (column ``node``) reaches within
+    ``max_hops`` hops of the (src, dst) edges ``e``, all trees
+    advancing together.  Each round equi-joins the newest pairs
+    (``frontier``) to ``e`` on src and anti-joins the result against
+    the visited set, which it reads in full anyway, so re-writing
+    visited at each checkpoint keeps a round O(visited)."""
+
+    def step(visited: DataFrame) -> DataFrame:
+        frontier = visited.where("frontier")
+        nxt = (
+            frontier.join(e, frontier["node"] == e["src"])
+            .select("root", F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
+            .distinct()
+            .join(visited.select("root", "node"), ["root", "node"], "left_anti")
+        )
+        return visited.withColumn("frontier", F.lit(False)).union(
+            nxt.withColumn("frontier", F.lit(True))
+        )
+
+    visited = roots.select(
+        F.col("node").alias("root"),
+        "node",
+        F.lit(0).alias("dist"),
+        F.lit(True).alias("frontier"),
+    ).localCheckpoint(eager=True)
+    visited, _, _ = fixpoint(
+        name,
+        visited,
+        step,
+        max_rounds=max_hops,
+        changed=lambda _, nxt: nxt.agg(F.count(F.when(F.col("frontier"), 1))),
+    )
+    return visited
+
+
 @query(
     "graph_bfs_distance",
     oracle=f"""
@@ -339,34 +381,14 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint must agree bit-for-bit (unlike the float-iterating
     PageRank, which is rows-only by necessity).
 
-    Execution shape: frontier expansion — per round ONE equi-join of
-    the current frontier against the persisted edge table on src,
-    an anti-join against the visited set, and a localCheckpoint to
-    truncate lineage; the loop is bounded by the hop cap, and the
-    only driver-side data is the per-round frontier count scalar
-    (the emptiness check). At 100 TB this is Pregel's BFS on the
-    DataFrame runtime: edges stay co-partitioned on src across
-    rounds, the frontier shrinks geometrically after the small-world
-    saturation point."""
+    Execution shape: _bfs from the one root; the hop cap bounds the
+    rounds.  At 100 TB this is Pregel's BFS on the DataFrame
+    runtime: edges stay co-partitioned on src across rounds."""
     e = _edges(spark, sf_dir).persist()
-    visited = e.sparkSession.createDataFrame(
-        [(0, 0)], "node bigint, dist int"
-    ).localCheckpoint(eager=True)
-    frontier = visited
-    for hop in range(1, _BFS_MAX_HOPS + 1):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["src"])
-            .select(F.col("dst").alias("node"), F.lit(hop).alias("dist"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        visited = visited.union(nxt).localCheckpoint(eager=True)
-        frontier = nxt
+    root = spark.createDataFrame([(0,)], "node bigint")
+    visited = _bfs("graph_bfs_distance", e, root, _BFS_MAX_HOPS)
     e.unpersist()
-    return visited
+    return visited.select("node", "dist")
 
 
 _SSSP_CAP = 20  # grade distances <= CAP; expansion guard matches the oracle
@@ -402,15 +424,12 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     optimal path is strictly cheaper, so the shared expansion guard
     (relax only from nodes with dist < {_SSSP_CAP}) loses nothing.
 
-    Execution shape: per round ONE frontier⋈edges equi-join on src,
-    a min-aggregation merging candidates into the running distance
-    table, and a lineage-truncating localCheckpoint; convergence is
-    detected from two scalars (node count + distance sum — the sum
-    strictly decreases on any improvement), so driver traffic is
-    O(1) per round. Edges stay co-partitioned on src; rounds are
-    bounded by the weight cap (every optimal path has ≤ {_SSSP_CAP}
-    edges since weights ≥ 1). The Pregel SSSP shape on the DataFrame
-    runtime."""
+    Execution shape: per fixpoint round ONE frontier⋈edges equi-join
+    on src and a min-aggregation merging candidates into the running
+    distance table, until no distance is added or lowered. Edges stay
+    co-partitioned on src; rounds are bounded by the weight cap
+    (every optimal path has ≤ {_SSSP_CAP} edges since weights ≥ 1).
+    The Pregel SSSP shape on the DataFrame runtime."""
     e = (
         _edges(spark, sf_dir)
         .select(
@@ -423,26 +442,22 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     dist = spark.createDataFrame([(0, 0)], "node bigint, dist bigint").localCheckpoint(
         eager=True
     )
-    prev = (1, 0)
-    for _ in range(_SSSP_CAP + 4):
+
+    def step(dist: DataFrame) -> DataFrame:
         cand = (
             dist.where(F.col("dist") < _SSSP_CAP)
             .join(e, F.col("node") == F.col("src"))
             .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
         )
-        dist = (
-            dist.unionByName(cand)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        row = dist.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("dist").alias("s")
-        ).collect()[0]
-        cur = (row["n"], row["s"])
-        if cur == prev:
-            break
-        prev = cur
+        return dist.unionByName(cand).groupBy("node").agg(F.min("dist").alias("dist"))
+
+    dist, _, _ = fixpoint(
+        "graph_sssp_weighted",
+        dist,
+        step,
+        max_rounds=_SSSP_CAP + 4,
+        changed=lambda prev, nxt: _monotone_delta(prev, nxt, "dist"),
+    )
     e.unpersist()
     return dist.where(F.col("dist") <= _SSSP_CAP)
 
@@ -515,9 +530,8 @@ def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean degree stays ~constant — so the peeling depth is
     scale-stable and the kernel is exercised for real.  Per round:
     two left-semi joins of the edge table against the survivor set +
-    one degree aggregation; driver traffic is one survivor-count
-    scalar per round; localCheckpoint truncates lineage exactly like
-    BFS/SSSP.  Peeling is order-independent, so the core is
+    one degree aggregation (api.k_core, run through fixpoint).
+    Peeling is order-independent, so the core is
     deterministic under any partitioning.  Rows-only (⊘): the
     fixpoint is outside single-statement SQL;
     tests/test_quality.py re-runs the identical peeling in pure
@@ -677,57 +691,48 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration in NumPy over the collected edge list and asserts
     1e-9 agreement plus determinism across two runs.
 
-    Execution shape per round: TWO bounded shuffles (hub mass
-    grouped by dst -> auth; auth mass grouped by src -> hub), each
-    normalization is a 1-row broadcast crossJoin (never a driver
-    collect), lineage truncated per round via lazy localCheckpoint
-    exactly like api.pagerank; at 100 TB the edge table stays
-    co-partitioned and only the score tables move."""
+    Execution shape per fixpoint round: TWO bounded shuffles (hub
+    mass grouped by dst -> auth; auth mass grouped by src -> hub),
+    each normalization a 1-row broadcast crossJoin; at 100 TB the
+    edge table stays co-partitioned and only the score tables
+    move."""
     e = _edges(spark, sf_dir).persist()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst")))
-        .distinct()
-    )
+    nodes = _nodes(e)
     scores = nodes.select(
         "node", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
     ).localCheckpoint()
-    for _ in range(_HITS_ITERS):
-        auth_in = (
-            scores.join(e, scores.node == e.src)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("hub").alias("a_raw"))
+
+    def half(scores: DataFrame, frm: str, to: str, src: str, dst: str) -> DataFrame:
+        """One max-normalized half-step: ``dst`` = the ``src`` mass
+        flowing over the edges from ``frm`` to ``to``."""
+        flow = (
+            scores.join(e, scores.node == e[frm])
+            .groupBy(F.col(to).alias("node"))
+            .agg(F.sum(src).alias("raw"))
         )
-        a = (
-            scores.select("node", "hub")
-            .join(auth_in, "node", "left")
-            .withColumn("a_raw", F.coalesce(F.col("a_raw"), F.lit(0.0)))
+        x = (
+            scores.select("node", src)
+            .join(flow, "node", "left")
+            .withColumn("raw", F.coalesce(F.col("raw"), F.lit(0.0)))
         )
-        amax = a.agg(F.greatest(F.max("a_raw"), F.lit(1e-300)).alias("m"))
-        a = a.crossJoin(F.broadcast(amax)).select(
-            "node", "hub", (F.col("a_raw") / F.col("m")).alias("auth")
+        m = x.agg(F.greatest(F.max("raw"), F.lit(1e-300)).alias("m"))
+        return x.crossJoin(F.broadcast(m)).select(
+            "node", src, (F.col("raw") / F.col("m")).alias(dst)
         )
-        hub_out = (
-            a.join(e, a.node == e.dst)
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("auth").alias("h_raw"))
-        )
-        h = (
-            a.select("node", "auth")
-            .join(hub_out, "node", "left")
-            .withColumn("h_raw", F.coalesce(F.col("h_raw"), F.lit(0.0)))
-        )
-        hmax = h.agg(F.greatest(F.max("h_raw"), F.lit(1e-300)).alias("m"))
-        scores = (
-            h.crossJoin(F.broadcast(hmax))
-            .select(
-                "node", (F.col("h_raw") / F.col("m")).alias("hub"), "auth"
-            )
-            .localCheckpoint(eager=False)
-        )
-        # one driver scalar per round materializes the checkpoint and
-        # keeps lineage O(1) deep (the pagerank discipline)
-        scores.count()
+
+    def step(scores: DataFrame) -> DataFrame:
+        auth = half(scores, "src", "dst", "hub", "auth")
+        return half(auth, "dst", "src", "auth", "hub")
+
+    # float scores never certify a fixpoint, so every round runs: the
+    # change count is the row count, 0 only for an empty graph
+    scores, _, _ = fixpoint(
+        "graph_hits",
+        scores,
+        step,
+        max_rounds=_HITS_ITERS,
+        changed=lambda _, nxt: nxt.agg(F.count(F.lit(1))),
+    )
     e.unpersist()
     return scores.select("node", "hub", "auth")
 
@@ -795,8 +800,8 @@ def graph_k_core_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Execution shape per round: one degree aggregation (groupBy
     node over the union of both endpoint projections) + two semi
     joins of the edge table against the broadcast-size survivor
-    set; edges localCheckpoint each round (lineage discipline of
-    BFS/SSSP). At 100 TB the edge table stays partitioned on `a`
+    set; the 10 rounds are a fixpoint budget (early exit once no edge
+    is peeled). At 100 TB the edge table stays partitioned on `a`
     across rounds; only survivor keys move."""
     li = table(spark, sf_dir, "lineitem")
     e = (
@@ -806,42 +811,22 @@ def graph_k_core_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    e_prev = e
-    for _ in range(_KCORE_EXACT_ROUNDS):
-        e_prev = e
-        deg = (
-            e.select(F.col("a").alias("node"))
-            .unionAll(e.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-        )
-        s = deg.where(F.col("deg") >= _KCORE_K).select("node")
-        e = (
-            e.join(s.withColumnRenamed("node", "a"), "a", "left_semi")
-            .join(s.withColumnRenamed("node", "b"), "b", "left_semi")
-            .select("a", "b")
-            .localCheckpoint(eager=True)
-        )
-    dfin = (
-        e.select(F.col("a").alias("node"))
-        .unionAll(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
+    e, e_prev, _ = fixpoint(
+        "graph_k_core_exact",
+        e,
+        _peel_step(_KCORE_K),
+        max_rounds=_KCORE_EXACT_ROUNDS,
+        changed=_monotone_delta,
     )
     # convergence certificate: edges peeled in the final round (must
     # be 0 once the peel sequence has fixpointed; graded in-output so
     # an under-peeled run at larger scale is visible, not silent)
-    cert = (
-        e_prev.agg(F.count(F.lit(1)).alias("prev_cnt"))
-        .crossJoin(e.agg(F.count(F.lit(1)).alias("last_cnt")))
-        .select(
-            (F.col("prev_cnt") - F.col("last_cnt"))
-            .cast("long")
-            .alias("n_edges_removed_last_round")
-        )
+    cert = _monotone_delta(e_prev, e).select(
+        F.col("n_moved").alias("n_edges_removed_last_round")
     )
     return (
-        dfin.where(F.col("core_degree") >= _KCORE_K)
+        _degrees(e, "core_degree")
+        .where(F.col("core_degree") >= _KCORE_K)
         .crossJoin(F.broadcast(cert))
     )
 
@@ -898,74 +883,46 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components by min-label propagation, ORACLE-EXACT:
     labels start as node ids and every round each node takes the
     minimum of its own and its neighbors' labels — a pure integer
-    lattice with a FIXED round count (8), so both engines compute
+    lattice with a FIXED round budget (8), so both engines compute
     the identical (node, component) table (the certification trick
     of graph_pagerank_exact / graph_k_core_exact applied to the
-    min-label kernel that dedup_cluster_cc runs in production).
-    Min-label needs diameter-many rounds; the symmetrized 100-node
-    demo digraph has diameter <= 3 at every fixture SF (verified:
-    round 3 state == round 8 state), and the fixed count certifies
-    the propagation structure regardless.
+    min-label step that api.connected_components runs in
+    production).  Min-label needs diameter-many rounds; the
+    symmetrized 100-node demo digraph has diameter <= 3 at every
+    fixture SF (fixpoint exits early once no label moves).
 
     Execution shape per round: one join of the label table against
     the static symmetrized edge table (co-partitioned on src across
-    rounds) + one min aggregate; the label table localCheckpoints
-    each round. At 100 TB this is exactly dedup_cluster_cc's
-    bounded-round component shape."""
+    rounds) + one min aggregate."""
     li = table(spark, sf_dir, "lineitem")
     fwd = li.select(
         (F.col("l_orderkey") % 100).alias("src"),
         (F.col("l_partkey") % 100).alias("dst"),
     )
-    bwd = li.select(
-        (F.col("l_partkey") % 100).alias("src"),
-        (F.col("l_orderkey") % 100).alias("dst"),
-    )
     e = (
-        fwd.union(bwd)
+        fwd.union(fwd.select("dst", "src"))
         .where(F.col("src") != F.col("dst"))
         .distinct()
         .localCheckpoint(eager=True)
     )
     lbl = e.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("lbl")
+        "node", F.col("node").alias("label")
     )
-    prev = lbl
-    for _ in range(_CC_ROUNDS):
-        prev = lbl
-        nb = e.join(
-            lbl.select(F.col("node").alias("dst"), F.col("lbl").alias("nb_lbl")),
-            "dst",
-        ).select(F.col("src").alias("node"), "nb_lbl")
-        mins = nb.groupBy("node").agg(F.min("nb_lbl").alias("min_nb"))
-        lbl = (
-            lbl.join(mins, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("lbl"), F.coalesce(F.col("min_nb"), F.col("lbl"))
-                ).alias("lbl"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    e.unpersist()
+    lbl, prev, _ = fixpoint(
+        "graph_connected_components",
+        lbl,
+        _min_label_step(e, "node"),
+        max_rounds=_CC_ROUNDS,
+        changed=lambda prev, nxt: _monotone_delta(prev, nxt, "label"),
+    )
     # convergence certificate: labels that still moved in the final
-    # round (must be 0 when the fixed round count covers the diameter;
-    # both engines compute it, so a lapse at scale is VISIBLE in the
-    # graded output instead of silently under-propagating)
-    cert = (
-        lbl.join(
-            prev.select(F.col("node").alias("n2"), F.col("lbl").alias("lbl_prev")),
-            lbl["node"] == F.col("n2"),
-        )
-        .agg(
-            F.sum(F.when(F.col("lbl") != F.col("lbl_prev"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_changed_last_round")
-        )
+    # round (0 once the budget covers the diameter; graded, so a lapse
+    # at scale is VISIBLE instead of silently under-propagating)
+    cert = _n_moved(prev, lbl, "node", "label").select(
+        F.col("n_moved").alias("n_changed_last_round")
     )
     return lbl.crossJoin(F.broadcast(cert)).select(
-        "node", F.col("lbl").alias("component"), "n_changed_last_round"
+        "node", F.col("label").alias("component"), "n_changed_last_round"
     )
 
 
@@ -1034,75 +991,56 @@ def graph_hits_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     round STRUCTURE against an independent engine.
 
     Execution shape per round: two bounded shuffles (hub mass by
-    dst, authority mass by src), each max is a 1-row broadcast
-    crossJoin, score tables localCheckpoint per round. At 100 TB
-    the edge table stays co-partitioned; only score rows move."""
+    dst, authority mass by src), each max a 1-row broadcast
+    crossJoin; the 10 rounds are a fixpoint budget (early exit once no
+    hub score moves). At 100 TB the edge table stays co-partitioned;
+    only score rows move."""
     S = _HITS_SCALE
     e = _edges(spark, sf_dir).localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    nodes = _nodes(e).localCheckpoint(eager=True)
+
+    def half(scores: DataFrame, to: str, frm: str) -> DataFrame:
+        """One max-normalized half-step: every node sums ``scores``
+        over its in-edges (to="dst") or out-edges (to="src")."""
+        raw = (
+            nodes.join(e, F.col("node") == F.col(to), "left")
+            .join(scores.toDF("sn", "sv"), F.col(frm) == F.col("sn"), "left")
+            .groupBy("node")
+            .agg(F.coalesce(F.sum("sv"), F.lit(0)).cast("long").alias("raw"))
+        )
+        m = raw.agg(F.max("raw").alias("m"))
+        return raw.crossJoin(F.broadcast(m)).select(
+            "node", F.expr(f"CAST(raw * {S} DIV m AS BIGINT)").alias("score")
+        )
+
+    h = nodes.select("node", F.lit(S).cast("long").alias("score"))
+    h, h_prev, _ = fixpoint(
+        "graph_hits_exact",
+        h,
+        lambda h: half(half(h, "dst", "src"), "src", "dst"),
+        max_rounds=_HITS_EXACT_ROUNDS,
+        changed=lambda prev, nxt: _n_moved(prev, nxt, "node", "score"),
     )
-    h = nodes.select("node", F.lit(S).cast("long").alias("h"))
-    a = None
-    h_prev = h
-    for _ in range(_HITS_EXACT_ROUNDS):
-        ar = (
-            nodes.join(e, nodes["node"] == e["dst"], "left")
-            .join(
-                h.select(F.col("node").alias("hn"), F.col("h").alias("hh")),
-                F.col("src") == F.col("hn"),
-                "left",
-            )
-            .groupBy(nodes["node"])
-            .agg(F.coalesce(F.sum("hh"), F.lit(0)).cast("long").alias("ar"))
-        )
-        am = ar.agg(F.max("ar").alias("m"))
-        a = (
-            ar.crossJoin(F.broadcast(am))
-            .select("node", F.expr(f"CAST(ar * {S} DIV m AS BIGINT)").alias("a"))
-            .localCheckpoint(eager=True)
-        )
-        hr = (
-            nodes.join(e, nodes["node"] == e["src"], "left")
-            .join(
-                a.select(F.col("node").alias("an"), F.col("a").alias("aa")),
-                F.col("dst") == F.col("an"),
-                "left",
-            )
-            .groupBy(nodes["node"])
-            .agg(F.coalesce(F.sum("aa"), F.lit(0)).cast("long").alias("hr"))
-        )
-        hm = hr.agg(F.max("hr").alias("m"))
-        h_prev = h
-        h = (
-            hr.crossJoin(F.broadcast(hm))
-            .select("node", F.expr(f"CAST(hr * {S} DIV m AS BIGINT)").alias("h"))
-            .localCheckpoint(eager=True)
-        )
-    e.unpersist()
+    # the final round's authorities were computed from the hubs one
+    # round before the final ones
+    a = half(h_prev, "dst", "src").toDF("node", "a")
     # convergence certificate: the max hub-score movement in the final
     # round on the 1e6 lattice (0 = the iteration has fixpointed; a
     # nonzero value at larger scale is graded, not silently stale)
     cert = (
-        h.join(
-            h_prev.select(F.col("node").alias("np"), F.col("h").alias("hp")),
-            h["node"] == F.col("np"),
-        )
+        h.join(h_prev.toDF("node", "hp"), "node")
         .agg(
-            F.max(F.abs(F.col("h") - F.col("hp")))
+            F.max(F.abs(F.col("score") - F.col("hp")))
             .cast("long")
             .alias("hub_residual_scaled")
         )
     )
     return (
-        h.join(a.withColumnRenamed("node", "n2"), h["node"] == F.col("n2"))
+        h.join(a, "node")
         .crossJoin(F.broadcast(cert))
         .select(
             "node",
-            F.col("h").alias("hub_scaled"),
+            F.col("score").alias("hub_scaled"),
             F.col("a").alias("auth_scaled"),
             "hub_residual_scaled",
         )
@@ -1421,49 +1359,21 @@ FROM d GROUP BY root
 )
 def graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Closeness and harmonic centrality of EVERY node at once —
-    multi-source BFS as one DataFrame program (the all-pairs
-    hop-distance table graph_bfs_distance's single-source kernel
-    generalizes to): the frontier carries (root, node) pairs, each
-    round is ONE equi-join of the whole frontier against the edge
-    table on the current node plus an anti-join against the visited
-    set — 100 BFS trees advance together in the same shuffle, the
-    Pregel trick that makes centrality tractable on a cluster
-    (per-source loops would be 100 sequential jobs). Harmonic
-    centrality sum(1/d) ships EXACT as sum(60 DIV d) — every hop
-    count 1..6 divides 60, so the reciprocal sum is an integer at
-    scale 60 (no float accumulation); classic closeness
-    reached/sum(dist) is the one double division. Hop cap 6 >= the
-    fixture diameter (the connected-components docstring verifies
-    <= 3), matching the oracle's recursion bound. Scale: visited is
-    O(V * V_reachable) pairs — all-pairs centrality is inherently
-    quadratic in reachable mass; the kernel keeps every step
-    key-partitioned (no broadcast of anything data-proportional)."""
+    multi-source BFS (_bfs): 100 BFS trees advance together in the
+    same shuffle, the Pregel trick that makes centrality tractable on
+    a cluster. Harmonic centrality sum(1/d) ships EXACT as
+    sum(60 DIV d) — every hop count 1..6 divides 60, so the reciprocal
+    sum is an integer at scale 60 (no float accumulation); classic
+    closeness reached/sum(dist) is the one double division. Hop cap
+    6 >= the fixture diameter (the connected-components docstring
+    verifies <= 3), matching the oracle's recursion bound. Scale:
+    visited is O(V * V_reachable) pairs — all-pairs centrality is
+    inherently quadratic in reachable mass; the kernel keeps every
+    step key-partitioned (no broadcast of anything
+    data-proportional)."""
     e = _edges(spark, sf_dir).persist()
     nodes = e.select(F.col("src").alias("node")).distinct()
-    frontier = nodes.select(
-        F.col("node").alias("root"),
-        "node",
-        F.lit(0).alias("dist"),
-    ).localCheckpoint(eager=True)
-    # visited stays a LAZY union of the per-hop checkpointed
-    # frontiers: only the new frontier is materialized each round
-    # (each pair is written exactly once), while the old
-    # union-then-checkpoint re-wrote every previously-materialized
-    # pair every hop — O(hops * V * reachable) redundant writes on an
-    # already-quadratic structure (r9 ADVICE).
-    visited = frontier
-    for hop in range(1, _CLOSENESS_HOPS + 1):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["src"])
-            .select("root", F.col("dst").alias("node"), F.lit(hop).alias("dist"))
-            .distinct()
-            .join(visited.select("root", "node"), ["root", "node"], "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        visited = visited.union(nxt)
-        frontier = nxt
+    visited = _bfs("graph_closeness", e, nodes, _CLOSENESS_HOPS)
     e.unpersist()
     reached = F.count(F.when(F.col("dist") > 0, 1))
     return visited.groupBy(F.col("root").alias("src")).agg(
@@ -1535,9 +1445,9 @@ def graph_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     grade certifies longest paths of <= 6 edges; the oracle unrolls
     the same six rounds as materialized CTEs (the graph_k_core_exact
     pattern). All integer arithmetic. Scale: per round ONE edge join
-    shuffling |V| rows + a max rollup; the bounded-round contract is
-    the same one the exact CC/HITS kernels document."""
-    spark_sess = spark
+    shuffling |V| rows + a max rollup; the six rounds are a fixpoint
+    budget (early exit once no distance rises), reported as
+    ``rounds``."""
     li = table(spark, sf_dir, "lineitem")
     e = (
         li.select(
@@ -1549,31 +1459,32 @@ def graph_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("src", "dst", (1 + (F.col("src") + F.col("dst")) % 5).alias("w"))
         .persist()
     )
-    n = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    n = _nodes(e)
     l = n.select("node", F.lit(0).cast("long").alias("dist")).localCheckpoint(
         eager=True
     )
-    for _ in range(_CP_ROUNDS):
+
+    def step(l: DataFrame) -> DataFrame:
         relaxed = (
             l.join(e, l["node"] == e["src"])
             .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("cand"))
             .groupBy("node")
             .agg(F.max("cand").alias("cand"))
         )
-        l = (
-            l.join(relaxed, "node", "left")
-            .select(
-                "node",
-                F.greatest(F.col("dist"), F.coalesce(F.col("cand"), F.lit(0)))
-                .cast("long")
-                .alias("dist"),
-            )
-            .localCheckpoint(eager=True)
+        return l.join(relaxed, "node", "left").select(
+            "node",
+            F.greatest(F.col("dist"), F.coalesce(F.col("cand"), F.lit(0)))
+            .cast("long")
+            .alias("dist"),
         )
+
+    l, _, _ = fixpoint(
+        "graph_critical_path",
+        l,
+        step,
+        max_rounds=_CP_ROUNDS,
+        changed=lambda prev, nxt: _monotone_delta(prev, nxt, "dist"),
+    )
     e.unpersist()
     return l.select(
         "node",
@@ -1806,31 +1717,15 @@ FROM d GROUP BY root
 def graph_eccentricity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Eccentricity of every source node — max hop distance over its
     reachable set (the per-node quantity whose min over nodes is the
-    graph RADIUS and max the DIAMETER): the same multi-source-BFS
-    frontier kernel as graph_closeness (per-hop frontier equi-join +
-    anti-join vs the lazy visited union, only frontiers
-    checkpointed), with the terminal rollup flipped from sums to
-    MAX.  Hop cap {_CLOSENESS_HOPS} >= the fixture diameter, matching
-    the oracle recursion bound.  Same quadratic-in-reachable-mass
-    bound as all-pairs centrality; key-partitioned throughout."""
+    graph RADIUS and max the DIAMETER): the same multi-source BFS
+    (_bfs) as graph_closeness, with the terminal rollup flipped from
+    sums to MAX.  Hop cap {_CLOSENESS_HOPS} >= the fixture diameter,
+    matching the oracle recursion bound.  Same
+    quadratic-in-reachable-mass bound as all-pairs centrality;
+    key-partitioned throughout."""
     e = _edges(spark, sf_dir).persist()
     nodes = e.select(F.col("src").alias("node")).distinct()
-    frontier = nodes.select(
-        F.col("node").alias("root"), "node", F.lit(0).alias("dist")
-    ).localCheckpoint(eager=True)
-    visited = frontier
-    for hop in range(1, _CLOSENESS_HOPS + 1):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["src"])
-            .select("root", F.col("dst").alias("node"), F.lit(hop).alias("dist"))
-            .distinct()
-            .join(visited.select("root", "node"), ["root", "node"], "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        visited = visited.union(nxt)
-        frontier = nxt
+    visited = _bfs("graph_eccentricity", e, nodes, _CLOSENESS_HOPS)
     e.unpersist()
     return visited.groupBy(F.col("root").alias("src")).agg(
         F.max("dist").cast("long").alias("eccentricity"),

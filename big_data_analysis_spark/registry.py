@@ -364,6 +364,11 @@ _GRADE_FIRST: frozenset[str] = frozenset({
     # --- r14 touches / regrades ---
     "pipeline_corpus_to_tokens", "pipeline_rfm_segments",
     "multimodal_decode_stub", "stream_watermark_census",
+    # --- round loops ported to fixpoint.fixpoint ---
+    "graph_pagerank_exact", "graph_bfs_distance", "graph_sssp_weighted",
+    "graph_k_core_exact", "graph_connected_components", "graph_hits_exact",
+    "graph_closeness", "graph_critical_path", "graph_eccentricity",
+    "dedup_cluster_cc", "dedup_embedding",
 })
 
 def _interleaved(specs: list[QuerySpec]) -> list[QuerySpec]:

@@ -51,10 +51,14 @@ def test_api_keyed_clusters(spark):
 
 
 def test_api_connected_components(spark):
-    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "a long, b long")
+    # plus a 30-node path 100-101-...-129: diameter 29, so min-label
+    # needs 29 rounds to carry label 100 to node 129
+    path = [(100 + i, 101 + i) for i in range(29)]
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)] + path, "a long, b long")
     labels = {r["nid"]: r["label"] for r in api.connected_components(pairs.toDF("x", "y"), "nid").collect()}
     assert labels[1] == labels[2] == labels[3] == 1
     assert labels[7] == labels[8] == 7
+    assert all(labels[100 + i] == 100 for i in range(30))
 
 
 def test_api_sessionize_gap_semantics(spark):

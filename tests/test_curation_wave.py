@@ -384,40 +384,6 @@ def test_matryoshka_prefix_is_consistent_subvector(spark, sf_dir):
             assert r.full_cosine == int((q * d).sum()) / 1.0e12
 
 
-def test_hits_matches_numpy_iteration(spark, sf_dir):
-    """graph_hits must agree with an independent NumPy replay of the
-    same max-normalized Kleinberg iteration to 1e-9 and be
-    deterministic across runs to the same tolerance."""
-    import numpy as np
-
-    from big_data_analysis_spark.operators.graph import _edges, graph_hits
-
-    edges = _edges(spark, sf_dir).collect()
-    nodes = sorted({r["src"] for r in edges} | {r["dst"] for r in edges})
-    idx = {v: i for i, v in enumerate(nodes)}
-    n = len(nodes)
-    hub = np.ones(n)
-    auth = np.ones(n)
-    for _ in range(12):
-        a_raw = np.zeros(n)
-        for r in edges:
-            a_raw[idx[r["dst"]]] += hub[idx[r["src"]]]
-        auth = a_raw / max(a_raw.max(), 1e-300)
-        h_raw = np.zeros(n)
-        for r in edges:
-            h_raw[idx[r["src"]]] += auth[idx[r["dst"]]]
-        hub = h_raw / max(h_raw.max(), 1e-300)
-    got = {r["node"]: (r["hub"], r["auth"]) for r in run("graph_hits", spark, sf_dir).collect()}
-    assert len(got) == n
-    for v in nodes:
-        assert abs(got[v][0] - hub[idx[v]]) < 1e-9, v
-        assert abs(got[v][1] - auth[idx[v]]) < 1e-9, v
-    again = {r["node"]: (r["hub"], r["auth"]) for r in run("graph_hits", spark, sf_dir).collect()}
-    for v in nodes:
-        assert abs(got[v][0] - again[v][0]) < 1e-9
-        assert abs(got[v][1] - again[v][1]) < 1e-9
-
-
 def test_cloze_reconstruction_roundtrip(spark, sf_dir):
     """Re-build the cloze string in Python for a sample of docs and
     match the md5 fingerprint (answer choice, first-occurrence

@@ -1075,37 +1075,6 @@ def test_chrf_matches_definition(spark, sf_dir):
             assert r.chrf3 == 1.0
 
 
-def test_eccentricity_matches_bfs(spark, sf_dir):
-    adj = {}
-    for a, b in duckdb.sql(
-        f"""
-        SELECT DISTINCT l_orderkey % 100 src, l_partkey % 100 dst
-        FROM read_parquet('{sf_dir}/lineitem.parquet')
-        WHERE l_orderkey % 100 <> l_partkey % 100
-        """
-    ).fetchall():
-        adj.setdefault(int(a), set()).add(int(b))
-    rows = {
-        r.src: r for r in run("graph_eccentricity", spark, sf_dir).collect()
-    }
-    from collections import deque
-
-    for src in adj:
-        dist = {src: 0}
-        q = deque([src])
-        while q:
-            u = q.popleft()
-            if dist[u] >= 6:
-                continue
-            for v in adj.get(u, ()):
-                if v not in dist:
-                    dist[v] = dist[u] + 1
-                    q.append(v)
-        r = rows[src]
-        assert r.eccentricity == max(dist.values())
-        assert r.n_reached == len(dist) - 1
-
-
 def test_layout_cluster_hilbert_beats_rowmajor(spark, sf_dir):
     rows = run("pipeline_layout_cluster", spark, sf_dir).collect()
     custs = [ck for ck, _ in _custs(sf_dir)]

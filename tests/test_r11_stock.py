@@ -527,46 +527,6 @@ def test_cvm_matches_definition(spark, sf_dir, day_grid):
     assert row.cvm_t == pytest.approx(t_ref, rel=1e-9)
 
 
-# --- graph_closeness ----------------------------------------------------------
-
-
-def test_closeness_matches_python_bfs(spark, sf_dir):
-    """All-pairs hop distances replayed with a per-source Python BFS;
-    closeness and exact harmonic60 recomputed."""
-    con = duckdb.connect()
-    edges = con.execute(
-        f"""SELECT DISTINCT l_orderkey % 100 AS s, l_partkey % 100 AS d
-            FROM '{sf_dir}/lineitem.parquet'
-            WHERE l_orderkey % 100 <> l_partkey % 100"""
-    ).fetchall()
-    from collections import defaultdict, deque
-
-    adj = defaultdict(list)
-    nodes = set()
-    for s, d in edges:
-        adj[s].append(d)
-        nodes.add(s)
-    rows = {r.src: r for r in run("graph_closeness", spark, sf_dir).collect()}
-    assert set(rows) == nodes
-    for src in nodes:
-        dist = {src: 0}
-        dq = deque([src])
-        while dq:
-            v = dq.popleft()
-            for w in adj.get(v, []):
-                if w not in dist:
-                    dist[w] = dist[v] + 1
-                    dq.append(w)
-        reach = {v: d for v, d in dist.items() if d > 0}
-        r = rows[src]
-        assert r.n_reached == len(reach)
-        assert r.sum_dist == sum(reach.values())
-        assert r.harmonic60 == sum(60 // d for d in reach.values())
-        assert r.closeness == pytest.approx(
-            len(reach) / sum(reach.values()), rel=1e-12
-        )
-
-
 # --- agg_isotonic -------------------------------------------------------------
 
 
@@ -1377,35 +1337,6 @@ def test_kneedle_matches_reference(spark, sf_dir, day_grid):
         assert r.cum == cum[r.t - 1]
         assert r.cross_num == crosses[r.t]
         assert r.is_knee == (r.t == knee)
-
-
-# --- graph_critical_path --------------------------------------------------------
-
-
-def test_critical_path_matches_dag_dp(spark, sf_dir):
-    """Longest <=6-edge path replayed with a bounded DP over the a<b
-    DAG; the full DP (unbounded) upper-bounds the 6-round value."""
-    con = duckdb.connect()
-    edges = con.execute(
-        f"""SELECT DISTINCT l_orderkey % 100 AS s, l_partkey % 100 AS d
-            FROM '{sf_dir}/lineitem.parquet'
-            WHERE l_orderkey % 100 < l_partkey % 100"""
-    ).fetchall()
-    w = {(s, d): 1 + (s + d) % 5 for s, d in edges}
-    nodes = sorted({s for s, _ in edges} | {d for _, d in edges})
-    dist = {v: 0 for v in nodes}
-    for _ in range(6):
-        nxt = dict(dist)
-        for (s, d), wt in w.items():
-            nxt[d] = max(nxt[d], dist[s] + wt)
-        dist = nxt
-    rows = {r.node: r for r in run("graph_critical_path", spark, sf_dir).collect()}
-    assert set(rows) == set(nodes)
-    for v in nodes:
-        assert rows[v].longest_dist == dist[v]
-        assert rows[v].rounds == 6
-    # sanity: some node accumulated a genuinely multi-hop path
-    assert max(dist.values()) > max(w.values())
 
 
 # --- multimodal_ico_parse -------------------------------------------------------

@@ -1,8 +1,7 @@
 """Semantic tests for the r8 wave — robust statistics (Theil-Sen,
 trimmed/winsorized means, weighted median, Cohen's d), exact TA
-windows (stochastic oscillator, OBV, Aroon), the two fixed-round
-exact graph promotions, edit-distance dedup, and the RL/SFT
-post-training data ops.  Each test recomputes the statistic
+windows (stochastic oscillator, OBV, Aroon), edit-distance dedup,
+and the RL/SFT post-training data ops.  Each test recomputes the statistic
 INDEPENDENTLY (pure Python over DuckDB-extracted raw data) rather
 than re-running the Spark expression — the oracle-parity harness
 already proves Spark==DuckDB; these prove both match the
@@ -241,78 +240,6 @@ def test_aroon_python_replay(spark, sf_dir):
     assert n_checked == len(got) and n_checked > 0
 
 
-def test_k_core_exact_matches_fixpoint_peel(spark, sf_dir):
-    """10 fixed rounds must land on the true k-core fixpoint for the
-    fixture (peeling converges by round ~2 here — the docstring's
-    convergence claim)."""
-    edges = set(
-        duckdb.sql(
-            f"""SELECT DISTINCT l_orderkey, -l_partkey - 1
-                FROM read_parquet('{sf_dir}/lineitem.parquet')"""
-        ).fetchall()
-    )
-    from collections import Counter
-
-    while True:
-        deg = Counter()
-        for a, b in edges:
-            deg[a] += 1
-            deg[b] += 1
-        keep = {n for n, d in deg.items() if d >= 3}
-        ne = {(a, b) for a, b in edges if a in keep and b in keep}
-        if ne == edges:
-            break
-        edges = ne
-    deg = Counter()
-    for a, b in edges:
-        deg[a] += 1
-        deg[b] += 1
-    want = {n: d for n, d in deg.items() if d >= 3}
-    got = {r.node: r.core_degree for r in run("graph_k_core_exact", spark, sf_dir).collect()}
-    assert got == want
-
-
-def test_connected_components_true_partition(spark, sf_dir):
-    """The fixed-round min-label output must equal real connected
-    components (union-find ground truth), with each component
-    labeled by its minimum node id."""
-    und = duckdb.sql(
-        f"""
-        SELECT DISTINCT src, dst FROM (
-          SELECT l_orderkey % 100 src, l_partkey % 100 dst
-          FROM read_parquet('{sf_dir}/lineitem.parquet')
-          UNION
-          SELECT l_partkey % 100, l_orderkey % 100
-          FROM read_parquet('{sf_dir}/lineitem.parquet')
-        ) WHERE src <> dst
-        """
-    ).fetchall()
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for s, d in und:
-        parent[find(s)] = find(d)
-    comp = {}
-    for n in list(parent):
-        comp.setdefault(find(n), []).append(n)
-    want = {}
-    for members in comp.values():
-        lbl = min(members)
-        for m in members:
-            want[m] = lbl
-    got = {
-        r.node: r.component
-        for r in run("graph_connected_components", spark, sf_dir).collect()
-    }
-    assert got == want
-
-
 def _lev(a, b):
     if len(a) < len(b):
         a, b = b, a
@@ -390,36 +317,6 @@ def test_loss_mask_plan_is_pure_map(spark, sf_dir):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "Python" not in plan
-
-
-def test_hits_exact_python_replay(spark, sf_dir):
-    """Fixed-round integer HITS replayed with unbounded Python ints
-    over the same edge list — exact equality per node."""
-    edges = duckdb.sql(
-        f"""SELECT DISTINCT l_orderkey % 100, l_partkey % 100
-            FROM read_parquet('{sf_dir}/lineitem.parquet')
-            WHERE l_orderkey % 100 <> l_partkey % 100"""
-    ).fetchall()
-    nodes = sorted({s for s, _ in edges} | {d for _, d in edges})
-    S = 10**6
-    h = {n: S for n in nodes}
-    a = None
-    for _ in range(10):
-        ar = {n: 0 for n in nodes}
-        for s, d in edges:
-            ar[d] += h[s]
-        am = max(ar.values())
-        a = {n: ar[n] * S // am for n in nodes}
-        hr = {n: 0 for n in nodes}
-        for s, d in edges:
-            hr[s] += a[d]
-        hm = max(hr.values())
-        h = {n: hr[n] * S // hm for n in nodes}
-    got = {
-        r.node: (r.hub_scaled, r.auth_scaled)
-        for r in run("graph_hits_exact", spark, sf_dir).collect()
-    }
-    assert got == {n: (h[n], a[n]) for n in nodes}
 
 
 def test_power_iteration_exact_aligns_with_numpy(spark, sf_dir):

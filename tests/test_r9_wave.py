@@ -428,19 +428,6 @@ def test_pivot_points_scaled_identities(spark, sf_dir):
 # --- r9 convergence certificates on the fixed-round exact kernels ---
 
 
-def test_convergence_certificates_fixpointed(spark, sf_dir):
-    """The three kernels whose fixed round count covers the fixture's
-    diameter/peel depth must now SAY so in-output: the certificate
-    column is 0 on every row (and would be graded nonzero — visibly —
-    if a larger graph ever out-ran the round budget)."""
-    cc = run("graph_connected_components", spark, sf_dir).collect()
-    assert cc and all(r.n_changed_last_round == 0 for r in cc)
-    kc = run("graph_k_core_exact", spark, sf_dir).collect()
-    assert kc and all(r.n_edges_removed_last_round == 0 for r in kc)
-    hits = run("graph_hits_exact", spark, sf_dir).collect()
-    assert hits and all(r.hub_residual_scaled == 0 for r in hits)
-
-
 def test_convergence_certificates_residual_kernels(spark, sf_dir):
     """Power iteration and Lloyd have NOT fixpointed in their fixed
     round budgets on this fixture (near-degenerate eigengap / still-
