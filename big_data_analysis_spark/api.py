@@ -522,49 +522,6 @@ def quality_score(
     )
 
 
-def minhash_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    threshold: float = 0.9,
-    num_tables: int = 8,
-    num_features: int = 1 << 18,
-    seed: int = 42,
-) -> DataFrame:
-    """MinHash-LSH near-dup candidate pairs with Jaccard >=
-    ``threshold`` — the sub-quadratic dedup scale path: banding
-    generates candidates, and the emitted jaccard is MLlib's
-    keyDistance complement = EXACT Jaccard on the binarized token
-    vectors (modulo feature-hash collisions), so the threshold is an
-    exact verify, not a sketch estimate. Returns (id_a, id_b,
-    jaccard) with id_a < id_b. Seeded for determinism."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    d = df.select(
-        F.col(id_col).alias("__id"),
-        F.array_distinct(F.split(F.col(text_col), " ")).alias("__toks"),
-    )
-    tf = HashingTF(
-        inputCol="__toks", outputCol="features", numFeatures=num_features, binary=True
-    )
-    feats = tf.transform(d).where(F.size("__toks") > 0)
-    mh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_tables, seed=seed
-    ).fit(feats)
-    pairs = mh.approxSimilarityJoin(
-        feats, feats, 1.0 - threshold, distCol="jaccard_dist"
-    )
-    return (
-        pairs.where(F.col("datasetA.__id") < F.col("datasetB.__id"))
-        .select(
-            F.col("datasetA.__id").alias(f"{id_col}_a"),
-            F.col("datasetB.__id").alias(f"{id_col}_b"),
-            (1 - F.col("jaccard_dist")).alias("jaccard"),
-        )
-    )
-
-
 # ------------------------------------------------------------- operations
 
 def skew_report(df: DataFrame, key_col: str, *, top_n: int = 10) -> DataFrame:
@@ -1888,6 +1845,7 @@ from .api_eval import (  # noqa: E402
 from .api_lsh import (  # noqa: E402
     dp_noisy_counts,
     minhash_near_dup_pairs,
+    minhash_pairs,
     minhash_signatures,
     simhash_signature,
 )

@@ -1,14 +1,100 @@
 """Deterministic-LSH and private-release kernels on caller
 DataFrames (r11; split module — the api facade re-imports by name):
 md5-keyed MinHash signatures and banded near-dup pairs with exact
-cross-multiplied Jaccard verify, shingle SimHash signatures, and
-two-sided-geometric DP released counts.
+cross-multiplied Jaccard verify, shingle SimHash signatures, MLlib
+MinHash pairs, and two-sided-geometric DP released counts.
+
+Every banded LSH query in the package runs through the same two
+steps here: `lsh_cells` explodes one narrow (id, *carry, band, key)
+row per band key, and `lsh_candidates` runs the ONE self-equi-join
+on (band, key) that turns those cells into distinct id pairs.  They
+stay separate so a caller can localCheckpoint the cells between
+them.  `pair_overlap` is the matching exact verify: it counts the
+shared elements of each candidate pair and nothing else.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Sequence
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def lsh_cells(
+    df: DataFrame, id_col: str, keys: Sequence[Column], carry: Sequence[str] = ()
+) -> DataFrame:
+    """One (id, *carry, band, key) row per input row and band: band
+    b's bucket key is `keys[b]`.  `carry` columns ride along so the
+    verify never re-joins the table they came from."""
+    return df.select(
+        F.col(id_col).alias("id"),
+        *carry,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(b).alias("band"), k.alias("key"))
+                    for b, k in enumerate(keys)
+                ]
+            )
+        ).alias("__bk"),
+    ).select("id", *carry, "__bk.band", "__bk.key")
+
+
+def lsh_candidates(cells: DataFrame) -> DataFrame:
+    """Distinct candidate pairs (id_a, id_b, <c>_a, <c>_b per carried
+    column c), id_a < id_b, from ONE self-equi-join of `lsh_cells`
+    output on (band, key): hash-partitioned on the bucket, so only
+    co-bucketed rows meet and no plan is ever id x id.  `distinct`
+    folds pairs that collide in several bands."""
+    carry = cells.columns[1:-2]
+    a, b = cells.alias("a"), cells.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.key") == F.col("b.key"))
+            & (F.col("a.id") < F.col("b.id")),
+        )
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carry for s in "ab"],
+        )
+        .distinct()
+    )
+
+
+def pair_overlap(cand: DataFrame, elems: DataFrame) -> DataFrame:
+    """`cand` plus `inter_cnt`, the number of elements ids id_a and
+    id_b share.  `elems` holds two columns, (id, element), distinct
+    per id.  The verify joins cand to elems on id_a, then to elems
+    again on (id_b, element): it only ever touches candidate pairs,
+    and pairs sharing no element drop out."""
+    i, e = elems.columns
+    side_a = elems.select(F.col(i).alias("id_a"), F.col(e).alias(e))
+    side_b = elems.select(F.col(i).alias("id_b"), F.col(e).alias(e))
+    return (
+        cand.join(side_a, "id_a")
+        .join(side_b, ["id_b", e])
+        .groupBy(*cand.columns)
+        .agg(F.count(F.lit(1)).cast("long").alias("inter_cnt"))
+    )
+
+
+def minhash_band_keys(k: int, rows_per_band: int) -> list[Column]:
+    """Band keys over minhash columns m0..m{k-1}: band b is the
+    '|'-joined decimal strings of its `rows_per_band` minhashes."""
+    return [
+        F.concat_ws(
+            "|",
+            *[
+                F.col(f"m{b * rows_per_band + r}").cast("string")
+                for r in range(rows_per_band)
+            ],
+        )
+        for b in range(k // rows_per_band)
+    ]
 
 
 def _shingle_rows(
@@ -93,83 +179,137 @@ def minhash_near_dup_pairs(
     """Banded MinHash-LSH near-dup pairs with exact Jaccard verify at
     tau = tau_num/tau_den, decided by the cross-multiplied integer
     rule (tau_den*inter >= tau_num*union <=> (tau_num+tau_den)*inter
-    >= tau_num*(|A|+|B|)) — never a float.  Candidates come from ONE
-    self-equi-join on (band_id, band_key): hash-partitioned, never
-    doc x doc (the dedup_minhash_exact kernel on caller data)."""
+    >= tau_num*(|A|+|B|)) — never a float.  Candidates come from
+    `lsh_candidates` over the signature's bands, carrying n_sh, and
+    the verify is `pair_overlap` over the candidate docs' shingles.
+    The same shape as the dedup_minhash_exact query, but NOT its
+    signatures: each minhash here is one salted md5 per shingle
+    (`minhash_signatures`), while that query slices two 60-bit lanes
+    from each digest, so the two pick different candidates."""
     assert k % rows_per_band == 0
-    n_bands = k // rows_per_band
     sig = minhash_signatures(df, id_col, text_col, k=k, shingle=shingle)
-    sh = _shingle_rows(df, id_col, text_col, shingle, "__sh_id")
-    bands = sig.select(
-        F.col(id_col).alias("__b_id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.concat_ws(
-                            "|",
-                            *[
-                                F.col(f"m{b * rows_per_band + r}").cast(
-                                    "string"
-                                )
-                                for r in range(rows_per_band)
-                            ],
-                        ).alias("band_key"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("__b_id", "bk.band_id", "bk.band_key")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.__b_id") < F.col("b.__b_id")),
-        )
-        .select(
-            F.col("a.__b_id").alias("id_a"), F.col("b.__b_id").alias("id_b")
-        )
-        .distinct()
+    cand = lsh_candidates(
+        lsh_cells(sig, id_col, minhash_band_keys(k, rows_per_band), ["n_sh"])
     )
     cand_ids = cand.select(
         F.explode(F.array("id_a", "id_b")).alias("__sh_id")
     ).distinct()
+    sh = _shingle_rows(df, id_col, text_col, shingle, "__sh_id")
     sh_c = sh.join(F.broadcast(cand_ids), "__sh_id")
-    sa, sb = sh_c.alias("sa"), sh_c.alias("sb")
-    inter = (
-        cand.join(sa, F.col("sa.__sh_id") == F.col("id_a"))
-        .join(
-            sb,
-            (F.col("sb.__sh_id") == F.col("id_b"))
-            & (F.col("sb.shingle") == F.col("sa.shingle")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("inter_cnt"))
-    )
-    na = sig.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    nb = sig.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
     return (
-        inter.join(na, "id_a")
-        .join(nb, "id_b")
+        pair_overlap(cand, sh_c)
         .where(
             (tau_num + tau_den) * F.col("inter_cnt")
-            >= tau_num * (F.col("n_a") + F.col("n_b"))
+            >= tau_num * (F.col("n_sh_a") + F.col("n_sh_b"))
         )
         .select(
             "id_a",
             "id_b",
             "inter_cnt",
-            "n_a",
-            "n_b",
+            F.col("n_sh_a").alias("n_a"),
+            F.col("n_sh_b").alias("n_b"),
             (
                 F.col("inter_cnt").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("inter_cnt"))
+                / (F.col("n_sh_a") + F.col("n_sh_b") - F.col("inter_cnt"))
             ).alias("jaccard"),
         )
+    )
+
+
+def minhash_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    *,
+    threshold: float = 0.9,
+    num_tables: int = 8,
+    num_features: int = 1 << 18,
+    seed: int = 42,
+) -> DataFrame:
+    """MinHash-LSH near-dup pairs with Jaccard >= ``threshold`` over
+    the binarized HashingTF vectors of the space-split tokens, using
+    pyspark.ml's seeded MinHashLSH model.  Returns (<id>_a, <id>_b,
+    jaccard) with <id>_a < <id>_b; ids must be unique.  Row for row,
+    doubles included, this equals MLlib's ``approxSimilarityJoin`` on
+    the same model (tests/test_lsh.py checks it against that
+    reference), without its payload-heavy candidate shuffle: see
+    `_minhash_token_pairs`."""
+    d = df.select(
+        F.col(id_col).alias("id"),
+        F.array_distinct(F.split(F.col(text_col), " ")).alias("toks"),
+    ).where(F.size("toks") > 0)
+    return _minhash_token_pairs(
+        d,
+        threshold=threshold,
+        num_tables=num_tables,
+        num_features=num_features,
+        seed=seed,
+    ).select(
+        F.col("id_a").alias(f"{id_col}_a"),
+        F.col("id_b").alias(f"{id_col}_b"),
+        "jaccard",
+    )
+
+
+def _minhash_token_pairs(
+    d: DataFrame,
+    *,
+    threshold: float,
+    num_tables: int,
+    num_features: int,
+    seed: int,
+) -> DataFrame:
+    """(id_a, id_b, jaccard) for `d` = (id, distinct-token array), no
+    array empty (MinHash is undefined on an empty set).
+
+    MLlib's approxSimilarityJoin shuffles the FULL (features sparse
+    vector + hash vectors) struct per candidate collision through
+    its internal distinct(), then runs keyDistance per pair; at 8
+    cores those heavy rows blew execution memory.  This path keeps
+    MLlib's own numbers and shuffles ids: the fitted model computes
+    the hash tables, table t's value is band t's key in `lsh_cells`
+    (bucket count n carried), and the verify is `pair_overlap` over
+    the HashingTF bucket indices.  keyDistance is the index-set
+    Jaccard distance, reproduced with the same double arithmetic:
+    dist = 1.0 - i / ((n_a + n_b) - i), kept when
+    dist < 1 - threshold, emitted as 1 - dist.  A MinHash collision
+    implies a shared bucket (the hash is injective on indices), so
+    dropping zero-overlap pairs drops nothing MLlib keeps.  The
+    feature and cell tables are localCheckpoint'ed: the join reads
+    narrow materialized rows, not the tokenizer per side."""
+    from pyspark.ml.feature import HashingTF, MinHashLSH
+    from pyspark.ml.functions import vector_to_array
+
+    id_col, tok_col = d.columns
+    tf = HashingTF(
+        inputCol=tok_col,
+        outputCol="features",
+        numFeatures=num_features,
+        binary=True,
+    )
+    feats = (
+        tf.transform(d)
+        .select(id_col, "features")
+        .localCheckpoint(eager=True)
+    )
+    mh = MinHashLSH(
+        inputCol="features", outputCol="hashes", numHashTables=num_tables, seed=seed
+    ).fit(feats)
+    bkts = F.unwrap_udt("features")["indices"]
+    cells = lsh_cells(
+        mh.transform(feats).withColumn("n", F.size(bkts)),
+        id_col,
+        [vector_to_array(F.col("hashes")[t])[0] for t in range(num_tables)],
+        ["n"],
+    ).localCheckpoint(eager=True)
+    elems = feats.select(id_col, F.explode(bkts).alias("bkt"))
+    i = F.col("inter_cnt").cast("double")
+    dist = F.lit(1.0) - i / ((F.col("n_a") + F.col("n_b")).cast("double") - i)
+    return (
+        pair_overlap(lsh_candidates(cells), elems)
+        .select("id_a", "id_b", dist.alias("dist"))
+        .where(F.col("dist") < 1.0 - threshold)
+        .select("id_a", "id_b", (1 - F.col("dist")).alias("jaccard"))
     )
 
 

@@ -21,6 +21,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import api
+from ..api_lsh import (
+    _minhash_token_pairs,
+    _shingle_rows,
+    lsh_candidates,
+    lsh_cells,
+    minhash_band_keys,
+    pair_overlap,
+)
 from ..io import spread_table, table
 from ..registry import query
 
@@ -318,8 +326,9 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHashLSH over binarized HashingTF token vectors — the
     sub-quadratic scale path for dedup_ngram_jaccard/tokenset.
     Candidate generation is the approximate part; the emitted
-    jaccard_dist is MLlib keyDistance = exact Jaccard on the feature
-    vectors (modulo HashingTF feature collisions).
+    jaccard is MLlib keyDistance's complement = exact Jaccard on the
+    feature vectors (modulo HashingTF feature collisions), and the
+    pairs equal approxSimilarityJoin's (api.minhash_pairs).
 
     Sketch internals are engine-specific -> rows-only; the unit test
     cross-checks recall against exact token-set clusters. Seeded for
@@ -390,9 +399,6 @@ def dedup_minhash_widevocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted J=2/3); the verify Jaccard is EXACT over the HashingTF
     bucket index sets (= MLlib keyDistance), so the <0.5-distance
     filter is an exact verify, not a sketch estimate."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-    from pyspark.ml.functions import vector_to_array
-
     # r14 (guide §2.5): the synthetic-token transform + HashingTF run
     # before any Exchange — on the fixture's single-row-group file
     # that whole pipeline was ONE task; spread_table parallelizes it
@@ -401,92 +407,12 @@ def dedup_minhash_widevocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread_table(spark, sf_dir, "documents", "doc_id").select(
         "doc_id", _widevocab_tokens().alias("toks")
     )
-    tf = HashingTF(
-        inputCol="toks", outputCol="features", numFeatures=1 << 18, binary=True
-    )
-    # r13 (guide §2.4/§3.3): pre-transform once and localCheckpoint so
-    # the self-join reads ONE materialized table instead of executing
-    # the token-transform + HashingTF subtree per side.
-    feats = tf.transform(d).select("doc_id", "features").localCheckpoint(
-        eager=True
-    )
-    mh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=8, seed=42
-    ).fit(feats)
-    # r14 (guide §2.3/§8 "shuffle keys, not payloads", VERDICT r13
-    # item 9): MLlib's approxSimilarityJoin shuffles the FULL
-    # (features sparse vector + 8 hash vectors) struct per candidate
-    # collision through its internal distinct(), then runs a Python-
-    # free but per-pair Scala UDF keyDistance over the vectors — at 8
-    # cores the heavy candidate rows blew execution memory (driver
-    # r13: 23.4 s @8c in-suite).  Reimplemented bit-identically with
-    # MLlib's OWN numbers: the hash model still computes the 8
-    # MinHash tables (posexplode -> (table, value) DOUBLES, 8 rows/
-    # doc), candidates are an id-only self-equi-join + distinct, and
-    # the exact-Jaccard verify runs over the HashingTF bucket index
-    # sets extracted JVM-side via unwrap_udt (keyDistance is defined
-    # as index-set Jaccard, reproduced with the same double
-    # arithmetic: dist = 1.0 - i / (|A| + |B| - i), filter
-    # dist < 0.5, emit 1 - dist).  Verified row-identical to
-    # approxSimilarityJoin at sf0.001/0.01/0.1.
-    h = (
-        mh.transform(feats)
-        .select(
-            "doc_id",
-            F.posexplode("hashes").alias("t", "hv"),
-        )
-        .select("doc_id", "t", vector_to_array("hv")[0].alias("hv"))
-        .localCheckpoint(eager=True)  # 8 narrow rows per doc
-    )
-    cand = (
-        h.alias("a")
-        .join(
-            h.alias("b"),
-            (F.col("a.t") == F.col("b.t"))
-            & (F.col("a.hv") == F.col("b.hv"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    bkt = feats.select(
-        "doc_id", F.unwrap_udt("features")["indices"].alias("bkts")
-    )
-    b = bkt.select("doc_id", F.explode("bkts").alias("bkt"))
-    inter = (
-        b.alias("x")
-        .join(
-            b.alias("y"),
-            (F.col("x.bkt") == F.col("y.bkt"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .groupBy(
-            F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).cast("double").alias("i"))
-    )
-    sizes = bkt.select("doc_id", F.size("bkts").alias("n"))
-    dist = F.lit(1.0) - F.col("i") / (
-        (F.col("n_a") + F.col("n_b")).cast("double") - F.col("i")
-    )
-    return (
-        cand.join(inter, ["doc_a", "doc_b"], "left")
-        .na.fill({"i": 0.0})
-        .join(
-            F.broadcast(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))),
-            "doc_a",
-        )
-        .join(
-            F.broadcast(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))),
-            "doc_b",
-        )
-        .withColumn("jaccard_dist", dist)
-        .where(F.col("jaccard_dist") < 0.5)
-        .select(
-            "doc_a", "doc_b", (1 - F.col("jaccard_dist")).alias("jaccard")
-        )
+    # the api.minhash_pairs path (= MLlib approxSimilarityJoin, id-only
+    # candidate shuffle, candidate-bounded bucket verify)
+    return _minhash_token_pairs(
+        d, threshold=0.5, num_tables=8, num_features=1 << 18, seed=42
+    ).select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "jaccard"
     )
 
 
@@ -538,41 +464,18 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash banding. xxhash64 has no DuckDB twin -> rows-only; unit
     test asserts token-set cluster members appear at distance 0."""
     sim = dedup_simhash(spark, sf_dir)  # (doc_id, simhash)
-    bands = sim.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.shiftrightunsigned(F.col("simhash"), 16 * b)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("band_val"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "simhash", "band.band_id", "band.band_val")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        .distinct()  # a pair can collide in several bands
-    )
-    return cand.where(F.col("hamming") <= 6)
+    bands = [
+        F.shiftrightunsigned(F.col("simhash"), 16 * b).bitwiseAND(F.lit(0xFFFF))
+        for b in range(4)
+    ]
+    cand = lsh_candidates(lsh_cells(sim, "doc_id", bands, ["simhash"]))
+    return cand.select(
+        F.col("id_a").alias("doc_a"),
+        F.col("id_b").alias("doc_b"),
+        F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).alias(
+            "hamming"
+        ),
+    ).where(F.col("hamming") <= 6)
 
 
 @query(
@@ -1335,86 +1238,16 @@ ORDER BY doc_a, doc_b
 """
 
 
-def _mhx_shingle_rows(df: DataFrame) -> DataFrame:
-    """(doc_id, shingle) DISTINCT rows. The token array is BOUND
-    as a projected column before the transform lambda references
-    it: inlining `split(text, ' ')` into the lambda body (the
-    r12 form) re-splits the document once PER SHINGLE — O(n^2)
-    per doc, measured 6x slower on this corpus (guide §1.1)."""
-    return (
-        df.where(F.col("text").isNotNull())
-        .select("doc_id", F.split("text", " ").alias("toks"))
-        .where(F.size("toks") >= 3)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(toks) - 2), i ->"
-                    " concat(toks[i-1], ' ', toks[i], ' ', toks[i+1]))"
-                )
-            ).alias("shingle"),
-        )
-        .distinct()
-    )
-
-
 def _mhx_signatures(d: DataFrame) -> DataFrame:
     """Per-doc MinHash signature row: (doc_id, n_sh, m0..m7).
     One shingle explode + distinct, 8 map-side mins in one groupBy."""
-    hashed = _mhx_shingle_rows(d).select(
+    hashed = _shingle_rows(d, "doc_id", "text", 3, "doc_id").select(
         "doc_id",
         *[F.expr(_mhx_hash_spark(i)).alias(f"h{i}") for i in range(_MHX_K)],
     )
     return hashed.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_sh"),
         *[F.min(f"h{i}").alias(f"m{i}") for i in range(_MHX_K)],
-    )
-
-
-def _mhx_band_candidates(sig: DataFrame) -> DataFrame:
-    """Banded candidate pairs from the signature table: band table
-    exploded 4x from the 8-column signature row, ONE self-equi-join
-    on (band_id, band_key) — co-bucketed docs meet, nothing else
-    does.  n_sh rides along so verification never re-joins sig.
-    Module-level (not inlined in dedup_minhash_exact) so the
-    plan-shape test can assert the join is the banded equi-join on
-    the PRE-checkpoint plan, which the checkpointed final plan no
-    longer shows."""
-    bands = sig.select(
-        "doc_id",
-        "n_sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.concat_ws(
-                            "|",
-                            F.col(f"m{2 * b}").cast("string"),
-                            F.col(f"m{2 * b + 1}").cast("string"),
-                        ).alias("band_key"),
-                    )
-                    for b in range(_MHX_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "n_sh", "bk.band_id", "bk.band_key")
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n_sh").alias("n_sh_a"),
-            F.col("b.n_sh").alias("n_sh_b"),
-        )
-        .distinct()
     )
 
 
@@ -1443,8 +1276,9 @@ def dedup_minhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature table (~100 bytes/doc) and the candidate PAIR table
     (tiny by banding construction) are localCheckpoint'ed —
     recomputed per run, inside the timed region — and n_sh rides
-    the band table so the old plan's two post-verify sig re-joins
-    disappear.  Verification re-derives shingles ONLY for candidate
+    the band cells (api_lsh.lsh_cells / lsh_candidates) so the old
+    plan's two post-verify sig re-joins disappear.  Verification
+    (api_lsh.pair_overlap) re-derives shingles ONLY for candidate
     docs (broadcast semi-filter BEFORE the explode).  A first r13
     attempt instead computed the signatures shuffle-free with
     array higher-order functions (array_distinct + transform +
@@ -1466,34 +1300,27 @@ def dedup_minhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = _mhx_signatures(
         spread_table(spark, sf_dir, "documents", "doc_id")
     ).localCheckpoint(eager=True)
-    cand = _mhx_band_candidates(sig).localCheckpoint(eager=True)
+    bands = minhash_band_keys(_MHX_K, _MHX_K // _MHX_BANDS)
+    cand = lsh_candidates(
+        lsh_cells(sig, "doc_id", bands, ["n_sh"])
+    ).localCheckpoint(eager=True)
     # verification touches only candidate docs: broadcast-semi-filter
     # the document scan down to them BEFORE the shingle explode, so
     # the corpus-sized relation is neither re-hashed nor shuffled on
     # the pair keys (at 100 TB the candidate set is the tiny side by
     # construction)
     cand_ids = cand.select(
-        F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
+        F.explode(F.array("id_a", "id_b")).alias("doc_id")
     ).distinct()
-    sh_c = _mhx_shingle_rows(d.join(F.broadcast(cand_ids), "doc_id"))
-    sa = sh_c.alias("sa")
-    sb = sh_c.alias("sb")
-    inter = (
-        F.broadcast(cand)
-        .join(sa, F.col("sa.doc_id") == F.col("doc_a"))
-        .join(
-            sb,
-            (F.col("sb.doc_id") == F.col("doc_b"))
-            & (F.col("sb.shingle") == F.col("sa.shingle")),
-        )
-        .groupBy("doc_a", "doc_b", "n_sh_a", "n_sh_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("inter_cnt"))
+    sh_c = _shingle_rows(
+        d.join(F.broadcast(cand_ids), "doc_id"), "doc_id", "text", 3, "doc_id"
     )
+    inter = pair_overlap(F.broadcast(cand), sh_c)
     return (
         inter.where(3 * F.col("inter_cnt") >= F.col("n_sh_a") + F.col("n_sh_b"))
         .select(
-            "doc_a",
-            "doc_b",
+            F.col("id_a").alias("doc_a"),
+            F.col("id_b").alias("doc_b"),
             "inter_cnt",
             "n_sh_a",
             "n_sh_b",
@@ -1566,16 +1393,18 @@ def dedup_simhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     discriminative even on the fixtures' 31-word vocabulary, where
     bag-of-words SimHash saturates (every doc looks alike).
 
-    Execution shape (r13 optimization, guide §1.1/§3.3): one shingle
-    explode + one groupBy computing all 32 bit-votes map-side, and
+    Execution shape (r13 optimization, guide §1.1/§3.3): the
+    signature is api.simhash_signature — one shingle explode + one
+    groupBy computing all 32 bit-votes map-side — and
     the per-doc signature table (8 bytes/doc) localCheckpoint'ed —
     recomputed per run, inside the timed region — so the r12 plan's
     re-execution of the whole scan→explode→distinct→md5→groupBy
     chain for the second self-join side disappears (see
     plans/r13/dedup_simhash_exact_before.txt: two full corpus
     subtrees, no Exchange reuse because the band join broadcasts).
-    Candidates come from the band-table explode + ONE self-equi-join
-    on (band_id, byte), so Catalyst hash-partitions on the byte
+    Candidates come from the byte-band cells + ONE self-equi-join
+    on (band, byte) (api_lsh.lsh_candidates, simhash carried), so
+    Catalyst hash-partitions on the byte
     value instead of nested-looping; verification is a per-pair
     popcount, no second corpus pass.  (A first r13 attempt computed
     the signature shuffle-free with array higher-order functions —
@@ -1587,84 +1416,20 @@ def dedup_simhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     task before the distinct Exchange (no-op on a splittable
     layout).  1.56 -> 0.85 s isolated."""
     d = spread_table(spark, sf_dir, "documents", "doc_id")
-    # token array BOUND as a projected column before the lambda (the
-    # inlined-split r12 form re-split the doc once per shingle —
-    # O(n^2) per doc; see dedup_minhash_exact._shingle_rows)
-    sh = (
-        d.where(F.col("text").isNotNull())
-        .select("doc_id", F.split("text", " ").alias("toks"))
-        .where(F.size("toks") >= 3)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(toks) - 2), i ->"
-                    " concat(toks[i-1], ' ', toks[i], ' ', toks[i+1]))"
-                )
-            ).alias("shingle"),
-        )
-        .distinct()
+    sig = api.simhash_signature(d, "doc_id", "text", bits=_SHX_BITS).localCheckpoint(
+        eager=True
     )
-    hashed = sh.select(
-        "doc_id",
-        F.expr(
-            "CAST(conv(substring(md5(concat('sh|', shingle)), 1, 15), 16, 10)"
-            " AS BIGINT)"
-        ).alias("h"),
-    )
-    sig = (
-        hashed.groupBy("doc_id")
-        .agg(
-            F.expr(
-                " + ".join(
-                    f"(CASE WHEN SUM(((h >> {b}) & 1) * 2 - 1) >= 0"
-                    f" THEN CAST(1 AS BIGINT) ELSE 0 END) * {1 << b}"
-                    for b in range(_SHX_BITS)
-                )
-            ).alias("simhash")
-        )
-        .localCheckpoint(eager=True)
-    )
-    bands = sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_id"),
-                        F.expr(f"(simhash >> {8 * i}) & 255").alias("byte"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "simhash", "bk.band_id", "bk.byte")
-    a = bands.alias("a")
-    b = bands.alias("b")
+    bytes_ = [F.expr(f"(simhash >> {8 * i}) & 255") for i in range(4)]
+    ham = F.expr("CAST(bit_count(simhash_a ^ simhash_b) AS BIGINT)")
     return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.byte") == F.col("b.byte"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        lsh_candidates(lsh_cells(sig, "doc_id", bytes_, ["simhash"]))
+        .where(ham <= _SHX_HAM)
         .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sig_a"),
-            F.col("b.simhash").alias("sig_b"),
-        )
-        .distinct()
-        .where(F.expr("bit_count(sig_a ^ sig_b)") <= _SHX_HAM)
-        .select(
-            "doc_a",
-            "doc_b",
-            "sig_a",
-            "sig_b",
-            F.expr("CAST(bit_count(sig_a ^ sig_b) AS BIGINT)").alias(
-                "hamming"
-            ),
+            F.col("id_a").alias("doc_a"),
+            F.col("id_b").alias("doc_b"),
+            F.col("simhash_a").alias("sig_a"),
+            F.col("simhash_b").alias("sig_b"),
+            ham.alias("hamming"),
         )
         .orderBy("doc_a", "doc_b")
     )

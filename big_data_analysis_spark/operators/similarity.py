@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import api
+from ..api_lsh import lsh_candidates, lsh_cells
 from ..io import spread_table, table
 from ..registry import query
 
@@ -507,8 +508,8 @@ def sim_threshold_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hash vectors) struct through its internal distinct().
     # Reimplemented bit-identically with the model's own numbers
     # (verified row-identical incl. the cosine doubles at
-    # sf0.001/0.01/0.1): candidates are an id-only join + distinct
-    # over the posexploded (table, value) hash cells; the euclidean
+    # sf0.001/0.01/0.1): candidates are the id-only api_lsh join over
+    # the (table, value) hash cells; the euclidean
     # gate reproduces keyDistance exactly (sqrt of the left-to-right
     # (x-y)^2 fold = Vectors.sqdist on dense vectors, < 1.0955); the
     # exact cosine verify (dot_q_pandas) runs only on gate
@@ -516,24 +517,12 @@ def sim_threshold_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 16-byte id pairs instead of KB-scale structs.
     from pyspark.ml.functions import vector_to_array
 
-    h = (
-        lsh.transform(e)
-        .select("vec_id", F.posexplode("hashes").alias("t", "hv"))
-        .select("vec_id", "t", vector_to_array("hv")[0].alias("hv"))
-        .localCheckpoint(eager=True)  # 8 narrow rows per vector
+    tables = [vector_to_array(F.col("hashes")[t])[0] for t in range(8)]
+    cells = lsh_cells(lsh.transform(e), "vec_id", tables).localCheckpoint(
+        eager=True  # 8 narrow rows per vector
     )
-    cand = (
-        h.alias("a")
-        .join(
-            h.alias("b"),
-            (F.col("a.t") == F.col("b.t"))
-            & (F.col("a.hv") == F.col("b.hv"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b")
-        )
-        .distinct()
+    cand = lsh_candidates(cells).select(
+        F.col("id_a").alias("vec_a"), F.col("id_b").alias("vec_b")
     )
     emb = e.select("vec_id", "embedding")
     withv = cand.join(

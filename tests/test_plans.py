@@ -924,41 +924,6 @@ def test_spc_rules_single_partition_pass(spark, sf_dir):
     assert tree.count("Exchange hashpartitioning(event_type") <= 2
 
 
-def test_minhash_exact_bands_equijoin_no_cartesian(spark, sf_dir):
-    """Candidate generation must be the banded hash-partitioned
-    self-equi-join on (band_id, band_key) — a CartesianProduct or
-    BroadcastNestedLoopJoin here means the LSH degenerated to doc x
-    doc and the 100-TB story is gone.  Since r13 the candidate table
-    is localCheckpoint'ed inside dedup_minhash_exact (the final plan
-    no longer shows the band join), so assert on the pre-checkpoint
-    candidate plan built from the same module-level helpers the
-    operator uses."""
-    from big_data_analysis_spark.operators.dedup import (
-        _mhx_band_candidates,
-        _mhx_signatures,
-    )
-    from big_data_analysis_spark.io import table
-
-    d = table(spark, sf_dir, "documents")
-    df = _mhx_band_candidates(_mhx_signatures(d))
-    jvm = spark.sparkContext._jvm
-    plan = jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    tree = plan.split("\n\n")[0]
-    assert "CartesianProduct" not in tree
-    assert "BroadcastNestedLoop" not in tree
-    assert "band_key" in plan  # the equi-join key reaches the join node
-
-
-def test_simhash_exact_bands_equijoin_no_cartesian(spark, sf_dir):
-    """Same LSH guarantee for the SimHash byte-band join."""
-    plan = plan_of("dedup_simhash_exact", spark, sf_dir)
-    tree = plan.split("\n\n")[0]
-    assert "CartesianProduct" not in tree
-    assert "BroadcastNestedLoop" not in tree
-
-
 def test_dp_histogram_single_bounded_aggregate(spark, sf_dir):
     """The mechanism is post-processing on the bounded (type, dow)
     grid: exactly one data-proportional aggregate, no join."""

@@ -1,5 +1,4 @@
-"""Definition-replay tests for the r11 wave 1 — deterministic-LSH
-dedup (md5 MinHash banding, shingle SimHash), the DP geometric
+"""Definition-replay tests for the r11 wave 1 — the DP geometric
 histogram, CUPED, Mantel-Haenszel, tabular CUSUM and PMI
 collocations.  Each test recomputes the operator INDEPENDENTLY in
 pure Python (hashlib/fractions over DuckDB-extracted raw tables)
@@ -24,100 +23,12 @@ def run(name, spark, sf_dir):
     return REG[name].fn(spark, sf_dir)
 
 
-def _md5_60(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-
 def _docs(sf_dir):
     rows = duckdb.sql(
         f"SELECT doc_id, text FROM read_parquet('{sf_dir}/documents.parquet')"
         " WHERE text IS NOT NULL"
     ).fetchall()
     return {int(i): t.split(" ") for i, t in rows}
-
-
-def _shingles(toks):
-    return {
-        " ".join(toks[i : i + 3]) for i in range(len(toks) - 2)
-    } if len(toks) >= 3 else set()
-
-
-def test_minhash_exact_matches_python_lsh(spark, sf_dir):
-    docs = {i: _shingles(t) for i, t in _docs(sf_dir).items()}
-    sigs = {}
-    for i, sh in docs.items():
-        if not sh:
-            continue
-        sigs[i] = [
-            min(
-                int(
-                    hashlib.md5(f"{k // 2}|{s}".encode()).hexdigest()[
-                        16 * (k % 2) : 16 * (k % 2) + 15
-                    ],
-                    16,
-                )
-                for s in sh
-            )
-            for k in range(8)
-        ]
-    buckets = defaultdict(list)
-    for i, m in sigs.items():
-        for b in range(4):
-            buckets[(b, m[2 * b], m[2 * b + 1])].append(i)
-    cand = set()
-    for ids in buckets.values():
-        ids.sort()
-        for x in range(len(ids)):
-            for y in range(x + 1, len(ids)):
-                cand.add((ids[x], ids[y]))
-    expect = {}
-    for a, b in sorted(cand):
-        inter = len(docs[a] & docs[b])
-        na, nb = len(docs[a]), len(docs[b])
-        if 3 * inter >= na + nb:
-            expect[(a, b)] = (inter, na, nb)
-    got = {
-        (r.doc_a, r.doc_b): (r.inter_cnt, r.n_sh_a, r.n_sh_b)
-        for r in run("dedup_minhash_exact", spark, sf_dir).collect()
-    }
-    assert got == expect
-    assert len(expect) > 0
-    # banding must be genuinely sub-quadratic on this corpus
-    n = len(sigs)
-    assert len(cand) < n * (n - 1) // 20
-
-
-def test_simhash_exact_matches_python_model(spark, sf_dir):
-    docs = {i: _shingles(t) for i, t in _docs(sf_dir).items()}
-    sigs = {}
-    for i, sh in docs.items():
-        if not sh:
-            continue
-        votes = [0] * 32
-        for s in sh:
-            h = _md5_60(f"sh|{s}")
-            for b in range(32):
-                votes[b] += 1 if (h >> b) & 1 else -1
-        sigs[i] = sum(1 << b for b in range(32) if votes[b] >= 0)
-    expect = {}
-    ids = sorted(sigs)
-    for xi, a in enumerate(ids):
-        for b in ids[xi + 1 :]:
-            sa, sb = sigs[a], sigs[b]
-            if not any(
-                ((sa >> (8 * k)) & 255) == ((sb >> (8 * k)) & 255)
-                for k in range(4)
-            ):
-                continue
-            ham = bin(sa ^ sb).count("1")
-            if ham <= 3:
-                expect[(a, b)] = (sa, sb, ham)
-    got = {
-        (r.doc_a, r.doc_b): (r.sig_a, r.sig_b, r.hamming)
-        for r in run("dedup_simhash_exact", spark, sf_dir).collect()
-    }
-    assert got == expect
-    assert len(expect) > 0
 
 
 def test_dp_histogram_noise_is_inverse_cdf_geometric(spark, sf_dir):
