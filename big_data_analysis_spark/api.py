@@ -1788,30 +1788,16 @@ def kmeans_lloyd(
 
 
 
-# Distributed global-order kernels (implemented alongside the window
-# operators; re-exported here because they are fixture-independent
-# library surface): exact ntile(k)/row_number over a total order
-# WITHOUT a single-task sort — range repartition, per-partition
-# row_number, broadcast cumulative offsets. See their docstrings in
-# operators/windows.py for the scale contract. Lazy (PEP 562)
-# because operators/windows.py imports this module at its top — an
-# eager import here breaks the windows-first import order.
+# Multimodal parsers live in operator modules that import this one at
+# their top, so they are re-exported lazily (PEP 562): an eager import
+# here would break the operators-first import order.
 def __getattr__(name: str):
-    if name in (
-        "ntile_distributed",
-        "global_rank_distributed",
-        "grouped_cumsum_distributed",
-    ):
-        from .operators import windows
-
-        return getattr(windows, name)
     if name in (
         "png_stats",
         "wav_stats",
         "bmp_stats",
     ):
-        # wire-format structural parsers (pure-codegen folds) — lazy
-        # for the same import-order reason as the window kernels.
+        # wire-format structural parsers (pure-codegen folds)
         from .operators import multimodal
 
         return getattr(multimodal, name)
@@ -1830,7 +1816,7 @@ def __getattr__(name: str):
 
 
 
-# generation-eval / curation / LSH kernels live in sibling modules
+# generation-eval / curation / LSH / graph / rank kernels live in sibling modules
 # (r11 module-size cap); re-imported by name so api.<kernel> is the
 # stable address for every library entry point.
 from .api_eval import (  # noqa: E402
@@ -1854,4 +1840,9 @@ from .api_graph import (  # noqa: E402
     k_core,
     label_propagation,
     pagerank,
+)
+from .api_rank import (  # noqa: E402
+    global_rank_distributed,
+    grouped_cumsum_distributed,
+    ntile_distributed,
 )

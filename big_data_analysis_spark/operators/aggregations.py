@@ -994,15 +994,11 @@ def agg_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     o_orderkey makes the assignment a total order, hence
     deterministic under parallelism. Values pass through unchanged.
 
-    Scale note (r6): the bucket assignment runs through the
-    ``ntile_distributed`` kernel (operators/windows.py — range
-    repartition + per-partition row_number + broadcast offsets,
-    bit-equal to ntile by its driver grade and hypothesis twin), so
-    the EXACT equi-depth histogram is itself 100 TB-shaped: no
-    single-partition sort anywhere. The approximate alternative for
-    when even one extra pass is too much remains
-    agg_percentile_approx."""
-    from .windows import ntile_distributed
+    Scale note: the bucket assignment runs through the
+    distributed-prefix kernel ``api_rank.ntile_distributed``. The
+    approximate alternative for when even one extra pass is too much
+    remains agg_percentile_approx."""
+    from ..api_rank import ntile_distributed
 
     o = table(spark, sf_dir, "orders")
     t = ntile_distributed(
@@ -1196,11 +1192,9 @@ def agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     under 2^53 — holds to ~100k customers here; beyond that switch
     the accumulators to DECIMAL(38,0) and accept the documented
     one-ulp decimal->double risk, or bin spends). The global rank
-    runs through the global_rank_distributed kernel (r6) — the
-    per-customer rollup grows with the customer base, so the old
-    single-partition row_number was the scale limiter; now nothing
-    sorts on one task."""
-    from .windows import global_rank_distributed
+    runs through the distributed-prefix kernel
+    ``api_rank.global_rank_distributed``."""
+    from ..api_rank import global_rank_distributed
 
     o = table(spark, sf_dir, "orders")
     spend = o.groupBy("o_custkey").agg(

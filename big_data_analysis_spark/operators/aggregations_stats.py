@@ -12,7 +12,7 @@ Same exactness discipline as aggregations.py / stats_ext.py: exact
 integer cents everywhere, doubled medians so ties stay integral,
 DECIMAL(38,0)/HUGEINT past int64, one final double division per
 output column; every data-proportional rank rides the
-global_rank_distributed kernel, never a single-partition window.
+api_rank.global_rank_distributed kernel, never a single-partition window.
 """
 
 from __future__ import annotations
@@ -218,7 +218,7 @@ def agg_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-proportional — enforced by
     tests/test_quality.py::test_value_grid_windows_stay_domain_bounded;
     a high-cardinality measure must route through
-    operators/windows.py global_rank_distributed instead."""
+    api_rank.global_rank_distributed instead."""
     ev = table(spark, sf_dir, "events").where(F.col("event_type") == "purchase")
     arm = F.when(
         (F.col("user_id").bitwiseAND(2147483647) * 2654435761) % 4294967296 < 2147483648, "A"
@@ -418,13 +418,12 @@ def agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     hence no float-combination divergence).
 
     Shape: one global index assignment over the filtered sample
-    (via the global_rank_distributed kernel since r6 — range
-    repartition + broadcast offsets, no single-task window), a
-    B x n draw table joined back on index (the resample fan-out —
-    at 100 TB you bootstrap per-partition block sums, the classic
-    'bag of little bootstraps' refinement), per-replicate rollup,
-    and a rank over B rows."""
-    from .windows import global_rank_distributed
+    (via the distributed-prefix kernel
+    ``api_rank.global_rank_distributed``), a B x n draw table joined
+    back on index (the resample fan-out — at 100 TB you bootstrap
+    per-partition block sums, the classic 'bag of little bootstraps'
+    refinement), per-replicate rollup, and a rank over B rows."""
+    from ..api_rank import global_rank_distributed
 
     ev = table(spark, sf_dir, "events").where(F.col("event_type") == "purchase")
     cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
@@ -1107,11 +1106,10 @@ def agg_pareto_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact DECIMAL before the one cast-to-double per output
     column; the cumulative share sums 10 doubles in a fixed order.
 
-    Decile assignment runs through the ``ntile_distributed`` kernel
-    (r6 — range repartition + broadcast offsets, bit-equal to ntile
-    by driver grade + hypothesis twin), so no single-task sort; the
-    10-row rollup afterwards is trivially bounded."""
-    from .windows import ntile_distributed
+    Decile assignment runs through the distributed-prefix kernel
+    ``api_rank.ntile_distributed``; the 10-row rollup afterwards is
+    trivially bounded."""
+    from ..api_rank import ntile_distributed
 
     o = table(spark, sf_dir, "orders")
     d = ntile_distributed(

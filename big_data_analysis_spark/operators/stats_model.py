@@ -12,7 +12,7 @@ HUGEINT/DECIMAL(38,0) with the VARCHAR double-crossing for anything
 past int64, decision rules CROSS-MULTIPLIED into integer comparisons
 (no float ever ranks or flags), fixed-order double chains only in
 display columns, bounded-domain windows — and every data-proportional
-ranking through the certified global_rank_distributed kernel, never a
+ranking through the api_rank.global_rank_distributed kernel, never a
 single-partition window.
 """
 
@@ -25,7 +25,7 @@ from pyspark.sql.window import Window
 from ..io import register_views, table
 from ..registry import query
 from .stats_ext import _CENTS_SQL, _GRID_SQL, _day_grid
-from .windows import global_rank_distributed
+from ..api_rank import global_rank_distributed
 
 
 _BH_ALPHA_DEN = 20  # alpha = 1/20 = 0.05
@@ -92,9 +92,8 @@ def agg_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical in both engines, tie-broken by user_id. Scale shape:
     the median lives on the bounded cents value grid; the per-user
     rollup is one key-partitioned aggregation; the m-user ranking
-    goes through the certified global_rank_distributed kernel (range
-    repartition + broadcast offsets — users are data-proportional,
-    so no single-partition window); the cutoff is a 1-row broadcast."""
+    goes through the distributed-prefix kernel
+    ``api_rank.global_rank_distributed``; the cutoff is a 1-row broadcast."""
     ev = table(spark, sf_dir, "events")
     cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
     c = ev.select("user_id", cents.alias("cents"))

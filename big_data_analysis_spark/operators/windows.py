@@ -18,11 +18,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import api
+from ..api_rank import (  # noqa: F401 — still importable from operators.windows
+    global_rank_distributed,
+    grouped_cumsum_distributed,
+    ntile_distributed,
+)
 from ..io import table
 from ..registry import query
 
-# The three distributed kernels below persist() a local-rank
-# intermediate because the offsets rollup forks the DAG. The returned
+# Kernels such as api_rank's distributed prefix persist() an
+# intermediate because their plan forks on it. The returned
 # DataFrame is lazy, so the kernel cannot unpersist before the caller
 # materializes it — instead every persisted handle is registered here
 # and harnesses that run many queries in one session (bench.py, long
@@ -928,189 +933,6 @@ def win_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def global_rank_distributed(
-    df: DataFrame, order_cols: list, alias: str, num_partitions: int = 32
-) -> DataFrame:
-    """Exact global row_number() over a total order WITHOUT a
-    single-task sort — the rank-emitting sibling of
-    ``ntile_distributed`` (same certified machinery: range
-    repartition, per-partition row_number keyed on the materialized
-    partition id, cumulative per-partition counts broadcast back as
-    offsets).  ``order_cols`` must be a total order.  Used for
-    round-robin shard assignment (pipeline_shard_manifest) and any
-    exact-rank need on data-proportional tables."""
-    keep = df.columns
-    ranged = df.repartitionByRange(num_partitions, *order_cols)
-    local = ranged.select(
-        *keep,
-        F.spark_partition_id().alias("__gr_pid"),
-        F.row_number()
-        .over(Window.partitionBy(F.spark_partition_id()).orderBy(*order_cols))
-        .alias("__gr_lrn"),
-    )
-    # see ntile_distributed: the offsets branch forks the DAG
-    local = _register_persist(local.persist())
-    counts = local.groupBy("__gr_pid").agg(F.count(F.lit(1)).alias("cnt"))
-    offsets = counts.select(
-        "__gr_pid",
-        F.coalesce(
-            F.sum("cnt").over(
-                Window.orderBy("__gr_pid").rowsBetween(
-                    Window.unboundedPreceding, -1
-                )
-            ),
-            F.lit(0),
-        ).alias("__gr_off"),
-    )
-    return local.join(F.broadcast(offsets), "__gr_pid").select(
-        *keep, (F.col("__gr_off") + F.col("__gr_lrn")).alias(alias)
-    )
-
-
-def ntile_distributed(
-    df: DataFrame, k: int, order_cols: list, alias: str, num_partitions: int = 32
-) -> DataFrame:
-    """Reusable AT-SCALE ntile kernel: appends an exact ``ntile(k)
-    OVER (ORDER BY order_cols)`` column named ``alias`` WITHOUT a
-    single-partition global sort.  ``order_cols`` must be a total
-    order (include a unique tie-break) or the bucket assignment is
-    nondeterministic under parallelism.
-
-    Shape (certified bit-exact by the win_ntile_distributed driver
-    grade and the hypothesis twin test): range-repartition on the
-    total order (RangePartitioner — partition p holds a contiguous
-    key range, ranges ascending in p), per-PARTITION row_number
-    (parallel windows, no global one), a ``num_partitions``-row
-    count rollup whose cumulative offsets turn local row numbers
-    into exact global ranks via broadcast join, then ANSI ntile's
-    closed form from (rank, n): the first n%k buckets take
-    ceil(n/k) rows.  Every shuffle is range-balanced over the data
-    or over <=num_partitions rows; at 100 TB the same plan holds
-    with more range partitions — nothing global ever sorts on one
-    executor.  Chainable: call repeatedly to score several
-    orderings of the same rollup (see pipeline_rfm_segments)."""
-    keep = df.columns
-    ranged = df.repartitionByRange(num_partitions, *order_cols)
-    local = ranged.select(
-        *keep,
-        F.spark_partition_id().alias("__nt_pid"),
-        F.row_number()
-        .over(Window.partitionBy(F.spark_partition_id()).orderBy(*order_cols))
-        .alias("__nt_lrn"),
-    )
-    # The offsets rollup below FORKS the DAG: without the persist,
-    # everything upstream of the kernel evaluates once per branch —
-    # quadratic re-execution when kernels chain (rfm's 3 scores).
-    # Persist is O(data) like the shuffle that precedes it; Spark
-    # evicts LRU, correctness never depends on it. Registered so
-    # release_kernel_persists() can free the blocks post-run.
-    local = _register_persist(local.persist())
-    counts = local.groupBy("__nt_pid").agg(F.count(F.lit(1)).alias("cnt"))
-    offsets = counts.select(
-        "__nt_pid",
-        F.coalesce(
-            F.sum("cnt").over(
-                Window.orderBy("__nt_pid").rowsBetween(
-                    Window.unboundedPreceding, -1
-                )
-            ),
-            F.lit(0),
-        ).alias("__nt_off"),
-        F.sum("cnt").over(
-            Window.rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).alias("__nt_n"),
-    )
-    r = F.col("__nt_off") + F.col("__nt_lrn")
-    q, rem = (F.col("__nt_n") / k).cast("long"), F.col("__nt_n") % k
-    big = rem * (q + 1)  # rows covered by the ceil-sized buckets
-    bucket = F.when(
-        r <= big, F.ceil(r / (q + 1))
-    ).otherwise(rem + F.ceil((r - big) / q))
-    return local.join(F.broadcast(offsets), "__nt_pid").select(
-        *keep, bucket.cast("int").alias(alias)
-    )
-
-
-def grouped_cumsum_distributed(
-    df: DataFrame,
-    group_cols: list,
-    order_cols: list,
-    value_col: str,
-    alias: str,
-    num_partitions: int = 32,
-) -> DataFrame:
-    """Exact per-group running SUM(value) WITHOUT shuffling each group
-    onto one task — the grouped-prefix-sum sibling of
-    ``global_rank_distributed``.  A plain ``SUM OVER (PARTITION BY
-    group ORDER BY ...)`` hash-partitions on the group key, so one
-    popular group (a dominant source/domain at 100 TB) becomes one
-    executor's sort; here the data range-partitions on (group, order)
-    — a big group SPANS partitions — each partition computes its
-    local per-group prefix, and a bounded (num_partitions x n_groups)
-    per-(partition, group) totals rollup broadcasts back as offsets.
-
-    Contract: ``group_cols + order_cols`` must be a total order
-    (include a unique tie-break).  The offsets table is
-    O(num_partitions x distinct groups) — meant for modest group
-    cardinality (sources, domains, shards); for high-cardinality
-    groups the plain partitioned window is already parallel and this
-    kernel is unnecessary."""
-    keep = df.columns
-    ranged = df.repartitionByRange(num_partitions, *group_cols, *order_cols)
-    local = ranged.select(
-        *keep,
-        F.spark_partition_id().alias("__cs_pid"),
-        F.sum(value_col)
-        .over(
-            Window.partitionBy(F.spark_partition_id(), *group_cols).orderBy(
-                *order_cols
-            )
-        )
-        .alias("__cs_local"),
-    )
-    # the offsets branch forks the DAG (see ntile_distributed)
-    local = _register_persist(local.persist())
-    totals = local.groupBy("__cs_pid", *group_cols).agg(
-        F.sum(value_col).alias("__cs_tot")
-    )
-    # __cs_off stays NULL when no prior partition of the group holds a
-    # non-null value — exactly when ANSI SUM would: a per-partition
-    # total is NULL iff all its values are, and the prefix sum of
-    # NULLs is NULL.  Coalescing here would turn the all-NULL-group
-    # answer from NULL into 0.
-    offsets = totals.select(
-        "__cs_pid",
-        *group_cols,
-        F.sum("__cs_tot")
-        .over(
-            Window.partitionBy(*group_cols)
-            .orderBy("__cs_pid")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        .alias("__cs_off"),
-    )
-    # Null-safe equi-join: NULL is a valid group key for the window
-    # twin (PARTITION BY groups NULLs together), so a plain equi-join
-    # would silently drop every NULL-group row.
-    cond = F.col("l.__cs_pid") == F.col("r.__cs_pid")
-    for g in group_cols:
-        cond = cond & F.col(f"l.{g}").eqNullSafe(F.col(f"r.{g}"))
-    run = F.when(
-        F.col("l.__cs_local").isNull() & F.col("r.__cs_off").isNull(),
-        F.lit(None),
-    ).otherwise(
-        F.coalesce(F.col("r.__cs_off"), F.lit(0))
-        + F.coalesce(F.col("l.__cs_local"), F.lit(0))
-    )
-    return (
-        local.alias("l")
-        .join(F.broadcast(offsets).alias("r"), cond)
-        .select(*[F.col(f"l.{c}") for c in keep], run.alias(alias))
-    )
-
-
 @query(
     "win_ntile_distributed",
     oracle="""
@@ -1123,20 +945,8 @@ FROM orders
 def win_ntile_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The AT-SCALE twin of win_ntile: bit-identical ntile(4) output
     WITHOUT a single-partition global sort (the documented SCALE.md
-    caveat of the demo version, now a runnable counterpart).
-
-    Shape: range-repartition on the total order (RangePartitioner —
-    partition p holds a contiguous key range, ranges ascending in p),
-    per-PARTITION row_number (parallel windows, no global one), a
-    32-row per-partition count rollup whose cumulative offsets turn
-    local row numbers into exact global ranks via broadcast join,
-    then ANSI ntile's closed form from (rank, n): the first n%k
-    buckets take ceil(n/k) rows.  Every shuffle is either
-    range-balanced over the data or over <=32 rows; at 100 TB the
-    same plan holds with more range partitions — nothing global ever
-    sorts on one executor.  Body delegates to the shared
-    ``ntile_distributed`` kernel (also used by
-    pipeline_rfm_segments' three RFM scores)."""
+    caveat of the demo version, now a runnable counterpart), through
+    the distributed-prefix kernel ``api_rank.ntile_distributed``."""
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     return ntile_distributed(
         o, 4, ["o_totalprice", "o_orderkey"], "price_quartile"

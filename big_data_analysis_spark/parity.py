@@ -124,8 +124,36 @@ class Report:
     mismatches: list = field(default_factory=list)
 
 
+def graded_type_offenders(schema, con, oracle: str) -> list[str]:
+    """Final columns the driver comparator cannot grade, on either
+    engine: array/map/struct (unhashable) and DECIMAL (Spark's
+    decimal.Decimal cells hash unequal to DuckDB's float64 rendering
+    even for equal values — sank agg_time_weighted_avg's r7 grade),
+    plus HUGEINT on the oracle side.  DECIMAL/HUGEINT belong in
+    internal sums only; cast the final select to DOUBLE/BIGINT on both
+    twins."""
+    from pyspark.sql.types import ArrayType, DecimalType, MapType, StructType
+
+    bad = [
+        f"spark.{f.name}"
+        for f in schema.fields
+        if isinstance(f.dataType, (ArrayType, MapType, StructType, DecimalType))
+    ]
+    bad += [
+        f"oracle.{name}"
+        for name, typ, *_ in con.execute("DESCRIBE " + oracle).fetchall()
+        if any(t in typ for t in ("[]", "MAP", "STRUCT", "DECIMAL", "HUGEINT"))
+    ]
+    return bad
+
+
 def compare_query(spark, con, spec, sf_dir: str) -> Report:
-    sdf = spec.fn(spark, sf_dir).toPandas()
+    df = spec.fn(spark, sf_dir)
+    if spec.oracle is not None:
+        bad = graded_type_offenders(df.schema, con, spec.oracle)
+        if bad:
+            return Report(spec.name, False, f"ungradable final column types: {bad}")
+    sdf = df.toPandas()
     if spec.oracle is None:
         # driver's rows-only path never canonicalizes — array outputs
         # are allowed (and meaningful) for no-oracle queries

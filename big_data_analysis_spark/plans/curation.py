@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import spread_table, table
-from ..operators.windows import ntile_distributed
+from ..api_rank import ntile_distributed
 from ..registry import query
 from ..session import scratch_dir
 
@@ -179,12 +179,9 @@ def pipeline_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     difficulty proxy (token count, doc_id tie-break for a total
     order) and cut into 4 equal-population training phases —
     shortest docs first, the classic length curriculum. The phase
-    cut is an EXACT global ntile, computed by the certified
-    ``ntile_distributed`` kernel (range repartition + per-partition
-    ranks + broadcast offsets — no single-task global sort, the
-    exact trap the naive `ntile() OVER (ORDER BY ...)` falls into
-    at 100 TB). Output is the per-(phase, lang) manifest a training
-    scheduler consumes."""
+    cut is an EXACT global ntile from the distributed-prefix kernel
+    ``api_rank.ntile_distributed``. Output is the per-(phase, lang)
+    manifest a training scheduler consumes."""
     d = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     base = d.select("doc_id", "lang", F.size(toks).alias("n_tokens"))

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import table
-from ..operators.windows import global_rank_distributed
+from ..api_rank import global_rank_distributed
 from ..registry import query
 
 # ---------------------------------------------------------------- #
@@ -737,12 +737,10 @@ def pipeline_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     midrank of a tie group is MIN(rank)+MAX(rank) (integer — the
     agg_mann_whitney machinery), and the AUC numerator/denominator
     ship as exact BIGINTs next to the one double division. Scale
-    shape: the global ranking runs through the certified
-    global_rank_distributed kernel (range repartition + broadcast
-    offsets, no single-partition window); tie-group rollup and the
+    shape: the global ranking runs through the distributed-prefix
+    kernel ``api_rank.global_rank_distributed``; tie-group rollup and the
     positive-midrank sum are key-partitioned on score; totals are
     1-row broadcasts."""
-    from ..operators.windows import global_rank_distributed as _grd
 
     e = table(spark, sf_dir, "embeddings")
     score = None
@@ -754,7 +752,7 @@ def pipeline_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.select(
         "vec_id", (F.col("label") >= 5).alias("pos"), score.alias("score")
     )
-    r = _grd(q, ["score", "vec_id"], "rk")
+    r = global_rank_distributed(q, ["score", "vec_id"], "rk")
     g = r.groupBy("score").agg(
         (F.min("rk") + F.max("rk")).cast("long").alias("r2"),
         F.sum(F.when(F.col("pos"), 1).otherwise(0))
@@ -846,7 +844,7 @@ def pipeline_eval_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparing J — no float ever ranks thresholds; ties break to the
     smallest threshold). TPR/FPR/J doubles are display-only. Scale:
     score-domain-bounded rollup + cumulative sum; at data-proportional
-    score domains the cumsum runs through grouped_cumsum_distributed
+    score domains the cumsum runs through api_rank.grouped_cumsum_distributed
     (this demo's score domain is the bounded quantized-dot lattice)."""
     e = table(spark, sf_dir, "embeddings")
     score = None

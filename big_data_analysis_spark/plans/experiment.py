@@ -6,7 +6,7 @@ leakage certificate.
 
 Exactness: integer-lattice scores and cross-multiplied comparisons
 throughout (stats_ext lineage); data-proportional ranking goes
-through global_rank_distributed, never a single-partition window.
+through api_rank.global_rank_distributed, never a single-partition window.
 """
 
 from __future__ import annotations

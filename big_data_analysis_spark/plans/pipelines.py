@@ -481,7 +481,7 @@ def pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 # write path and read path must hash identically.
 from ..operators.similarity import _SQL_BUCKET as _SEM_BUCKET_SQL
 from ..operators.similarity import sem_bucket
-from ..operators.windows import ntile_distributed
+from ..api_rank import ntile_distributed
 
 
 @query(
@@ -1287,14 +1287,8 @@ def pipeline_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     monetary (exact-decimal spend), each quartiled with ntile over a
     total order (custkey tie-break makes the quartile assignment
     deterministic), then the 4x4x4 segment rollup with exact segment
-    value. The three quartile scores run through the shared
-    ``ntile_distributed`` kernel (operators/windows.py — range
-    repartition + per-partition row_number + broadcast offsets,
-    driver-certified bit-equal to ntile): the per-customer rollup
-    grows with the customer base, so a global-ORDER ntile window
-    would funnel it through ONE task at 100 TB; here each score is a
-    range-balanced shuffle and nothing global ever sorts on one
-    executor."""
+    value. The three quartile scores run through the distributed-prefix
+    kernel ``api_rank.ntile_distributed``."""
     o = table(spark, sf_dir, "orders")
     rfm = o.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_order"),

@@ -24,10 +24,7 @@ from pyspark.sql.window import Window
 from .. import api
 from ..io import spread_table, table
 from ..registry import query
-from ..operators.windows import (
-    global_rank_distributed,
-    grouped_cumsum_distributed,
-)
+from ..api_rank import global_rank_distributed, grouped_cumsum_distributed
 from .pipelines import (
     _BPE_RULES,
     _PACK_BUDGET,
@@ -658,14 +655,8 @@ def pipeline_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id tie-break), so each shard lands within one max-doc of the
     ideal token share (the classic LPT/round-robin bound), and emit
     the shard manifest (doc count, token sum, largest doc) a
-    downstream writer partitions by.
-
-    The exact global rank comes from the ``global_rank_distributed``
-    kernel (operators/windows.py) — range repartition +
-    per-partition row_number + broadcast cumulative offsets — so
-    NOTHING sorts on one task; at 100 TB the same plan holds with
-    more range partitions, unlike the textbook row_number() OVER
-    (ORDER BY ...) which funnels the corpus through one executor."""
+    downstream writer partitions by.  The exact global rank comes from
+    the distributed-prefix kernel ``api_rank.global_rank_distributed``."""
     d = table(spark, sf_dir, "documents")
     t = d.select(
         "doc_id",
@@ -1283,15 +1274,9 @@ def pipeline_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the plan manifest (doc count, byte mass, id range per planned
     file) is what the rewrite job partitions by.
 
-    The per-source running byte total comes from the
-    ``grouped_cumsum_distributed`` kernel (operators/windows.py):
-    range-repartition on (source, doc_id) so one dominant source
-    SPANS partitions instead of hash-landing on one task, local
-    prefix sums, and a bounded (partitions x sources) offsets rollup
-    broadcast back — the plain PARTITION BY source window would
-    serialize the largest source through one executor at 100 TB.
-    Output is one row per planned file — smaller than the input by
-    the compaction ratio."""
+    The per-source running byte total comes from the distributed-prefix
+    kernel ``api_rank.grouped_cumsum_distributed``.  Output is one row
+    per planned file — smaller than the input by the compaction ratio."""
     d = table(spark, sf_dir, "documents").select("source", "doc_id", "n_chars")
     c = grouped_cumsum_distributed(d, ["source"], ["doc_id"], "n_chars", "run")
     return (

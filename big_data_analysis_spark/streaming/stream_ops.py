@@ -557,14 +557,18 @@ def stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     monotonically increasing value + event-time timestamp, generated
     executor-side with no input files) -> windowed count. Proves the
     second streaming source family offline; a Kafka source swaps in
-    with only the format/options changing. Emitted row count depends
-    on drain timing -> rows-only; the unit test asserts values are
-    dense and unique."""
+    with only the format/options changing. The per-micro-batch rate
+    source under an availableNow trigger runs exactly one 500-row
+    batch, so the run is bounded whatever the host load (the
+    wall-clock `rate` source under processAllAvailable never drains
+    once a batch takes longer than its one-second offset step).
+    Rows-only; the unit test asserts values are dense and unique."""
     harden_session(spark)
     raw = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", 500)
+        spark.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", 500)
         .option("numPartitions", 2)
+        .option("startTimestamp", 0)
         .load()
     )
     agg = raw.groupBy(F.window("timestamp", "1 second")).agg(
@@ -577,14 +581,11 @@ def stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .trigger(processingTime="250 milliseconds")
+        .trigger(availableNow=True)
         .start()
     )
     try:
-        import time
-
-        time.sleep(2.5)  # let a few micro-batches fire
-        q.processAllAvailable()
+        q.awaitTermination()
     finally:
         q.stop()
     return spark.table(name).select(

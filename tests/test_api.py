@@ -695,29 +695,6 @@ def test_api_asof_join_tolerance_matches_pandas(spark):
     assert got == want
 
 
-def test_api_kernels_on_synthetic_table(spark):
-    """The re-exported distributed kernels work on arbitrary caller
-    tables through the api namespace (lazy import — both
-    windows-first and api-first import orders are covered by the
-    module-level smoke below)."""
-    from big_data_analysis_spark import api
-
-    df = spark.createDataFrame(
-        [(v, i) for i, v in enumerate([5, 1, 9, 1, 7, 3])], "v int, rid int"
-    )
-    q = {
-        r.rid: r.b
-        for r in api.ntile_distributed(df, 3, ["v", "rid"], "b").collect()
-    }
-    assert sorted(q.values()) == [1, 1, 2, 2, 3, 3]
-    rk = {
-        r.rid: r.rk
-        for r in api.global_rank_distributed(df, ["v", "rid"], "rk").collect()
-    }
-    assert sorted(rk.values()) == [1, 2, 3, 4, 5, 6]
-    assert rk[1] == 1 and rk[3] == 2  # the two v=1 rows rank first by rid
-
-
 def test_api_dedup_paragraphs(spark):
     df = spark.createDataFrame(
         [
@@ -982,35 +959,6 @@ def test_api_bmp_stats_parses_a_real_bmp(spark):
     assert abs(r.mean_r - r.sum_r / 8) < 1e-12
 
 
-def test_api_grouped_cumsum_distributed(spark):
-    """The grouped prefix-sum kernel on a hand-checked table: per
-    group, running totals in order; groups independent; negatives
-    fine."""
-    df = spark.createDataFrame(
-        [
-            ("g1", 1, 10),
-            ("g1", 2, -3),
-            ("g1", 3, 5),
-            ("g2", 1, 7),
-            ("g2", 2, 0),
-        ],
-        "g string, o int, v int",
-    )
-    out = {
-        (r.g, r.o): r.run
-        for r in api.grouped_cumsum_distributed(
-            df, ["g"], ["o"], "v", "run"
-        ).collect()
-    }
-    assert out == {
-        ("g1", 1): 10,
-        ("g1", 2): 7,
-        ("g1", 3): 12,
-        ("g2", 1): 7,
-        ("g2", 2): 7,
-    }
-
-
 def test_api_label_propagation_two_components(spark):
     """LPA on two disjoint bipartite stars must give each component
     one community labelled by its minimum node id: star 1 = a-nodes
@@ -1031,37 +979,6 @@ def test_api_label_propagation_two_components(spark):
         for r in api.label_propagation(edges, "a", "b", iters=10).collect()
     }
     assert again == got
-
-
-def test_api_grouped_cumsum_null_group_and_null_values(spark):
-    """The two NULL edges the window twin defines: (1) a NULL group
-    key is a real partition (rows must not drop through the
-    offsets equi-join); (2) SUM is NULL iff every value in the frame
-    is NULL — a later range partition whose local prefix is all-NULL
-    must still carry the earlier partition's total forward, and an
-    all-NULL group must stay NULL, not 0."""
-    df = spark.createDataFrame(
-        [(None, 1, 5), ("g", 2, 3)], "g string, o int, v int"
-    )
-    out = {
-        (r.g, r.o): r.run
-        for r in api.grouped_cumsum_distributed(
-            df, ["g"], ["o"], "v", "run"
-        ).collect()
-    }
-    assert out == {(None, 1): 5, ("g", 2): 3}
-
-    rows = [("g", 0, 10)] + [("g", i, None) for i in range(1, 8)]
-    rows += [("h", i, None) for i in range(4)]
-    df2 = spark.createDataFrame(rows, "g string, o int, v int")
-    out2 = {
-        (r.g, r.o): r.run
-        for r in api.grouped_cumsum_distributed(
-            df2, ["g"], ["o"], "v", "run", num_partitions=4
-        ).collect()
-    }
-    assert all(out2[("g", i)] == 10 for i in range(8))  # carry survives
-    assert all(out2[("h", i)] is None for i in range(4))  # all-NULL stays NULL
 
 
 def test_api_pq_encode_hand_checked(spark):

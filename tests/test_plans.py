@@ -262,39 +262,6 @@ def test_wav_parse_pure_map_no_python(spark, sf_dir):
         assert "Python" not in tree, name
 
 
-def test_ntile_distributed_avoids_global_sort(spark, sf_dir):
-    """The at-scale ntile twin must range-partition the total order
-    and run only pid-partitioned windows — a window with an empty
-    partition spec over the orders table (the demo win_ntile shape)
-    would funnel everything through one task."""
-    plan = plan_of("win_ntile_distributed", spark, sf_dir)
-    assert "rangepartitioning" in plan.lower()
-    # the data-proportional window (row_number) must carry a NON-empty
-    # partition spec (the materialized spark_partition_id column);
-    # an empty spec ("], [], [") is the demo win_ntile single-task
-    # shape. The 32-row offsets windows are exempt — they read from
-    # the count rollup, never from the orders scan.
-    rn_lines = [
-        l for l in plan.splitlines() if "row_number() windowspecdefinition" in l
-    ]
-    assert rn_lines, plan
-    assert all("], [], [" not in l for l in rn_lines), rn_lines
-
-
-def test_shard_manifest_rank_is_distributed(spark, sf_dir):
-    """pipeline_shard_manifest's global token rank must come from the
-    range-partitioned kernel: RangePartitioning present and every
-    data-proportional row_number window carries a non-empty partition
-    spec (the single-task global row_number shape is exactly what the
-    kernel exists to avoid)."""
-    plan = plan_of("pipeline_shard_manifest", spark, sf_dir)
-    assert "rangepartitioning" in plan.lower()
-    rn = [
-        l for l in plan.splitlines() if "row_number() windowspecdefinition" in l
-    ]
-    assert rn and all("], [], [" not in l for l in rn), rn
-
-
 def test_mixture_epochs_is_map_side(spark, sf_dir):
     """pipeline_mixture_epochs must be broadcast-join + explode only:
     no sort-merge join against the bounded epoch table, no window,
@@ -359,24 +326,6 @@ def test_q15_global_max_is_agg_broadcast(spark, sf_dir):
     assert "windowspecdefinition" not in plan, plan
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "HashAggregate" in plan  # partial+final max, map-side combine
-
-
-def test_rfm_segments_ntiles_are_distributed(spark, sf_dir):
-    """pipeline_rfm_segments' three RFM quartile scores must run
-    through the ntile_distributed kernel: RangePartitioning present
-    (three range-balanced shuffles over the customer rollup), and
-    every data-proportional row_number window carries a NON-empty
-    partition spec — a global ntile(4) window over the per-customer
-    rollup (the pre-r6 shape) funnels a customer-base-proportional
-    table through one task at 100 TB."""
-    plan = plan_of("pipeline_rfm_segments", spark, sf_dir)
-    assert "rangepartitioning" in plan.lower()
-    assert "ntile(4)" not in plan  # no demo-shape global ntile survives
-    rn_lines = [
-        l for l in plan.splitlines() if "row_number() windowspecdefinition" in l
-    ]
-    assert len(rn_lines) >= 3, plan  # one per RFM score
-    assert all("], [], [" not in l for l in rn_lines), rn_lines
 
 
 def test_partitioned_scan_prunes_partitions(spark, sf_dir):
@@ -586,27 +535,6 @@ def test_dedup_url_map_plus_distinct_expansion(spark, sf_dir):
     assert tree.count("- Exchange") == 2
     assert "Join" not in tree
     assert "Python" not in tree
-
-
-def test_compaction_plan_avoids_per_group_global_sort(spark, sf_dir):
-    """pipeline_compaction_plan's running byte total must come from
-    the grouped_cumsum_distributed kernel: RangePartitioning on
-    (source, doc_id) present, and every data-proportional running
-    SUM window keyed on the materialized partition id (a window
-    partitioned on source ALONE would serialize the dominant source
-    through one task; the bounded partitions x sources offsets
-    rollup is exempt)."""
-    plan = plan_of("pipeline_compaction_plan", spark, sf_dir)
-    assert "rangepartitioning" in plan.lower()
-    sum_lines = [
-        l
-        for l in plan.splitlines()
-        if "windowspecdefinition" in l and "__cs_local" in l
-    ]
-    assert sum_lines, plan
-    # Catalyst materializes spark_partition_id() as _w0; the running
-    # sum's partition spec must carry it alongside the group key
-    assert all("_w0" in l or "__cs_pid" in l for l in sum_lines), sum_lines
 
 
 def test_tombstone_delete_broadcasts_tombstones_and_scans_lineitem_once(

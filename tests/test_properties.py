@@ -473,54 +473,6 @@ def test_bootstrap_draw_counts_multinomial():
     assert len(np.unique(j0)) < n * 0.75
 
 
-@given(rows=st.lists(st.integers(min_value=-10000, max_value=10000),
-                     min_size=1, max_size=60),
-       k=st.integers(min_value=1, max_value=6))
-@settings(**_SETTINGS)
-def test_distributed_ntile_matches_window_ntile(spark, rows, k):
-    """The offsets-based distributed ntile formula must equal Spark's
-    own ntile(k) single-partition window on ARBITRARY value lists
-    (ties, negatives, n<k, n%k!=0) — same closed form the registered
-    win_ntile_distributed uses."""
-    df = spark.createDataFrame(
-        [(v, i) for i, v in enumerate(rows)], "v int, rid int"
-    )
-    w = Window.orderBy("v", "rid")
-    expected = df.select("rid", F.ntile(k).over(w).alias("b"))
-    ranked = df.repartitionByRange(4, "v", "rid").select(
-        "rid", "v",
-        F.spark_partition_id().alias("pid"),
-        F.row_number().over(
-            Window.partitionBy(F.spark_partition_id()).orderBy("v", "rid")
-        ).alias("lrn"),
-    )
-    counts = ranked.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt"))
-    offs = counts.select(
-        "pid",
-        F.coalesce(
-            F.sum("cnt").over(
-                Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ).alias("off"),
-        F.sum("cnt").over(
-            Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        ).alias("n"),
-    )
-    r = F.col("off") + F.col("lrn")
-    q, rem = (F.col("n") / k).cast("long"), F.col("n") % k
-    big = rem * (q + 1)
-    bucket = F.when(r <= big, F.ceil(r / (q + 1))).otherwise(
-        rem + F.ceil((r - big) / q)
-    )
-    got = ranked.join(F.broadcast(offs), "pid").select(
-        "rid", bucket.cast("int").alias("b")
-    )
-    exp = {x.rid: x.b for x in expected.collect()}
-    act = {x.rid: x.b for x in got.collect()}
-    assert exp == act
-
-
 @given(changes=st.lists(
     st.tuples(st.integers(min_value=0, max_value=3),      # key
               st.integers(min_value=0, max_value=86400)), # ts offset s
@@ -706,34 +658,6 @@ def test_kanonymity_monotone_in_k(spark, rows, k1):
 
     sizes = Counter(rows)
     assert r1.min_class_size == min(sizes.values())
-
-
-@given(rows=st.lists(st.integers(min_value=-10000, max_value=10000),
-                     min_size=1, max_size=60))
-@settings(**_SETTINGS)
-def test_global_rank_distributed_matches_window(spark, rows):
-    """global_rank_distributed must equal row_number() over the
-    single-partition global window on arbitrary lists (ties,
-    negatives) — the offsets machinery generalized from the certified
-    ntile kernel."""
-    from big_data_analysis_spark.operators.windows import (
-        global_rank_distributed,
-    )
-
-    df = spark.createDataFrame(
-        [(v, i) for i, v in enumerate(rows)], "v int, rid int"
-    )
-    got = {
-        r.rid: r.rk
-        for r in global_rank_distributed(df, ["v", "rid"], "rk").collect()
-    }
-    want = {
-        r.rid: r.rk
-        for r in df.select(
-            "rid", F.row_number().over(Window.orderBy("v", "rid")).alias("rk")
-        ).collect()
-    }
-    assert got == want
 
 
 def test_epoch_upsample_copy_counts(spark):
@@ -1085,52 +1009,6 @@ def test_dedup_cascade_composes_the_public_kernels(spark, sf_dir):
     )
     # the ladder is monotone: output mass never exceeds input mass
     assert r.chars_out <= r.chars_in
-
-
-@given(rows=st.lists(
-    st.tuples(
-        st.one_of(st.none(), st.integers(min_value=0, max_value=3)),  # group
-        st.one_of(
-            st.none(), st.integers(min_value=-1000, max_value=1000)
-        ),  # value
-    ),
-    min_size=1,
-    max_size=40,
-))
-@settings(**_SETTINGS)
-def test_grouped_cumsum_distributed_matches_window(spark, rows):
-    """grouped_cumsum_distributed must equal SUM OVER (PARTITION BY
-    group ORDER BY rid) on arbitrary (group, value) lists INCLUDING
-    NULL group keys (PARTITION BY groups them together — a plain
-    equi-join back would drop them) and NULL values (ANSI SUM is
-    NULL iff every value in the frame is; the carried offset must
-    not turn that into 0, nor may an all-NULL local prefix erase a
-    prior partition's carry) — the range-partition +
-    broadcast-offsets machinery generalized from the certified rank
-    kernels, now with a per-group offset table."""
-    from big_data_analysis_spark.operators.windows import (
-        grouped_cumsum_distributed,
-    )
-
-    df = spark.createDataFrame(
-        [(g, v, i) for i, (g, v) in enumerate(rows)], "g int, v int, rid int"
-    )
-    got = {
-        r.rid: r.run
-        for r in grouped_cumsum_distributed(
-            df, ["g"], ["rid"], "v", "run"
-        ).collect()
-    }
-    want = {
-        r.rid: r.run
-        for r in df.select(
-            "rid",
-            F.sum("v")
-            .over(Window.partitionBy("g").orderBy("rid"))
-            .alias("run"),
-        ).collect()
-    }
-    assert got == want
 
 
 @given(

@@ -648,39 +648,6 @@ def test_driver_canonicalizable_rejects_decimal_cells():
     assert _canon_cell(decimal.Decimal("7")) != _canon_cell(7)
 
 
-def test_no_array_outputs_on_any_oracle_query(spark, duck, sf_dir):
-    """Schema-level guard for the whole graded surface: no
-    oracle-bearing query may expose an array/map/struct FINAL column
-    (the driver comparator cannot hash them) NOR a DecimalType FINAL
-    column (the comparator hashes Spark decimal.Decimal objects
-    unequal to DuckDB's float64 rendering of DECIMAL even for equal
-    values — sank agg_time_weighted_avg's r7 grade) on either engine.
-    DECIMAL/HUGEINT belong in internal sums only; cast the final
-    select to DOUBLE/BIGINT on both twins."""
-    from pyspark.sql.types import ArrayType, DecimalType, MapType, StructType
-
-    offenders = []
-    for name, spec in REG.items():
-        if spec.oracle is None:
-            continue
-        schema = spec.fn(spark, sf_dir).schema
-        offenders += [
-            f"{name}.spark.{f.name}"
-            for f in schema.fields
-            if isinstance(f.dataType, (ArrayType, MapType, StructType, DecimalType))
-        ]
-        desc = duck.execute("DESCRIBE " + spec.oracle).df()
-        offenders += [
-            f"{name}.oracle.{r['column_name']}"
-            for _, r in desc.iterrows()
-            if any(
-                tok in r["column_type"]
-                for tok in ("[]", "MAP", "STRUCT", "DECIMAL", "HUGEINT")
-            )
-        ]
-    assert not offenders, offenders
-
-
 def test_bpe_apply_roundtrip_with_trained_rules(spark, sf_dir):
     """Train->apply loop closed: api.bpe_apply with the rules
     pipeline_bpe_train learns LIVE must reproduce a pure-Python
@@ -1637,7 +1604,7 @@ def test_value_grid_windows_stay_domain_bounded():
     high-cardinality measure) ever makes the grid scale with row
     count, the saturation assertion below fails and the query must be
     routed through the distributed rank kernels
-    (operators/windows.py global_rank_distributed) instead.
+    (api_rank.global_rank_distributed) instead.
 
     Checked directly in DuckDB (no Spark needed). Two guard shapes:
 
