@@ -2,13 +2,13 @@
 api.py at the module-size cap — the facade re-imports these by name,
 so `api.pagerank` etc. are unchanged): connected components, PageRank,
 k-core and label propagation, every round loop run through
-``fixpoint``, plus the round steps and change counts the registered
-graph queries share with them.
+``fixpoint``, plus the round steps, change counts and certificates
+the registered graph queries share with them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .fixpoint import fixpoint
@@ -19,43 +19,38 @@ def _nodes(e: DataFrame) -> DataFrame:
     return e.select(F.col("src").alias("node")).union(e.select("dst")).distinct()
 
 
-def _n_moved(prev: DataFrame, nxt: DataFrame, key: str, col: str) -> DataFrame:
-    """``fixpoint`` change count for keyed state: rows of ``nxt`` that
-    are new or whose ``col`` differs from ``prev``."""
-    old = prev.select(key, F.col(col).alias("__old"))
-    return nxt.join(old, key, "left").agg(
-        F.count(F.when(~F.col(col).eqNullSafe(F.col("__old")), 1)).alias("n_moved")
-    )
+def _n_flagged(flag: Column) -> Column:
+    """``fixpoint`` change count: the rows of the next state that
+    ``flag`` marks as moved in this round."""
+    return F.count(F.when(flag, 1))
 
 
-def _monotone_delta(prev: DataFrame, nxt: DataFrame, *cols: str) -> DataFrame:
-    """``fixpoint`` change count for monotone state, where each round
-    only adds rows, only removes rows, or moves every ``col`` in one
-    direction: |Δ row count| + Σ |Δ sum(col)|, zero iff nothing
-    changed.  One aggregate over the union of both tables, no join;
-    the sums are DECIMAL(38,0), so large ids cannot overflow them."""
-
-    def signed(df: DataFrame, sign: int) -> DataFrame:
-        return df.select(
-            F.lit(sign).alias("__n"),
-            *[(F.col(c).cast("decimal(38,0)") * sign).alias(c) for c in cols],
-        )
-
-    sums = [F.abs(F.coalesce(F.sum(c), F.lit(0))) for c in ("__n", *cols)]
-    return signed(prev, -1).unionAll(signed(nxt, 1)).agg(
-        sum(sums[1:], sums[0]).alias("n_moved")
-    )
+def _with_certificate(
+    df: DataFrame, state: DataFrame, n_changed: int | None, flag: Column, name: str
+) -> DataFrame:
+    """``df`` plus the convergence certificate ``name``: the rows of
+    ``state`` that ``flag`` marks as moved in the final round.  An
+    observed count of 0 is exact and becomes a literal; otherwise (the
+    round budget ran out) the count is taken in the plan, because an
+    observed nonzero count may include retried tasks."""
+    if n_changed == 0:
+        return df.withColumn(name, F.lit(0).cast("long"))
+    return df.crossJoin(F.broadcast(state.agg(_n_flagged(flag).alias(name))))
 
 
 def _min_label_step(edges: DataFrame, id_name: str):
-    """One min-label round over symmetric (src, dst) ``edges``: every
-    node of the (id_name, label) state takes the minimum of its own
-    and its neighbours' labels."""
+    """One semi-naive min-label round over symmetric (src, dst)
+    ``edges``: every node of the (id_name, label, __delta) state takes
+    the minimum of its own label and the labels of the neighbours
+    flagged ``__delta`` in the round before, and ``__delta`` flags the
+    labels that dropped.  An unflagged neighbour sent its label the
+    round it was set, so with every row flagged at the start the table
+    equals full min-label propagation's after every round."""
 
     def step(labels: DataFrame) -> DataFrame:
         nmin = (
             edges.join(
-                labels.select(
+                labels.where("__delta").select(
                     F.col(id_name).alias("src"), F.col("label").alias("nlabel")
                 ),
                 "src",
@@ -68,6 +63,7 @@ def _min_label_step(edges: DataFrame, id_name: str):
             F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias(
                 "label"
             ),
+            F.coalesce(F.col("nmin") < F.col("label"), F.lit(False)).alias("__delta"),
         )
 
     return step
@@ -84,15 +80,27 @@ def _degrees(e: DataFrame, name: str) -> DataFrame:
 
 
 def _peel_step(k: int):
-    """One synchronous k-core peel of (a, b) edges: keep the edges
-    whose endpoints both have degree >= k."""
+    """One synchronous k-core peel of (a, b, alive) edges: the edges
+    alive before the round stay, and ``alive`` stays set on those whose
+    endpoints both still have degree >= k.  Edges peeled in an earlier
+    round are dropped, so ``~alive`` flags exactly the edges this
+    round peeled."""
 
     def step(e: DataFrame) -> DataFrame:
-        s = _degrees(e, "deg").where(F.col("deg") >= k).select("node")
+        live = e.where("alive")
+        low = (
+            _degrees(live, "deg")
+            .where(F.col("deg") < k)
+            .select("node", F.lit(1).alias("low"))
+        )
         return (
-            e.join(s.withColumnRenamed("node", "a"), "a", "left_semi")
-            .join(s.withColumnRenamed("node", "b"), "b", "left_semi")
-            .select("a", "b")
+            live.join(low.toDF("a", "low_a"), "a", "left")
+            .join(low.toDF("b", "low_b"), "b", "left")
+            .select(
+                "a",
+                "b",
+                (F.col("low_a").isNull() & F.col("low_b").isNull()).alias("alive"),
+            )
         )
 
     return step
@@ -111,18 +119,18 @@ def connected_components(pairs: DataFrame, id_name: str) -> DataFrame:
     labels = (
         edges.select(F.col("src").alias(id_name))
         .distinct()
-        .withColumn("label", F.col(id_name))
+        .select(id_name, F.col(id_name).alias("label"), F.lit(True).alias("__delta"))
         .localCheckpoint()
     )
-    labels, _, _ = fixpoint(
+    labels, _, _, _ = fixpoint(
         "connected_components",
         labels,
         _min_label_step(edges, id_name),
         max_rounds=labels.count(),
-        changed=lambda prev, nxt: _monotone_delta(prev, nxt, "label"),
+        changed=_n_flagged(F.col("__delta")),
     )
     edges.unpersist()
-    return labels
+    return labels.select(id_name, "label")
 
 
 def pagerank(
@@ -135,9 +143,12 @@ def pagerank(
 ) -> DataFrame:
     """Distributed PageRank over an (src, dst) edge DataFrame with
     uniform dangling-mass redistribution; at most ``iters`` rounds,
-    stopping once every rank moved by less than ``tol``.  Rounds run
-    through ``fixpoint``; the dangling mass is a 1-row aggregate
-    folded in as a broadcast crossJoin, never a driver collect."""
+    stopping once every rank moved by less than ``tol``.  Returns
+    (node, rank, converged): ``converged`` is true iff the last round
+    moved no rank by ``tol`` or more, false when ``iters`` ran out
+    first.  Rounds run through ``fixpoint``; the dangling mass is a
+    1-row aggregate folded in as a broadcast crossJoin, never a driver
+    collect."""
     e = edges.toDF("src", "dst").persist()
     nodes = _nodes(e).persist()
     n = nodes.count()
@@ -171,19 +182,17 @@ def pagerank(
             )
         )
 
-    ranks, _, _ = fixpoint(
+    ranks, _, _, n_moved = fixpoint(
         "pagerank",
         ranks,
         step,
         max_rounds=iters,
-        changed=lambda _, nxt: nxt.agg(
-            F.count(F.when(F.abs(F.col("rank") - F.col("prev")) >= tol, 1))
-        ),
+        changed=_n_flagged(F.abs(F.col("rank") - F.col("prev")) >= tol),
     )
     e.unpersist()
     nodes.unpersist()
     dang.unpersist()
-    return ranks.select("node", "rank")
+    return ranks.select("node", "rank", F.lit(n_moved == 0).alias("converged"))
 
 
 def k_core(edges: DataFrame, a_col: str, b_col: str, *, k: int = 3) -> DataFrame:
@@ -192,17 +201,24 @@ def k_core(edges: DataFrame, a_col: str, b_col: str, *, k: int = 3) -> DataFrame
     (a, b)): repeatedly drop nodes whose current degree is below k
     until fixpoint.  Returns the surviving (node, core_degree) set.
     Per round: one degree aggregation + two left-semi joins, run
-    through ``fixpoint``; every round but the last drops an edge, so
+    through ``fixpoint``; every round but the last peels an edge, so
     the edge count + 1 bounds the rounds and the fixpoint is always
     reached.  Order-independent, hence deterministic under any
     partitioning."""
-    u = edges.select(
-        F.col(a_col).alias("a"), F.col(b_col).alias("b")
-    ).distinct().localCheckpoint()
-    core, _, _ = fixpoint(
-        "k_core", u, _peel_step(k), max_rounds=u.count() + 1, changed=_monotone_delta
+    u = (
+        edges.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
+        .distinct()
+        .withColumn("alive", F.lit(True))
+        .localCheckpoint()
     )
-    return _degrees(core, "core_degree")
+    core, _, _, _ = fixpoint(
+        "k_core",
+        u,
+        _peel_step(k),
+        max_rounds=u.count() + 1,
+        changed=_n_flagged(~F.col("alive")),
+    )
+    return _degrees(core.where("alive"), "core_degree")
 
 
 def label_propagation(
@@ -218,7 +234,9 @@ def label_propagation(
     MINIMUM label, so the result is a pure function of the edge set
     (no RNG, no visit-order dependence).  Initial label = own id.
     Stops at fixpoint (zero labels changed) or after ``iters``
-    rounds.  Returns (node, label).
+    rounds.  Returns (node, label, converged): ``converged`` is true
+    iff the last round changed no label, false when ``iters`` ran out
+    first.
 
     Shape per half-round: one shuffle joining the label table to the
     adjacency on the neighbor key + one (node, label) count-argmax
@@ -255,11 +273,16 @@ def label_propagation(
         other = labels_df.join(side, "node", "left_anti")
         return other.unionAll(picked)
 
-    labels, _, _ = fixpoint(
+    def step(lbl: DataFrame) -> DataFrame:
+        cur = lbl.select("node", "label")
+        nxt = _half(_half(cur, adj_b, b_nodes), adj_a, a_nodes)
+        return nxt.join(cur.withColumnRenamed("label", "prev"), "node")
+
+    labels, _, _, n_moved = fixpoint(
         "label_propagation",
         labels,
-        lambda lbl: _half(_half(lbl, adj_b, b_nodes), adj_a, a_nodes),
+        step,
         max_rounds=iters,
-        changed=lambda prev, nxt: _n_moved(prev, nxt, "node", "label"),
+        changed=_n_flagged(~F.col("label").eqNullSafe(F.col("prev"))),
     )
-    return labels
+    return labels.select("node", "label", F.lit(n_moved == 0).alias("converged"))

@@ -2,8 +2,8 @@
 "iterative algorithms", the non-SQL-expressible tier): PageRank,
 HITS, k-core, connected components, shortest paths and BFS
 centralities.  Every round loop runs through fixpoint.fixpoint
-(join + groupBy per round, lazy localCheckpoint to truncate
-lineage, one change-count scalar per round on the driver).
+(join + groupBy per round, one eager localCheckpoint per round whose
+jobs also report the round's change count).
 
 At 100 TB the per-iteration cost is one shuffle of the rank table on
 dst — the edge table is re-used co-partitioned every round (persist +
@@ -21,10 +21,10 @@ from .. import api
 from ..api_graph import (
     _degrees,
     _min_label_step,
-    _monotone_delta,
-    _n_moved,
+    _n_flagged,
     _nodes,
     _peel_step,
+    _with_certificate,
 )
 from ..fixpoint import fixpoint
 from ..io import table
@@ -72,7 +72,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     crossJoin."""
     return api.pagerank(
         spark, _edges(spark, sf_dir), iters=_ITERS, damping=_DAMPING, tol=_TOL
-    )
+    ).select("node", "rank")
 
 
 _PR_SCALE = 10**12  # fixed-point rank scale (1.0 == 1e12)
@@ -151,7 +151,8 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast degree join, one equi-join on src, one groupBy dst
     shuffle; n and the dangling mass are 1-row broadcast
     crossJoins.  The 15 rounds are a fixpoint budget (early exit once
-    no rank moves)."""
+    no rank moves; each round carries the previous rank to flag the
+    rows that moved)."""
     S = _PR_SCALE
     e = _edges(spark, sf_dir).localCheckpoint(eager=True)
     deg = e.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("d"))
@@ -178,7 +179,8 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.sum("pr"), F.lit(0)).cast("long").alias("dm")
         )
         return (
-            nodes.join(contrib, "node", "left")
+            r.select("node", F.col("pr").alias("prev"))
+            .join(contrib, "node", "left")
             .crossJoin(F.broadcast(meta))
             .crossJoin(F.broadcast(dm))
             .select(
@@ -190,15 +192,16 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .cast("long")
                 .alias("pr"),
+                "prev",
             )
         )
 
-    r, _, _ = fixpoint(
+    r, _, _, _ = fixpoint(
         "graph_pagerank_exact",
         r,
         step,
         max_rounds=_PR_EXACT_ITERS,
-        changed=lambda prev, nxt: _n_moved(prev, nxt, "node", "pr"),
+        changed=_n_flagged(F.col("pr") != F.col("prev")),
     )
     return r.select("node", F.col("pr").alias("rank_scaled"))
 
@@ -344,12 +347,12 @@ def _bfs(name: str, e: DataFrame, roots: DataFrame, max_hops: int) -> DataFrame:
         F.lit(0).alias("dist"),
         F.lit(True).alias("frontier"),
     ).localCheckpoint(eager=True)
-    visited, _, _ = fixpoint(
+    visited, _, _, _ = fixpoint(
         name,
         visited,
         step,
         max_rounds=max_hops,
-        changed=lambda _, nxt: nxt.agg(F.count(F.when(F.col("frontier"), 1))),
+        changed=_n_flagged(F.col("frontier")),
     )
     return visited
 
@@ -385,7 +388,7 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds.  At 100 TB this is Pregel's BFS on the DataFrame
     runtime: edges stay co-partitioned on src across rounds."""
     e = _edges(spark, sf_dir).persist()
-    root = spark.createDataFrame([(0,)], "node bigint")
+    root = spark.range(1).select(F.col("id").alias("node"))
     visited = _bfs("graph_bfs_distance", e, root, _BFS_MAX_HOPS)
     e.unpersist()
     return visited.select("node", "dist")
@@ -426,7 +429,11 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Execution shape: per fixpoint round ONE frontier⋈edges equi-join
     on src and a min-aggregation merging candidates into the running
-    distance table, until no distance is added or lowered. Edges stay
+    distance table, until no distance is added or lowered.  Semi-naive
+    (RaSQL): the frontier is the rows flagged ``__delta`` (added or
+    lowered) in the round before, whose relaxation is the only one
+    that can lower a distance, so every round's table equals
+    full Bellman-Ford's. Edges stay
     co-partitioned on src; rounds are bounded by the weight cap
     (every optimal path has ≤ {_SSSP_CAP} edges since weights ≥ 1).
     The Pregel SSSP shape on the DataFrame runtime."""
@@ -439,27 +446,44 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
-    dist = spark.createDataFrame([(0, 0)], "node bigint, dist bigint").localCheckpoint(
-        eager=True
+    dist = spark.range(1).select(
+        F.col("id").alias("node"), F.col("id").alias("dist"), F.lit(True).alias("__delta")
     )
+    none = F.lit(None).cast("long")
 
     def step(dist: DataFrame) -> DataFrame:
+        old = dist.select("node", F.col("dist").alias("old"), none.alias("cand"))
         cand = (
-            dist.where(F.col("dist") < _SSSP_CAP)
+            dist.where(F.col("__delta") & (F.col("dist") < _SSSP_CAP))
             .join(e, F.col("node") == F.col("src"))
-            .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
+            .select(
+                F.col("dst").alias("node"),
+                none.alias("old"),
+                (F.col("dist") + F.col("w")).alias("cand"),
+            )
         )
-        return dist.unionByName(cand).groupBy("node").agg(F.min("dist").alias("dist"))
+        return (
+            old.unionByName(cand)
+            .groupBy("node")
+            .agg(F.min("old").alias("old"), F.min("cand").alias("cand"))
+            .select(
+                "node",
+                F.least("old", "cand").alias("dist"),
+                F.coalesce(F.col("cand") < F.col("old"), F.col("old").isNull()).alias(
+                    "__delta"
+                ),
+            )
+        )
 
-    dist, _, _ = fixpoint(
+    dist, _, _, _ = fixpoint(
         "graph_sssp_weighted",
         dist,
         step,
         max_rounds=_SSSP_CAP + 4,
-        changed=lambda prev, nxt: _monotone_delta(prev, nxt, "dist"),
+        changed=_n_flagged(F.col("__delta")),
     )
     e.unpersist()
-    return dist.where(F.col("dist") <= _SSSP_CAP)
+    return dist.where(F.col("dist") <= _SSSP_CAP).select("node", "dist")
 
 
 @query(
@@ -726,12 +750,12 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # float scores never certify a fixpoint, so every round runs: the
     # change count is the row count, 0 only for an empty graph
-    scores, _, _ = fixpoint(
+    scores, _, _, _ = fixpoint(
         "graph_hits",
         scores,
         step,
         max_rounds=_HITS_ITERS,
-        changed=lambda _, nxt: nxt.agg(F.count(F.lit(1))),
+        changed=F.count(F.lit(1)),
     )
     e.unpersist()
     return scores.select("node", "hub", "auth")
@@ -809,25 +833,28 @@ def graph_k_core_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_orderkey").alias("a"), (-F.col("l_partkey") - 1).alias("b")
         )
         .distinct()
+        .withColumn("alive", F.lit(True))
         .localCheckpoint(eager=True)
     )
-    e, e_prev, _ = fixpoint(
+    peeled = ~F.col("alive")
+    e, _, _, n_peeled = fixpoint(
         "graph_k_core_exact",
         e,
         _peel_step(_KCORE_K),
         max_rounds=_KCORE_EXACT_ROUNDS,
-        changed=_monotone_delta,
+        changed=_n_flagged(peeled),
     )
     # convergence certificate: edges peeled in the final round (must
     # be 0 once the peel sequence has fixpointed; graded in-output so
     # an under-peeled run at larger scale is visible, not silent)
-    cert = _monotone_delta(e_prev, e).select(
-        F.col("n_moved").alias("n_edges_removed_last_round")
-    )
-    return (
-        _degrees(e, "core_degree")
-        .where(F.col("core_degree") >= _KCORE_K)
-        .crossJoin(F.broadcast(cert))
+    return _with_certificate(
+        _degrees(e.where("alive"), "core_degree").where(
+            F.col("core_degree") >= _KCORE_K
+        ),
+        e,
+        n_peeled,
+        peeled,
+        "n_edges_removed_last_round",
     )
 
 
@@ -891,37 +918,42 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     symmetrized 100-node demo digraph has diameter <= 3 at every
     fixture SF (fixpoint exits early once no label moves).
 
-    Execution shape per round: one join of the label table against
-    the static symmetrized edge table (co-partitioned on src across
-    rounds) + one min aggregate."""
+    Execution shape per round: one join of the labels flagged
+    ``__delta`` in the round before (the semi-naive frontier of
+    api_graph._min_label_step) against the static symmetrized edge
+    table (co-partitioned on src across rounds) + one min aggregate.
+    The edge table comes from one lineitem scan emitting both
+    directions of every pair."""
     li = table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        (F.col("l_orderkey") % 100).alias("src"),
-        (F.col("l_partkey") % 100).alias("dst"),
-    )
+    o, p = F.col("l_orderkey") % 100, F.col("l_partkey") % 100
     e = (
-        fwd.union(fwd.select("dst", "src"))
+        li.select(
+            F.inline(
+                F.array(
+                    F.struct(o.alias("src"), p.alias("dst")),
+                    F.struct(p.alias("src"), o.alias("dst")),
+                )
+            )
+        )
         .where(F.col("src") != F.col("dst"))
         .distinct()
         .localCheckpoint(eager=True)
     )
     lbl = e.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
+        "node", F.col("node").alias("label"), F.lit(True).alias("__delta")
     )
-    lbl, prev, _ = fixpoint(
+    delta = F.col("__delta")
+    lbl, _, _, n_moved = fixpoint(
         "graph_connected_components",
         lbl,
         _min_label_step(e, "node"),
         max_rounds=_CC_ROUNDS,
-        changed=lambda prev, nxt: _monotone_delta(prev, nxt, "label"),
+        changed=_n_flagged(delta),
     )
     # convergence certificate: labels that still moved in the final
     # round (0 once the budget covers the diameter; graded, so a lapse
     # at scale is VISIBLE instead of silently under-propagating)
-    cert = _n_moved(prev, lbl, "node", "label").select(
-        F.col("n_moved").alias("n_changed_last_round")
-    )
-    return lbl.crossJoin(F.broadcast(cert)).select(
+    return _with_certificate(lbl, lbl, n_moved, delta, "n_changed_last_round").select(
         "node", F.col("label").alias("component"), "n_changed_last_round"
     )
 
@@ -1013,27 +1045,29 @@ def graph_hits_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             "node", F.expr(f"CAST(raw * {S} DIV m AS BIGINT)").alias("score")
         )
 
+    def step(h: DataFrame) -> DataFrame:
+        h = h.select("node", "score")
+        nxt = half(half(h, "dst", "src"), "src", "dst")
+        return nxt.join(h.withColumnRenamed("score", "prev"), "node")
+
     h = nodes.select("node", F.lit(S).cast("long").alias("score"))
-    h, h_prev, _ = fixpoint(
+    h, h_prev, _, _ = fixpoint(
         "graph_hits_exact",
         h,
-        lambda h: half(half(h, "dst", "src"), "src", "dst"),
+        step,
         max_rounds=_HITS_EXACT_ROUNDS,
-        changed=lambda prev, nxt: _n_moved(prev, nxt, "node", "score"),
+        changed=_n_flagged(F.col("score") != F.col("prev")),
     )
     # the final round's authorities were computed from the hubs one
     # round before the final ones
-    a = half(h_prev, "dst", "src").toDF("node", "a")
+    a = half(h_prev.select("node", "score"), "dst", "src").toDF("node", "a")
     # convergence certificate: the max hub-score movement in the final
     # round on the 1e6 lattice (0 = the iteration has fixpointed; a
     # nonzero value at larger scale is graded, not silently stale)
-    cert = (
-        h.join(h_prev.toDF("node", "hp"), "node")
-        .agg(
-            F.max(F.abs(F.col("score") - F.col("hp")))
-            .cast("long")
-            .alias("hub_residual_scaled")
-        )
+    cert = h.agg(
+        F.max(F.abs(F.col("score") - F.col("prev")))
+        .cast("long")
+        .alias("hub_residual_scaled")
     )
     return (
         h.join(a, "node")
@@ -1447,7 +1481,9 @@ def graph_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern). All integer arithmetic. Scale: per round ONE edge join
     shuffling |V| rows + a max rollup; the six rounds are a fixpoint
     budget (early exit once no distance rises), reported as
-    ``rounds``."""
+    ``rounds``.  Semi-naive: a round relaxes only the out-edges of
+    the nodes whose distance rose in the round before (``__delta``),
+    which yields the same table as relaxing every edge."""
     li = table(spark, sf_dir, "lineitem")
     e = (
         li.select(
@@ -1460,13 +1496,14 @@ def graph_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     n = _nodes(e)
-    l = n.select("node", F.lit(0).cast("long").alias("dist")).localCheckpoint(
-        eager=True
-    )
+    l = n.select(
+        "node", F.lit(0).cast("long").alias("dist"), F.lit(True).alias("__delta")
+    ).localCheckpoint(eager=True)
 
     def step(l: DataFrame) -> DataFrame:
+        front = l.where("__delta")
         relaxed = (
-            l.join(e, l["node"] == e["src"])
+            front.join(e, front["node"] == e["src"])
             .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("cand"))
             .groupBy("node")
             .agg(F.max("cand").alias("cand"))
@@ -1476,14 +1513,15 @@ def graph_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest(F.col("dist"), F.coalesce(F.col("cand"), F.lit(0)))
             .cast("long")
             .alias("dist"),
+            F.coalesce(F.col("cand") > F.col("dist"), F.lit(False)).alias("__delta"),
         )
 
-    l, _, _ = fixpoint(
+    l, _, _, _ = fixpoint(
         "graph_critical_path",
         l,
         step,
         max_rounds=_CP_ROUNDS,
-        changed=lambda prev, nxt: _monotone_delta(prev, nxt, "dist"),
+        changed=_n_flagged(F.col("__delta")),
     )
     e.unpersist()
     return l.select(

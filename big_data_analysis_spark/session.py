@@ -80,6 +80,28 @@ def harden_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _driver_memory(mem_total_kb: int | None) -> str:
+    """Default driver heap for a host with ``mem_total_kb`` KiB of RAM:
+    half of it in whole GiB, at least 1g and at most 16g, so the JVM
+    leaves the other half to the OS, Python and shuffle files; 16g
+    when the host's size is unknown."""
+    if not mem_total_kb:
+        return "16g"
+    return f"{max(1, min(16, mem_total_kb // (2 * 1024 * 1024)))}g"
+
+
+def _mem_total_kb() -> int | None:
+    """MemTotal from /proc/meminfo, None where there is none."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1])
+    except (OSError, ValueError, IndexError):
+        pass
+    return None
+
+
 def get_spark(app_name: str = "big_data_analysis_spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -89,7 +111,10 @@ def get_spark(app_name: str = "big_data_analysis_spark") -> SparkSession:
         # cluster this would be raised to ~2-4x total cores; AQE
         # coalesces small post-shuffle partitions either way.
         .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _driver_memory(_mem_total_kb()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

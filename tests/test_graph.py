@@ -4,8 +4,11 @@ HITS iterations, k-core peeling, min-label propagation, BFS and
 longest-path relaxation over the same edge lists, plus the
 convergence certificates and the per-round job descriptions."""
 
+from collections import Counter
+
 import duckdb
 import pytest
+from hypothesis import example, given, settings, strategies as st
 
 from big_data_analysis_spark import api
 from big_data_analysis_spark.registry import load_all
@@ -270,7 +273,7 @@ def test_fixpoint_rounds_run_under_job_descriptions(spark):
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         jobs = store.jobsList(None)
         return {
-            jobs.apply(i).jobId(): jobs.apply(i).description()
+            jobs.apply(i).jobId(): (jobs.apply(i).description(), jobs.apply(i).name())
             for i in range(jobs.size())
         }
 
@@ -286,6 +289,154 @@ def test_fixpoint_rounds_run_under_job_descriptions(spark):
         sc.setJobDescription(None)
     assert {r.node for r in core} == {1, 2, 3}
     new = {
-        d.get() for job, d in descriptions().items() if job not in seen and d.isDefined()
+        (d.get(), name)
+        for job, (d, name) in descriptions().items()
+        if job not in seen and d.isDefined()
     }
-    assert new == {"caller", "k_core round 1", "k_core round 2"}
+    assert {d for d, _ in new} == {"caller", "k_core round 1", "k_core round 2"}
+    # each round's change count rides on the jobs that fill its
+    # checkpoint: no round runs a separate collect
+    rounds = [name for d, name in new if d.startswith("k_core round")]
+    assert rounds and not [n for n in rounds if n.startswith("collect")], rounds
+
+
+def test_fixpoint_on_empty_state_runs_one_round(spark):
+    """An empty state counts 0 changed rows: one round, then stop."""
+    from pyspark.sql import functions as F
+
+    from big_data_analysis_spark.fixpoint import fixpoint
+
+    calls = []
+
+    def step(state):
+        calls.append(1)
+        return state
+
+    empty = spark.range(0).withColumn("__delta", F.lit(True))
+    state, prev, rounds, n = fixpoint(
+        "empty", empty, step, max_rounds=5, changed=F.count(F.when(F.col("__delta"), 1))
+    )
+    assert (rounds, n, len(calls), state.count(), prev.count()) == (1, 0, 1, 0, 0)
+
+
+def _python_min_label_round(edges):
+    """One min-label round over undirected ``edges`` from the node
+    ids: the labels and how many of them moved."""
+    adj = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    lbl = {v: min(v, *adj[v]) for v in adj}
+    return lbl, sum(lbl[v] != v for v in adj)
+
+
+def _python_peel(edges, k, rounds=None):
+    """Synchronous k-core peel of the distinct (a, b) rows, ``rounds``
+    rounds (None: to the fixpoint); returns the surviving edges and
+    how many the last round run peeled."""
+    edges, peeled, r = set(edges), 0, 0
+    while rounds is None or r < rounds:
+        deg = Counter(v for e in edges for v in e)
+        keep = {(a, b) for a, b in edges if deg[a] >= k and deg[b] >= k}
+        peeled, r, edges = len(edges) - len(keep), r + 1, keep
+        if not peeled:
+            break
+    return edges, peeled
+
+
+def _lineitem_edges(sf_dir, sql):
+    return duckdb.sql(
+        sql.replace("lineitem", f"read_parquet('{sf_dir}/lineitem.parquet')")
+    ).fetchall()
+
+
+def test_certificates_count_the_flag_when_the_budget_runs_out(
+    spark, sf_dir, monkeypatch
+):
+    """With a one-round budget the loops stop before the fixpoint, so
+    the certificates come from the in-plan count of the round's flag:
+    labels that moved in round 1, edges peeled in round 1."""
+    import big_data_analysis_spark.operators.graph as g
+
+    monkeypatch.setattr(g, "_CC_ROUNDS", 1)
+    monkeypatch.setattr(g, "_KCORE_EXACT_ROUNDS", 1)
+    und = _lineitem_edges(sf_dir, g._CC_EDGE_SQL)
+    want_lbl, want_moved = _python_min_label_round(und)
+    assert want_moved > 0
+    cc = g.graph_connected_components(spark, sf_dir).collect()
+    assert {r.node: r.component for r in cc} == want_lbl
+    assert {r.n_changed_last_round for r in cc} == {want_moved}
+
+    kept, want_peeled = _python_peel(
+        _lineitem_edges(sf_dir, g._KCORE_EDGE_SQL), g._KCORE_K, rounds=1
+    )
+    assert want_peeled > 0
+    deg = Counter(v for e in kept for v in e)
+    kc = g.graph_k_core_exact(spark, sf_dir).collect()
+    assert {r.node: r.core_degree for r in kc} == {
+        v: d for v, d in deg.items() if d >= g._KCORE_K
+    }
+    assert {r.n_edges_removed_last_round for r in kc} == {want_peeled}
+
+
+def test_pagerank_and_label_propagation_mark_convergence(spark):
+    """``converged`` is true iff the last round moved nothing: a
+    budget that runs out first marks the output instead of hiding it."""
+    skewed = spark.createDataFrame([(0, 1), (1, 2), (2, 0), (2, 3)], "src long, dst long")
+    cycle = spark.createDataFrame([(0, 1), (1, 2), (2, 0)], "src long, dst long")
+    short = api.pagerank(spark, skewed, iters=2).collect()
+    # uniform ranks are the cycle's fixpoint: round 1 moves nothing
+    full = api.pagerank(spark, cycle, iters=5).collect()
+    assert {r.converged for r in short} == {False}
+    assert {r.converged for r in full} == {True}
+
+    bip = spark.createDataFrame(
+        [(1, -1), (1, -2), (2, -2), (2, -3), (3, -3), (3, -4)], "a long, b long"
+    )
+    short = api.label_propagation(bip, "a", "b", iters=1).collect()
+    full = api.label_propagation(bip, "a", "b", iters=50).collect()
+    assert {r.converged for r in short} == {False}
+    assert {r.converged for r in full} == {True}
+
+
+_node = st.integers(min_value=0, max_value=7)
+_pairs = st.one_of(
+    st.lists(st.tuples(_node, _node), max_size=14),
+    # one hot node: every pair touches node 0
+    st.lists(_node, max_size=14).map(lambda vs: [(0, v) for v in vs]),
+)
+
+
+@given(pairs=_pairs, k=st.integers(min_value=1, max_value=3))
+@example(pairs=[], k=2)
+@example(pairs=[(3, 3)], k=1)
+@example(pairs=[(1, 2), (1, 2), (2, 1), (2, 3), (2, 3)], k=2)
+@example(pairs=[(0, v) for v in range(1, 8)] + [(1, 2)], k=2)
+@settings(max_examples=10, deadline=None)
+def test_api_cc_and_k_core_match_python_models(spark, pairs, k):
+    """api.connected_components against union-find and api.k_core
+    against a pure-Python peel of the distinct (a, b) rows, on
+    generated pair lists that include empty, self-loop,
+    duplicate-pair and one-hot-node inputs."""
+    df = spark.createDataFrame(pairs, "x long, y long")
+    parent = {}
+
+    def find(v):
+        parent.setdefault(v, v)
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for a, b in pairs:
+        parent[find(a)] = find(b)
+    comp_min = {}
+    for v in list(parent):
+        comp_min[find(v)] = min(comp_min.get(find(v), v), v)
+    got = {r.nid: r.label for r in api.connected_components(df, "nid").collect()}
+    assert got == {v: comp_min[find(v)] for v in parent}
+
+    kept, _ = _python_peel(pairs, k)
+    deg = Counter(v for e in kept for v in e)
+    got = {(r.node, r.core_degree) for r in api.k_core(df, "x", "y", k=k).collect()}
+    assert got == set(deg.items())
