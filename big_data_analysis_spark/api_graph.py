@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .fixpoint import fixpoint
+from .fixpoint import counted_checkpoint, fixpoint
 
 
 def _nodes(e: DataFrame) -> DataFrame:
@@ -116,17 +116,16 @@ def connected_components(pairs: DataFrame, id_name: str) -> DataFrame:
     edges = (
         pairs.union(pairs.select(F.col(b), F.col(a))).toDF("src", "dst").persist()
     )
-    labels = (
+    labels, n = counted_checkpoint(
         edges.select(F.col("src").alias(id_name))
         .distinct()
         .select(id_name, F.col(id_name).alias("label"), F.lit(True).alias("__delta"))
-        .localCheckpoint()
     )
     labels, _, _, _ = fixpoint(
         "connected_components",
         labels,
         _min_label_step(edges, id_name),
-        max_rounds=labels.count(),
+        max_rounds=n,
         changed=_n_flagged(F.col("__delta")),
     )
     edges.unpersist()
@@ -205,17 +204,16 @@ def k_core(edges: DataFrame, a_col: str, b_col: str, *, k: int = 3) -> DataFrame
     the edge count + 1 bounds the rounds and the fixpoint is always
     reached.  Order-independent, hence deterministic under any
     partitioning."""
-    u = (
+    u, n = counted_checkpoint(
         edges.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
         .distinct()
         .withColumn("alive", F.lit(True))
-        .localCheckpoint()
     )
     core, _, _, _ = fixpoint(
         "k_core",
         u,
         _peel_step(k),
-        max_rounds=u.count() + 1,
+        max_rounds=n + 1,
         changed=_n_flagged(~F.col("alive")),
     )
     return _degrees(core.where("alive"), "core_degree")

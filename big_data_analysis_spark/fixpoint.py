@@ -7,6 +7,7 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import functions as F
 
 
 def fixpoint(
@@ -67,3 +68,12 @@ def fixpoint(
     finally:
         sc.setJobDescription(caller_desc)
     return state, prev, rounds, n_changed
+
+
+def counted_checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
+    """``df`` eagerly localCheckpoint'ed, and its row count, observed
+    by the jobs that fill the checkpoint: a seed state sizes its
+    ``max_rounds`` budget without a separate count job."""
+    obs = Observation()
+    cp = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    return cp, obs.get["n"]

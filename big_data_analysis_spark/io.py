@@ -116,27 +116,31 @@ def _planned_scan_splits(spark: SparkSession, sf_dir: str, name: str) -> int:
 
 
 def spread_table(spark: SparkSession, sf_dir: str, name: str, *keys: str) -> DataFrame:
+    """``spread`` over the table's own scan."""
+    return spread(table(spark, sf_dir, name), sf_dir, name, *keys)
+
+
+def spread(df: DataFrame, sf_dir: str, name: str, *keys: str) -> DataFrame:
     """Unsplittable-input mitigation (optimization guide §2.5: "one
     huge unsplittable file ... otherwise repartition immediately after
-    the read").
+    the read"): ``df`` hash-repartitioned on ``keys`` to
+    defaultParallelism when (and only when) the scan of table ``name``
+    plans fewer row-bearing tasks than that.
 
     The fixture tables are single-file, SINGLE-ROW-GROUP parquet, so
-    no matter the core count every scan plans exactly one row-bearing
-    task — all per-row compute between the scan and the first Exchange
-    runs sequentially.  When (and only when) the planned scan
-    parallelism is below the session's defaultParallelism, hash-
-    repartition on the (unique, high-cardinality) row key so
-    downstream map work uses the whole cluster (guide §2.5
-    synthetic-key note: a skewless key, never rand()).  On a
-    production layout — many files / row groups, planned splits >=
+    every scan plans exactly one row-bearing task — all per-row
+    compute between the scan and the first Exchange runs
+    sequentially, and AQE folds the small shuffles of such a table
+    into one partition too.  Keys are unique and high-cardinality
+    (guide §2.5 synthetic-key note: a skewless key, never rand()).  On
+    a production layout — many files / row groups, planned splits >=
     cores — the guard makes this a provable no-op, so NO extra
-    Exchange exists at 100 TB; the repartition only ever fires on
-    degenerate layouts where a sequential stage is the alternative.
-    Deterministic: hash partitioning by a stable key commutes with
-    every aggregation / equi-join / key-partitioned window placed on
-    top (callers are restricted to those shapes, each re-verified
-    against its oracle)."""
-    df = table(spark, sf_dir, name)
+    Exchange exists at 100 TB.  Deterministic: hash partitioning by a
+    stable key commutes with every aggregation / equi-join /
+    key-partitioned window / row-wise filter placed on top (callers
+    are restricted to those shapes, each re-verified against its
+    oracle or recorded hash)."""
+    spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     if _planned_scan_splits(spark, sf_dir, name) >= target:
         return df

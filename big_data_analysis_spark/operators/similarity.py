@@ -33,7 +33,7 @@ from pyspark.sql.window import Window
 
 from .. import api
 from ..api_lsh import lsh_candidates, lsh_cells
-from ..io import spread_table, table
+from ..io import spread, spread_table, table
 from ..registry import query
 
 _DEC = "decimal(8,6)"
@@ -74,6 +74,22 @@ def dot_dec(a: Column, b: Column) -> Column:
     )
 
 
+def key_distance(a: Column, b: Column) -> Column:
+    """MLlib BucketedRandomProjectionLSH's keyDistance over two
+    array<double> columns: sqrt of the left-to-right sum of (x - y)^2
+    in double, the Vectors.sqdist loop, hence bit-equal.  Over
+    array<float> the terms would be float32.  (A flat 64-term SQL
+    expression blew the codegen budget and ran interpreted: 25 s vs
+    5.6 s.)"""
+    return F.sqrt(
+        F.aggregate(
+            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        )
+    )
+
+
 # DuckDB twin: relational dot product over unnested (id, pos, val)
 # rows with the same exact-decimal arithmetic.
 _SQL_EV = """
@@ -82,25 +98,6 @@ _SQL_EV = """
          generate_subscripts(embedding, 1) AS i
   FROM embeddings
 """
-
-
-def dot_q_pandas():
-    """Vectorized pandas-UDF twin of dot_dec: NumPy int64 einsum over
-    Arrow batches — identical quantized arithmetic, C speed. Used
-    where the candidate-pair count is large (LSH verify stages);
-    interpreted higher-order folds cost ~100x more per pair."""
-
-    @F.pandas_udf("double")
-    def _dot(a: pd.Series, b: pd.Series) -> pd.Series:
-        A = np.rint(np.stack(a.to_numpy()).astype("float64") * 1_000_000).astype(
-            "int64"
-        )
-        B = np.rint(np.stack(b.to_numpy()).astype("float64") * 1_000_000).astype(
-            "int64"
-        )
-        return pd.Series(np.einsum("ij,ij->i", A, B) / 1.0e12)
-
-    return _dot
 
 
 def _sql_dot(alias_a: str, alias_b: str) -> str:
@@ -344,9 +341,12 @@ def sim_threshold_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         pid = int(pdf["pair_id"].iloc[0])
         i, j = pid // NB, pid % NB
         ids = pdf["vec_id"].to_numpy()
-        Q = np.rint(
-            np.stack(pdf["embedding"].to_numpy()).astype("float64") * 1_000_000
-        ).astype("int64")
+        # round half away from zero, as Spark round() and the oracle's
+        # DuckDB round() do (np.rint rounds ties to even); x - trunc(x)
+        # is exact, so the tie test is too
+        x = np.stack(pdf["embedding"].to_numpy()).astype("float64") * 1_000_000
+        t = np.trunc(x)
+        Q = (t + np.where(np.abs(x - t) >= 0.5, np.sign(x), 0.0)).astype("int64")
         if i == j:
             # within-block: every unordered pair appears twice in S;
             # keep the a<b half
@@ -473,20 +473,24 @@ def sim_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("sim_threshold_join_lsh", oracle=None, category="similarity")
-def sim_threshold_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All-pairs cosine >= 0.4 via LSH candidate join + exact verify
-    — the sub-quadratic scale path for sim_threshold_pairs
-    (tests/test_quality.py::test_threshold_lsh_matches_exact asserts
-    pair-set equality with the exact twin: precision 1.0 from the
-    verify stage, recall >= 0.9 and in practice 1.0 at sf0.001).
-    Candidates come from bucket collisions only; the exact dot
-    product then filters. Rows-only by design: the candidate set
-    depends on pyspark.ml's private hyperplane hash family, which no
-    ANSI-SQL oracle can reproduce — the exact twin carries the hash
-    grade (pass r04-era)."""
+_BRP_GATE = 1.0955  # cosine >= 0.4  <=>  euclidean <= sqrt(2 - 0.8) ~= 1.0954
+
+
+def _brp_gated_pairs(spark: SparkSession, sf_dir: str):
+    """(vec_a, vec_b, emb_a, emb_b, dist) for the pairs MLlib's
+    ``approxSimilarityJoin(e, e, _BRP_GATE)`` keeps (vec_a < vec_b,
+    embeddings widened to array<double>), and the fitted model.
+
+    The fixture embeddings are LSH-degenerate (1.99 M of the 2.00 M
+    pairs collide at sf0.1), and approxSimilarityJoin shuffles every
+    collision with its full vector payload.  Here the candidates are
+    the id-only api_lsh join over the model's hash cells, so the
+    candidate shuffle carries 16-byte id pairs; the embeddings are
+    joined on afterwards, by joins AQE chooses.  The candidates are
+    ``spread``, because AQE would fold their few bytes into one
+    partition and run the whole gate in one task."""
     from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
+    from pyspark.ml.functions import array_to_vector, vector_to_array
 
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -500,57 +504,38 @@ def sim_threshold_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         numHashTables=8,
         seed=7,
     ).fit(e)
-    # r14 (guide §2.3/§8, the dedup_minhash_widevocab pattern): the
-    # fixture embeddings are LSH-degenerate — 1.99 M of the 2.00 M
-    # possible pairs collide in >=1 of the 8 tables (measured at
-    # sf0.1) — so approxSimilarityJoin pushed ~8 M COLLISION ROWS
-    # each carrying the full (embedding array + features vector + 8
-    # hash vectors) struct through its internal distinct().
-    # Reimplemented bit-identically with the model's own numbers
-    # (verified row-identical incl. the cosine doubles at
-    # sf0.001/0.01/0.1): candidates are the id-only api_lsh join over
-    # the (table, value) hash cells; the euclidean
-    # gate reproduces keyDistance exactly (sqrt of the left-to-right
-    # (x-y)^2 fold = Vectors.sqdist on dense vectors, < 1.0955); the
-    # exact cosine verify (dot_q_pandas) runs only on gate
-    # survivors, as before.  At 100 TB the candidate shuffle carries
-    # 16-byte id pairs instead of KB-scale structs.
-    from pyspark.ml.functions import vector_to_array
-
     tables = [vector_to_array(F.col("hashes")[t])[0] for t in range(8)]
     cells = lsh_cells(lsh.transform(e), "vec_id", tables).localCheckpoint(
         eager=True  # 8 narrow rows per vector
     )
-    cand = lsh_candidates(cells).select(
-        F.col("id_a").alias("vec_a"), F.col("id_b").alias("vec_b")
+    cand = lsh_candidates(cells).toDF("vec_a", "vec_b")
+    cand = spread(cand, sf_dir, "embeddings", "vec_a", "vec_b")
+    emb = e.select("vec_id", F.col("embedding").cast("array<double>"))
+    dist = key_distance(F.col("emb_a"), F.col("emb_b"))
+    gated = (
+        cand.join(emb.toDF("vec_a", "emb_a"), "vec_a")
+        .join(emb.toDF("vec_b", "emb_b"), "vec_b")
+        .withColumn("dist", dist)
+        .where(F.col("dist") < _BRP_GATE)
     )
-    emb = e.select("vec_id", "embedding")
-    withv = cand.join(
-        F.broadcast(
-            emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"))
-        ),
-        "vec_a",
-    ).join(
-        F.broadcast(
-            emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b"))
-        ),
-        "vec_b",
-    )
-    # keyDistance = sqrt(Vectors.sqdist) accumulates (x_i-y_i)^2 LEFT
-    # TO RIGHT; zip_with + aggregate folds in the same order, so the
-    # gate is bit-equal to the Scala loop.  (A flat 64-term SQL
-    # expression was tried instead — 128 GetArrayItems per row blew
-    # the codegen budget and fell back to interpreted: 25 s vs 5.6 s.)
-    sqdist = F.aggregate(
-        F.zip_with("emb_a", "emb_b", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    # cosine >= 0.4  <=>  euclidean <= sqrt(2 - 0.8) ~= 1.0954
-    gated = withv.where(F.sqrt(sqdist) < 1.0955)
-    dot = dot_q_pandas()
+    return gated, lsh
+
+
+@query("sim_threshold_join_lsh", oracle=None, category="similarity")
+def sim_threshold_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """All-pairs cosine >= 0.4 via LSH candidate join + exact verify
+    — the sub-quadratic scale path for sim_threshold_pairs
+    (tests/test_quality.py::test_threshold_lsh_matches_exact asserts
+    pair-set equality with the exact twin: precision 1.0 from the
+    verify stage, recall >= 0.9 and in practice 1.0 at sf0.001).
+    MLlib's euclidean gate drops far candidates and the exact
+    ``dot_dec`` cosine filters the rest, all native: no Python worker.
+    Rows-only by design: the candidate set depends on pyspark.ml's
+    private hyperplane hash family, which no ANSI-SQL oracle can
+    reproduce — the exact twin carries the hash grade."""
+    gated, _ = _brp_gated_pairs(spark, sf_dir)
     pairs = gated.select(
-        "vec_a", "vec_b", dot(F.col("emb_a"), F.col("emb_b")).alias("cosine")
+        "vec_a", "vec_b", dot_dec(F.col("emb_a"), F.col("emb_b")).alias("cosine")
     )
     return pairs.where(F.col("cosine") >= 0.4)
 

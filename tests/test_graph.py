@@ -265,39 +265,56 @@ def test_critical_path_matches_dag_dp(spark, sf_dir):
 
 def test_fixpoint_rounds_run_under_job_descriptions(spark):
     """Every fixpoint round runs its jobs under "<name> round <k>", and
-    the caller's own job description is back in place afterwards."""
+    the caller's own job description is back in place afterwards.
+    The only action api.k_core runs is an eager localCheckpoint: once
+    for its seed, whose checkpoint also observes the round budget,
+    and once per round."""
+    import re
+
     sc = spark.sparkContext
     store = sc._jsc.sc().statusStore()
+    sql_store = spark._jsparkSession.sharedState().statusStore()
 
-    def descriptions():
+    def jobs():
         sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs = store.jobsList(None)
-        return {
-            jobs.apply(i).jobId(): (jobs.apply(i).description(), jobs.apply(i).name())
-            for i in range(jobs.size())
-        }
+        js = store.jobsList(None)
+        return {js.apply(i).jobId(): js.apply(i).description() for i in range(js.size())}
 
-    seen = set(descriptions())
+    def executions():
+        """SQL executions by id: one per action, whatever number of jobs
+        AQE splits it into."""
+        ex = sql_store.executionsList()
+        return {ex.apply(i).executionId(): ex.apply(i) for i in range(ex.size())}
+
+    seen_jobs, seen_executions = set(jobs()), set(executions())
     # triangle 1-2-3 plus a pendant node 4: round 1 peels node 4,
     # round 2 peels nothing
     edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (3, 4)], "a long, b long")
     sc.setJobDescription("caller")
     try:
-        core = api.k_core(edges, "a", "b", k=2).collect()
+        core = api.k_core(edges, "a", "b", k=2)
         assert sc.getLocalProperty("spark.job.description") == "caller"
+        sc.setJobDescription("collect")
+        rows = core.collect()
     finally:
         sc.setJobDescription(None)
-    assert {r.node for r in core} == {1, 2, 3}
-    new = {
-        (d.get(), name)
-        for job, (d, name) in descriptions().items()
-        if job not in seen and d.isDefined()
-    }
-    assert {d for d, _ in new} == {"caller", "k_core round 1", "k_core round 2"}
+    assert {r.node for r in rows} == {1, 2, 3}
+    new_jobs = {d.get() for j, d in jobs().items() if j not in seen_jobs and d.isDefined()}
+    assert new_jobs == {"caller", "k_core round 1", "k_core round 2", "collect"}
     # each round's change count rides on the jobs that fill its
-    # checkpoint: no round runs a separate collect
-    rounds = [name for d, name in new if d.startswith("k_core round")]
-    assert rounds and not [n for n in rounds if n.startswith("collect")], rounds
+    # checkpoint (no round runs a separate collect), and the seed's
+    # row count on the seed checkpoint (no separate count)
+    new_actions = [
+        (e.description(), re.search(r"Dataset\.(\w+)\(", e.details()).group(1))
+        for i, e in sorted(executions().items())
+        if i not in seen_executions
+    ]
+    assert new_actions == [
+        ("caller", "localCheckpoint"),
+        ("k_core round 1", "localCheckpoint"),
+        ("k_core round 2", "localCheckpoint"),
+        ("collect", "collectToPython"),
+    ], new_actions
 
 
 def test_fixpoint_on_empty_state_runs_one_round(spark):

@@ -241,3 +241,102 @@ def test_simhash_exact_matches_python_model(spark, sf_dir):
     }
     assert got == expect
     assert len(expect) > 0
+
+
+def test_brp_gate_equals_mllib_approx_similarity_join(spark, sf_dir):
+    """The candidate join and euclidean gate of sim_threshold_join_lsh
+    keep exactly the pairs MLlib's approxSimilarityJoin keeps on the
+    same fitted model, with bit-equal keyDistance doubles.  A gate
+    folded over the float32 arrays misses the doubles in the last
+    bits."""
+    from pyspark.ml.functions import array_to_vector
+
+    from big_data_analysis_spark.operators.similarity import (
+        _BRP_GATE,
+        _brp_gated_pairs,
+    )
+
+    gated, model = _brp_gated_pairs(spark, sf_dir)
+    got = sorted(tuple(r) for r in gated.select("vec_a", "vec_b", "dist").collect())
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", array_to_vector("embedding").alias("features")
+    )
+    ref = (
+        model.approxSimilarityJoin(e, e, _BRP_GATE, distCol="dist")
+        .where(F.col("datasetA.vec_id") < F.col("datasetB.vec_id"))
+        .select(F.col("datasetA.vec_id"), F.col("datasetB.vec_id"), "dist")
+    )
+    want = sorted(tuple(r) for r in ref.collect())
+    assert len(want) > 0
+    assert got == want
+
+
+def _lsh_join_plans(spark, sf_dir, **conf):
+    """(initial formatted plan, final adaptive plan, sorted rows) of
+    sim_threshold_join_lsh with ``conf`` set while it is built,
+    planned and run.  The query's table reads re-apply the engine's
+    session conf, so ``conf`` is set again once the DataFrame is
+    built."""
+    saved = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        df = REG["sim_threshold_join_lsh"].fn(spark, sf_dir)
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        jvm = spark.sparkContext._jvm
+        initial = jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        rows = sorted(tuple(r) for r in df.collect())
+        final = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    return initial, final, rows
+
+
+def test_lsh_threshold_join_has_100tb_plan_shape(spark, sf_dir):
+    """With broadcasts off, as for a corpus-sized embeddings table, no
+    BroadcastExchange is left in sim_threshold_join_lsh: nothing
+    forces the embeddings into a broadcast.  No Python runs in the
+    verify, and the rows equal those of the default session."""
+    _, default_final, want = _lsh_join_plans(spark, sf_dir)
+    initial, final, got = _lsh_join_plans(
+        spark, sf_dir, **{"spark.sql.autoBroadcastJoinThreshold": "-1"}
+    )
+    assert "BroadcastExchange" not in initial
+    assert "BroadcastExchange" not in final
+    for plan in (initial, final, default_final):
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert len(want) > 0
+    assert got == want
+
+
+def test_lsh_candidate_spread_follows_the_scan_layout(spark, sf_dir, tmp_path):
+    """The candidate pairs are hash-repartitioned on (vec_a, vec_b) to
+    defaultParallelism when the embeddings scan plans fewer tasks
+    than that (the single-row-group fixture), so the verify runs on
+    every core.  On a copy with one row group per core and
+    maxPartitionBytes small enough to split it, the guard is a no-op:
+    one Exchange fewer, same rows."""
+    import pyarrow.parquet as pq
+
+    n = spark.sparkContext.defaultParallelism
+    initial, _, want = _lsh_join_plans(spark, sf_dir)
+    [args] = [l for l in initial.splitlines() if "REPARTITION_BY_NUM" in l]
+    assert re.search(rf"hashpartitioning\(vec_a#\d+L, vec_b#\d+L, {n}\)", args), args
+
+    src = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    dst = tmp_path / "embeddings.parquet"
+    pq.write_table(src, dst, row_group_size=-(-src.num_rows // n))
+    assert pq.ParquetFile(dst).metadata.num_row_groups >= n
+    split = str(max(1, dst.stat().st_size // (2 * n)))
+    initial_rg, _, got = _lsh_join_plans(
+        spark, str(tmp_path), **{"spark.sql.files.maxPartitionBytes": split}
+    )
+    assert "REPARTITION_BY_NUM" not in initial_rg
+    assert initial_rg.split("\n\n")[0].count("Exchange") == (
+        initial.split("\n\n")[0].count("Exchange") - 1
+    )
+    assert got == want

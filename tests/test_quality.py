@@ -123,6 +123,58 @@ def test_threshold_lsh_matches_exact(spark, sf_dir):
     assert len(lsh & exact) / len(exact) >= 0.9, f"LSH found {len(lsh)}/{len(exact)}"
 
 
+def test_dot_products_round_quantization_ties_like_the_oracle(spark, tmp_path):
+    """Every element below is k/128 with |k| = 1 (mod 4): its 1e-6
+    quantization k * 7812.5 is a tie whose floor is even, so rounding
+    half to even and half away from zero disagree on each one.  The
+    DuckDB oracle, like Spark's round(), takes ties away from zero; so
+    must sim_threshold_pairs' NumPy GEMM and dot_dec."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from big_data_analysis_spark.operators.similarity import _SQL_EV, _sql_dot, dot_dec
+    from big_data_analysis_spark.parity import compare_query
+
+    vecs = {
+        1: [13] * 64,
+        2: [13] * 63 + [-1],
+        3: [9] * 64,
+        4: [-13] * 32 + [-5] * 32,
+        5: [-13] * 64,
+    }
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(list(vecs), pa.int64()),
+                "embedding": pa.array(
+                    [[k / 128 for k in v] for v in vecs.values()], pa.list_(pa.float32())
+                ),
+                "label": pa.array([0] * len(vecs), pa.int32()),
+            }
+        ),
+        tmp_path / "embeddings.parquet",
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM"
+        f" read_parquet('{tmp_path}/embeddings.parquet')"
+    )
+    rep = compare_query(spark, con, REG["sim_threshold_pairs"], str(tmp_path))
+    assert rep.ok and rep.spark_rows == 4, rep
+
+    e = spark.read.parquet(str(tmp_path / "embeddings.parquet"))
+    a, b = e.alias("a"), e.alias("b")
+    got = a.join(b, F.col("a.vec_id") < F.col("b.vec_id")).select(
+        "a.vec_id", "b.vec_id", dot_dec(F.col("a.embedding"), F.col("b.embedding"))
+    )
+    want = con.execute(
+        f"WITH ev AS ({_SQL_EV}) SELECT a.vec_id, b.vec_id, {_sql_dot('a', 'b')}"
+        " FROM ev a JOIN ev b ON b.i = a.i AND a.vec_id < b.vec_id GROUP BY 1, 2"
+    ).fetchall()
+    assert sorted(tuple(r) for r in got.collect()) == sorted(want)
+
+
 def test_minhash_finds_tokenset_clusters(spark, sf_dir):
     # every same-cluster pair (token-set Jaccard == 1.0) must be a
     # MinHash candidate pair at threshold 0.9
