@@ -5,7 +5,9 @@ names — the library surface for using this engine on YOUR tables, not
 just the grading fixtures. The registered queries in operators/ and
 plans/ are thin adapters that call these kernels with the fixture
 schema, so the oracle-checked parity results certify exactly the code
-paths a library user runs.
+paths a library user runs.  tests/test_quality.py checks that every
+public kernel is called by some registered query, and lists the few
+that are not with the reason each query family keeps its own path.
 
 Design rules (same as everywhere in the package): pure DataFrame
 algebra, no Python in the row path, one shuffle per logical step,
@@ -704,9 +706,12 @@ def asof_join(
     the left rows plus ``right_<ts>``, ``right_<tie>`` and any
     requested ``right_cols``.
 
-    At 100 TB this is one user-key shuffle of both inputs — the
-    window kernel certified by the join_asof / join_asof_forward /
-    join_asof_nearest / join_asof_tolerance oracle queries."""
+    At 100 TB this is one user-key shuffle of both inputs.  The
+    tests/test_api.py::test_api_asof_join_* tests check it against
+    pandas merge_asof.  The join_asof* queries do not call it: both
+    of their sides come from ``events``, which they scan once with
+    their own window, where this two-frame kernel would scan it twice
+    and union the scans."""
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"direction must be backward|forward|nearest, got {direction}")
     lcols = left.columns
@@ -905,16 +910,24 @@ def quantize_int8(
     <prefix>_max, <prefix>_sum, <prefix>_err (exact integer L1
     reconstruction error on the 1e-6 grid). Round-half-up is pure
     integer arithmetic, so results are engine- and
-    partitioning-independent. Pure map stage."""
+    partitioning-independent: ``code = floor(((qv + maxq)*254 + maxq)
+    / (2*maxq)) - 127`` has a non-negative numerator, so floor ==
+    truncate and Spark agrees with DuckDB's ``//`` bit-for-bit (a
+    double-rounding version diverges near half-steps).  The floor-div
+    is (a - pmod(a, b)) / b, an exact multiple of b, so its one double
+    division is exact.  GREATEST(maxq, 1) maps the zero vector to
+    all-zero codes.  Pure map stage."""
 
     def q(v: Column) -> Column:
         return F.round(v.cast("double") * 1_000_000).cast("long")
 
-    qarr = F.transform(F.col(vec_col), q)
     maxq = F.greatest(
-        F.array_max(F.transform(qarr, lambda v: F.abs(v))), F.lit(1).cast("long")
+        F.array_max(F.transform(F.col("__qarr"), lambda v: F.abs(v))),
+        F.lit(1).cast("long"),
     )
-    d = df.withColumn("__qarr", qarr).withColumn("__maxq", maxq)
+    d = df.withColumn("__qarr", F.transform(F.col(vec_col), q)).withColumn(
+        "__maxq", maxq
+    )
     mq = F.col("__maxq")
 
     def floordiv(a: Column, b: Column) -> Column:

@@ -267,8 +267,10 @@ def importance_weights(
 ) -> DataFrame:
     """Domain reweighting table: per domain, the exact 1000x-scaled
     sampling weight transforming the source share into the declared
-    target mix, plus the expected post-resample count audit column.
-    One groupBy + a broadcast scalar total."""
+    target mix, plus the expected post-resample count audit column
+    (a mix that over-asks a tiny domain shows up as expected_docs far
+    above n_docs, the upsampling-repetition red flag).  One groupBy +
+    a broadcast scalar total."""
     case = "CASE " + domain_col + " " + " ".join(
         f"WHEN '{k}' THEN {v}" for k, v in sorted(target_permille.items())
     ) + " ELSE 0 END"

@@ -15,6 +15,7 @@ shared elements of each candidate pair and nothing else.
 
 from __future__ import annotations
 
+import math
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -348,6 +349,44 @@ def simhash_signature(
     )
 
 
+_DP_EPS_NUM, _DP_EPS_DEN = 1, 1  # epsilon = 1 (sensitivity 1 per count)
+_DP_TRUNC = 8  # two-sided geometric truncated at +/-8 (renormalized)
+_DP_UBITS = 40  # uniform draw: top 40 bits of md5 -> [0, 2^40)
+
+
+def _dp_thresholds() -> list[tuple[int, int]]:
+    """Inverse-CDF thresholds of the truncated two-sided geometric
+    (discrete Laplace) with alpha = exp(-eps), as EXACT int64
+    literals over the 2^40 uniform space — computed once at import
+    from the same closed form on both sides, so the noise drawn for
+    a given md5 uniform is identical cross-engine (no transcendental
+    evaluated inside either engine)."""
+    a = math.exp(-_DP_EPS_NUM / _DP_EPS_DEN)
+    ks = list(range(-_DP_TRUNC, _DP_TRUNC + 1))
+    probs = [(1 - a) / (1 + a) * a ** abs(k) for k in ks]
+    tot = sum(probs)
+    u_max = 1 << _DP_UBITS
+    out, cum = [], 0.0
+    for k, p in zip(ks, probs):
+        cum += p / tot
+        out.append((k, min(u_max, round(cum * u_max))))
+    out[-1] = (out[-1][0], u_max)
+    return out
+
+
+def _dp_noise_case(u: str) -> str:
+    """CASE ladder mapping a 40-bit uniform to its geometric noise —
+    identical SQL text on both engines."""
+    return (
+        "CASE "
+        + " ".join(
+            f"WHEN {u} < {t} THEN CAST({k} AS BIGINT)"
+            for k, t in _dp_thresholds()
+        )
+        + " END"
+    )
+
+
 def dp_noisy_counts(
     df: DataFrame, key_cols: list[str], *, salt: str = "dp"
 ) -> DataFrame:
@@ -357,8 +396,6 @@ def dp_noisy_counts(
     literal threshold table — deterministic, replayable, no engine
     ever evaluates exp/ln.  Swap the salt for a secret in production.
     Adds true_cnt / noise / released_cnt."""
-    from .plans.experiment import _dp_noise_case
-
     base = df.groupBy(*key_cols).agg(
         F.count(F.lit(1)).cast("long").alias("true_cnt")
     )

@@ -21,6 +21,7 @@ import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..api import zorder_key
 from ..io import register_views, table
 from ..registry import query
 from ..session import harden_session
@@ -1077,32 +1078,20 @@ GROUP BY o_orderkey, x, y
     category="functions",
 )
 def fn_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-ORDER (Morton) interleave key over two 16-bit dimensions —
-    the multi-dimensional clustering layout key behind data-skipping
-    file layouts (sorting by z co-locates rows close in BOTH customer
-    and date, so min/max stats prune on either predicate). Pure
-    integer bit arithmetic: bit b of x lands at position 2b+1, bit b
-    of y at 2b — identical closed form in both engines, zero
-    shuffles.
-
-    At 100 TB the key feeds repartitionByRange(z) +
-    sortWithinPartitions(z) at write time; the query grades the key
-    computation itself, bit-exact."""
+    """Z-order (Morton) key over two 16-bit dimensions: x = customer
+    key mod 2^16, y = days since 1992-01-01 mod 2^16.  At 100 TB the
+    key feeds repartitionByRange(z) + sortWithinPartitions(z) at write
+    time; the query grades the key itself, bit-exact.  Thin adapter
+    over api.zorder_key."""
     o = table(spark, sf_dir, "orders")
     x = (F.col("o_custkey") % 65536).cast("long")
     y = (
         F.datediff(F.col("o_orderdate"), F.lit("1992-01-01").cast("date")) % 65536
     ).cast("long")
     d = o.select("o_orderkey", x.alias("x"), y.alias("y"))
-    # unrolled closed form: bit b of x -> position 2b+1, of y -> 2b
-    z = None
-    for b in range(16):
-        w = 4**b
-        part = F.shiftright(F.col("x"), b).bitwiseAND(F.lit(1)).cast("long") * F.lit(
-            2 * w
-        ) + F.shiftright(F.col("y"), b).bitwiseAND(F.lit(1)).cast("long") * F.lit(w)
-        z = part if z is None else z + part
-    return d.select("o_orderkey", "x", "y", z.cast("long").alias("z"))
+    return d.select(
+        "o_orderkey", "x", "y", zorder_key(F.col("x"), F.col("y"), bits=16).alias("z")
+    )
 
 
 @query(

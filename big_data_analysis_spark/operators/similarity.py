@@ -44,12 +44,7 @@ def qdot(qa: Column, qb: Column) -> Column:
     """Exact dot product over ALREADY-quantized long arrays (r13:
     dot_dec's arithmetic minus its per-pair re-quantization —
     identical result, sum(q(x)*q(y)) / 1e12 as double)."""
-    acc = F.aggregate(
-        F.zip_with(qa, qb, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
-    return acc.cast("double") / 1.0e12
+    return api.int_dot(qa, qb).cast("double") / 1.0e12
 
 
 def dot_dec(a: Column, b: Column) -> Column:
@@ -854,64 +849,19 @@ GROUP BY vec_id
 )
 def vec_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric int8 quantization of the embedding column — the
-    serving-side compression step (4x smaller vectors, SIMD int8
-    dot products) of an embedding index: per-vector scale =
-    max|v|/127, code_i = round(v_i/scale) in [-127, 127].
-
-    Rounding portability is the whole trick: round-half-up is done in
-    PURE INTEGER arithmetic on the 1e-6-quantized grid —
-    ``code = floor(((qv + maxq)*254 + maxq) / (2*maxq)) - 127`` —
-    with a non-negative numerator so floor == truncate and Spark's
-    `div`-style semantics agree with DuckDB's `//` bit-for-bit (a
-    double-rounding implementation diverges near half-steps).
-    Spark-side the floor-div is (a - pmod(a,b))/b: the difference is
-    an exact multiple of b, so the one double division is exact.
-    GREATEST(maxq, 1) totalizes the zero vector to all-zero codes.
-
-    Pure map stage over the vectors (zero shuffles before the final
-    per-vector aggregate, which is itself elementwise — the output is
-    one row per input row): at 100 TB this is scan-speed. Emits
+    serving-side compression step of an embedding index, emitted as
     scalar audit columns (scale, code min/max/sum, exact integer L1
-    reconstruction error on the scaled grid) rather than the array
-    itself, per the driver's scalar-output convention."""
-    e = table(spark, sf_dir, "embeddings")
-
-    def q(v: Column) -> Column:
-        return F.round(v.cast("double") * 1_000_000).cast("long")
-
-    qarr = F.transform(F.col("embedding"), q)
-    d = e.select("vec_id", qarr.alias("qarr")).select(
+    reconstruction error) per the registry's scalar-output convention.
+    Thin adapter over api.quantize_int8; q_scale/q_err are renamed
+    scale/recon_err_q."""
+    e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return api.quantize_int8(e, "embedding").select(
         "vec_id",
-        "qarr",
-        F.greatest(
-            F.array_max(F.transform(F.col("qarr"), lambda x: F.abs(x))),
-            F.lit(1).cast("long"),
-        ).alias("maxq"),
-    )
-
-    def floordiv(a: Column, b: Column) -> Column:
-        return ((a - F.pmod(a, b)) / b).cast("long")
-
-    maxq = F.col("maxq")
-    codes = F.transform(
-        F.col("qarr"),
-        lambda qv: floordiv((qv + maxq) * 254 + maxq, 2 * maxq) - 127,
-    )
-    d = d.withColumn("codes", codes)
-    err = F.zip_with(
-        F.col("qarr"), F.col("codes"), lambda qv, c: F.abs(qv * 127 - c * maxq)
-    )
-    return d.select(
-        "vec_id",
-        (maxq.cast("double") / F.lit(127000000.0)).alias("scale"),
-        F.array_min("codes").alias("q_min"),
-        F.array_max("codes").alias("q_max"),
-        F.aggregate("codes", F.lit(0).cast("long"), lambda a, x: a + x).alias(
-            "q_sum"
-        ),
-        F.aggregate(err, F.lit(0).cast("long"), lambda a, x: a + x).alias(
-            "recon_err_q"
-        ),
+        F.col("q_scale").alias("scale"),
+        "q_min",
+        "q_max",
+        "q_sum",
+        F.col("q_err").alias("recon_err_q"),
     )
 
 

@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import api
-from ..io import spread_table, table
+from ..io import table
 from ..registry import query
 
 def _tokens():
@@ -221,27 +221,12 @@ FROM t
     category="text",
 )
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heuristic doc-quality scoring: lexical diversity x (1 -
-    stopword share). All ratios are int/int double divisions —
-    bit-identical across engines."""
+    """Heuristic doc-quality scoring with the stopwords 'the' and
+    'a'.  Thin adapter over api.quality_score; n_chars is cast to
+    BIGINT, the fixture column's type."""
     d = table(spark, sf_dir, "documents")
-    t = d.select(
-        "doc_id",
-        "n_chars",
-        F.size(_tokens()).alias("n_tokens"),
-        F.size(F.array_distinct(_tokens())).alias("n_unique"),
-        F.size(F.filter(_tokens(), lambda x: x.isin("the", "a"))).alias("n_stop"),
-    )
-    uq = F.col("n_unique").cast("double") / F.col("n_tokens")
-    sw = F.col("n_stop").cast("double") / F.col("n_tokens")
-    return t.select(
-        "doc_id",
-        "n_chars",
-        "n_tokens",
-        uq.alias("unique_ratio"),
-        sw.alias("stopword_ratio"),
-        (F.col("n_chars").cast("double") / F.col("n_tokens")).alias("avg_token_len"),
-        (uq * (F.lit(1.0) - sw)).alias("quality_score"),
+    return api.quality_score(d, "text", "doc_id").withColumn(
+        "n_chars", F.col("n_chars").cast("long")
     )
 
 

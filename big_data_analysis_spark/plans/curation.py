@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..api_eval import importance_weights
 from ..io import spread_table, table
 from ..api_rank import ntile_distributed
 from ..registry import query
@@ -1815,41 +1816,9 @@ FROM src s CROSS JOIN tot
     category="pipelines",
 )
 def pipeline_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Domain importance weights — the reweighting table a data-mix
-    pipeline (DoReMi-style target mixes, pipeline_domain_resample's
-    upstream) materializes: for each language, the per-document
-    sampling weight that transforms the SOURCE share into the
-    declared TARGET mix, w = target_share / source_share, carried
-    exact at 1000x (weight_ppk = target_permille * total DIV
-    n_lang... all shared floor divisions), plus the expected
-    post-resample document count (n * w, floored at the same scale)
-    as the audit column — a mix that over-asks a tiny domain shows
-    up as expected_docs far above n_docs (the upsampling-repetition
-    red flag).  One groupBy + a broadcast scalar total; the weight
-    table is domain-bounded and broadcasts back onto the corpus at
-    apply time."""
+    """Domain importance weights (DoReMi-style target mix,
+    pipeline_domain_resample's upstream) for the five fixture
+    languages at the _MIX_TARGET permille mix.  Thin adapter over
+    api.importance_weights."""
     d = table(spark, sf_dir, "documents")
-    src = d.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs")
-    )
-    tot = src.agg(F.sum("n_docs").cast("long").alias("total"))
-    target = F.expr(_MIX_CASE).cast("long")
-    j = src.crossJoin(F.broadcast(tot))
-    weight = F.expr(
-        f"(({_MIX_CASE}) * total * 1000) DIV (1000 * n_docs)"
-    )
-    return j.select(
-        "lang",
-        "n_docs",
-        target.alias("target_permille"),
-        F.expr("n_docs * 1000 DIV total").cast("long").alias(
-            "source_permille"
-        ),
-        weight.cast("long").alias("weight_ppk"),
-        F.expr(
-            f"(({_MIX_CASE}) * total * 1000) DIV (1000 * n_docs)"
-            " * n_docs DIV 1000"
-        )
-        .cast("long")
-        .alias("expected_docs"),
-    )
+    return importance_weights(d, "lang", dict(_MIX_TARGET))

@@ -10,8 +10,12 @@ float op per row is one final division of exact integers.
 Kept in their own module per the r9 ADVICE (category-per-module
 layout; screening.py had grown into a catch-all).
 
-Execution shape: ROUGE/BLEU/WER are pure per-row array-lambda maps —
-zero explode, zero shuffle; at 100 TB eval scoring is a map over
+ROUGE/BLEU/WER/chrF build their fixture (pred, ref) columns and call
+the api_eval kernels; their oracles keep DuckDB twins of the kernels'
+n-gram and overlap expressions.
+
+Execution shape: ROUGE/BLEU/WER/chrF are pure per-row array-lambda
+maps — zero explode, zero shuffle; at 100 TB eval scoring is a map over
 (pred, ref) pairs.  NDCG/MRR group a bounded query×rank grid (the
 candidate lists), broadcast against the corpus — the corpus is
 scanned once and never reshuffled.
@@ -25,27 +29,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..api_eval import bleu_components, chrf, rouge_n, wer
 from ..io import table
 from ..api_rank import global_rank_distributed
 from ..registry import query
 
 # ---------------------------------------------------------------- #
-# shared n-gram / multiset-overlap expression builders (SQL strings
-# usable verbatim on BOTH engines via each one's lambda dialect)
+# DuckDB n-gram / multiset-overlap builders for the oracles (the
+# Spark side is api_eval's _ngrams_expr / _overlap_expr)
 # ---------------------------------------------------------------- #
-
-
-def _spark_ngrams(arr: str, n: int) -> str:
-    """Overlapping n-grams of a token array as space-joined strings.
-    Guarded: Spark's sequence(1, 0) yields [1, 0] (auto step -1), so
-    short arrays must short-circuit to array() explicitly."""
-    if n == 1:
-        return arr
-    return (
-        f"CASE WHEN size({arr}) < {n} THEN array() ELSE "
-        f"transform(sequence(1, size({arr}) - {n} + 1), "
-        f"i -> concat_ws(' ', slice({arr}, i, {n}))) END"
-    )
 
 
 def _duck_ngrams(arr: str, n: int) -> str:
@@ -54,16 +46,6 @@ def _duck_ngrams(arr: str, n: int) -> str:
     return (
         f"list_transform(generate_series(1, len({arr}) - {n} + 1), "
         f"i -> array_to_string(list_slice({arr}, i, i + {n} - 1), ' '))"
-    )
-
-
-def _spark_overlap(pred: str, ref: str) -> str:
-    """Multiset overlap: sum over distinct pred grams of
-    min(count_pred, count_ref) — the pipeline_eval_em_f1 kernel."""
-    return (
-        f"aggregate(array_distinct({pred}), 0, (acc, g) -> acc + "
-        f"least(size(filter({pred}, x -> x = g)), "
-        f"size(filter({ref}, x -> x = g))))"
     )
 
 
@@ -117,15 +99,11 @@ FROM s
 
 @query("pipeline_eval_rouge_n", oracle=_ROUGE_SQL, category="pipelines")
 def pipeline_eval_rouge_n(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROUGE-1 / ROUGE-2 recall (Lin 2004) of a prediction against a
-    reference — the summarization-eval staple: multiset n-gram
-    overlap over the reference's gram count.  References are the
-    first 12 tokens of each document; predictions exercise the three
-    regimes (identical -> recall 1; shifted window -> partial;
-    sorted permutation -> ROUGE-1 = 1 but ROUGE-2 near 0, the case
-    that separates the orders).  Overlap counts are exact integers
-    via per-row array lambdas (the em_f1 multiset kernel); one
-    division per metric.  Zero shuffle — a pure map at any scale."""
+    """ROUGE-1 / ROUGE-2 recall (Lin 2004).  References are the first
+    12 tokens of each document; predictions exercise the three
+    regimes (identical -> recall 1; shifted window -> partial; sorted
+    permutation -> ROUGE-1 = 1 but ROUGE-2 near 0, the case that
+    separates the orders).  Thin adapter over api.rouge_n."""
     d = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     ref = F.slice(toks, 1, 12)
@@ -134,32 +112,11 @@ def pipeline_eval_rouge_n(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when((F.col("doc_id") % 3) == 1, F.slice(toks, 5, 12))
         .otherwise(F.reverse(F.array_sort(F.slice(toks, 1, 12))))
     )
-    g = d.select("doc_id", ref.alias("ref"), pred.alias("pred")).select(
-        "doc_id",
-        "ref",
-        "pred",
-        F.expr(_spark_ngrams("ref", 2)).alias("ref2"),
-        F.expr(_spark_ngrams("pred", 2)).alias("pred2"),
-    )
-    s = g.select(
-        "doc_id",
-        F.expr(_spark_overlap("pred", "ref")).cast("long").alias("r1_match"),
-        F.size("ref").cast("long").alias("r1_ref_n"),
-        F.expr(_spark_overlap("pred2", "ref2")).cast("long").alias("r2_match"),
-        F.size("ref2").cast("long").alias("r2_ref_n"),
-    )
+    p = d.select("doc_id", ref.alias("ref"), pred.alias("pred"))
+    s = rouge_n(rouge_n(p, "pred", "ref", n=1), "pred", "ref", n=2)
     return s.select(
-        "doc_id",
-        "r1_match",
-        "r1_ref_n",
-        (F.col("r1_match").cast("double") / F.col("r1_ref_n")).alias(
-            "rouge1_recall"
-        ),
-        "r2_match",
-        "r2_ref_n",
-        (F.col("r2_match").cast("double") / F.col("r2_ref_n")).alias(
-            "rouge2_recall"
-        ),
+        "doc_id", "r1_match", "r1_ref_n", "rouge1_recall",
+        "r2_match", "r2_ref_n", "rouge2_recall",
     )
 
 
@@ -220,15 +177,11 @@ FROM s
 
 @query("pipeline_eval_bleu", oracle=_bleu_oracle(), category="pipelines")
 def pipeline_eval_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BLEU components (Papineni et al. 2002) — clipped (modified)
-    n-gram precisions p1..p4 and the brevity ratio, per example.
-    The final BLEU = BP * exp(mean log p_n) is a driver-side scalar
-    fold over these (exp/ln would break bit-exactness; the
-    COMPONENTS are the distributed computation and ship exact:
-    clipped match counts are the multiset-overlap kernel per order,
-    totals are gram counts, each precision is one int/int division).
-    Predictions exercise identical (all p=1), shifted (partial) and
-    truncated (brevity < 1) regimes.  Zero shuffle."""
+    """BLEU components (Papineni et al. 2002): clipped n-gram
+    precisions p1..p4 and the brevity ratio, per example (the final
+    BP * exp(mean log p_n) is a caller-side scalar fold).  Predictions
+    exercise identical (all p=1), shifted (partial) and truncated
+    (brevity < 1) regimes.  Thin adapter over api.bleu_components."""
     d = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     ref = F.slice(toks, 1, 16)
@@ -237,40 +190,15 @@ def pipeline_eval_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when((F.col("doc_id") % 3) == 1, F.slice(toks, 3, 16))
         .otherwise(F.slice(toks, 1, 10))
     )
-    g = d.select("doc_id", ref.alias("ref"), pred.alias("pred"))
-    for n in range(1, 5):
-        g = g.withColumn(f"ref{n}", F.expr(_spark_ngrams("ref", n))).withColumn(
-            f"pred{n}", F.expr(_spark_ngrams("pred", n))
-        )
-    s = g.select(
-        "doc_id",
-        F.size("pred").cast("long").alias("pred_len"),
-        F.size("ref").cast("long").alias("ref_len"),
-        *[
-            c
-            for n in range(1, 5)
-            for c in (
-                F.expr(_spark_overlap(f"pred{n}", f"ref{n}"))
-                .cast("long")
-                .alias(f"p{n}_match"),
-                F.size(f"pred{n}").cast("long").alias(f"p{n}_total"),
-            )
-        ],
-    )
+    p = d.select("doc_id", ref.alias("ref"), pred.alias("pred"))
+    s = bleu_components(p, "pred", "ref", max_n=4)
     return s.select(
         "doc_id",
         "pred_len",
         "ref_len",
         *[c for n in range(1, 5) for c in (f"p{n}_match", f"p{n}_total")],
-        *[
-            (F.col(f"p{n}_match").cast("double") / F.col(f"p{n}_total")).alias(
-                f"p{n}"
-            )
-            for n in range(1, 5)
-        ],
-        (F.col("pred_len").cast("double") / F.col("ref_len")).alias(
-            "brevity_ratio"
-        ),
+        *[f"p{n}" for n in range(1, 5)],
+        "brevity_ratio",
     )
 
 
@@ -322,16 +250,10 @@ FROM e
 
 @query("pipeline_eval_wer", oracle=_WER_SQL, category="pipelines")
 def pipeline_eval_wer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-level word error rate — the ASR/translation eval metric:
-    Levenshtein distance over TOKEN sequences divided by reference
-    length.  Both engines only ship character-level levenshtein, so
-    each row's token sequences are recoded through a per-row vocab
-    (distinct tokens of ref++pred, <= 48 entries under the 24-token
-    cap) onto single ASCII characters chr(48+idx) — after which
-    char-level levenshtein IS token-level WER, bit-exact in both
-    engines.  Predictions exercise identical (WER 0), shifted,
-    every-3rd-token-deleted and reversed regimes.  Per-row lambdas +
-    one JVM levenshtein call: zero shuffle, a pure map at 100 TB."""
+    """Token-level word error rate.  References are the first 24
+    tokens; predictions exercise identical (WER 0), shifted,
+    every-3rd-token-deleted and reversed regimes.  Thin adapter over
+    api.wer (cap 24, so the per-row vocab stays <= 48 entries)."""
     d = table(spark, sf_dir, "documents")
     cap = _WER_CAP
     # r13 (guide §1.1): token array BOUND as a projected column — the
@@ -350,27 +272,13 @@ def pipeline_eval_wer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when((F.col("doc_id") % 4) == 2, drop3)
         .otherwise(F.reverse(F.slice(toks, 1, cap)))
     )
-    v = dt.select("doc_id", ref.alias("ref"), pred.alias("pred")).withColumn(
-        "vocab", F.array_distinct(F.concat("ref", "pred"))
-    )
-    enc = lambda col: F.expr(
-        f"concat_ws('', transform({col},"
-        " tk -> char(48 + array_position(vocab, tk))))"
-    )
-    e = v.select(
+    p = dt.select("doc_id", ref.alias("ref"), pred.alias("pred"))
+    return wer(p, "pred", "ref", cap=cap).select(
         "doc_id",
         F.size("ref").cast("long").alias("ref_len"),
         F.size("pred").cast("long").alias("pred_len"),
-        enc("ref").alias("enc_ref"),
-        enc("pred").alias("enc_pred"),
-    )
-    dist = F.levenshtein("enc_ref", "enc_pred")
-    return e.select(
-        "doc_id",
-        "ref_len",
-        "pred_len",
-        dist.cast("long").alias("edit_ops"),
-        (dist.cast("double") / F.col("ref_len")).alias("wer"),
+        "edit_ops",
+        "wer",
     )
 
 
@@ -565,14 +473,6 @@ _CHRF_CAP = 40  # chars per side
 _CHRF_BETA2 = 4  # beta = 2, the sacrebleu default
 
 
-def _spark_chargrams(col: str, n: int) -> str:
-    return (
-        f"CASE WHEN length({col}) < {n} THEN array() ELSE "
-        f"transform(sequence(1, length({col}) - {n} + 1), "
-        f"i -> substring({col}, i, {n})) END"
-    )
-
-
 def _duck_chargrams(col: str, n: int) -> str:
     return (
         f"list_transform(generate_series(1, length({col}) - {n} + 1), "
@@ -630,16 +530,11 @@ FROM s
 
 @query("pipeline_eval_chrf", oracle=_chrf_oracle(), category="pipelines")
 def pipeline_eval_chrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """chrF (Popović 2015) — the character n-gram F-score that
-    complements BLEU's token precisions (robust to tokenization and
-    morphology; sacrebleu's chrF2 is the MT-eval standard): per
-    order n = 1..3, the clipped character-gram match count, pred and
-    ref totals (exact multiset overlaps over per-row substring
-    arrays), and the F_beta (beta = 2, recall-weighted) as one
-    fixed-shape expression of the two exact-int ratios — zero-match
-    rows emit 0 explicitly (the sacrebleu convention) so the
-    division never sees 0/0.  The final chrF score is the driver's
-    mean over orders.  Zero shuffle — per-row lambdas only."""
+    """chrF (Popović 2015) components, orders 1..3 with beta = 2: the
+    references are the first 40 characters of each document, the
+    predictions identical, shifted by 5 and truncated to 25 chars.
+    The final chrF score is the caller's mean over orders.  Thin
+    adapter over api.chrf."""
     d = table(spark, sf_dir, "documents")
     ref = F.expr(f"substring(text, 1, {_CHRF_CAP})")
     pred = (
@@ -650,39 +545,12 @@ def pipeline_eval_chrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(F.expr(f"substring(text, 1, {_CHRF_CAP - 15})"))
     )
-    g = d.select("doc_id", ref.alias("ref"), pred.alias("pred"))
-    for n in range(1, 4):
-        g = g.withColumn(
-            f"ref{n}", F.expr(_spark_chargrams("ref", n))
-        ).withColumn(f"pred{n}", F.expr(_spark_chargrams("pred", n)))
-    s = g.select(
-        "doc_id",
-        *[
-            c
-            for n in range(1, 4)
-            for c in (
-                F.expr(_spark_overlap(f"pred{n}", f"ref{n}"))
-                .cast("long")
-                .alias(f"m{n}"),
-                F.size(f"pred{n}").cast("long").alias(f"pt{n}"),
-                F.size(f"ref{n}").cast("long").alias(f"rt{n}"),
-            )
-        ],
-    )
-    b2 = float(_CHRF_BETA2)
-    f_cols = []
-    for n in range(1, 4):
-        p = F.col(f"m{n}").cast("double") / F.col(f"pt{n}")
-        r = F.col(f"m{n}").cast("double") / F.col(f"rt{n}")
-        f_cols.append(
-            F.when(F.col(f"m{n}") == 0, F.lit(0.0))
-            .otherwise((1.0 + b2) * p * r / (F.lit(b2) * p + r))
-            .alias(f"chrf{n}")
-        )
+    p = d.select("doc_id", ref.alias("ref"), pred.alias("pred"))
+    s = chrf(p, "pred", "ref", max_n=3, beta2=_CHRF_BETA2)
     return s.select(
         "doc_id",
         *[c for n in range(1, 4) for c in (f"m{n}", f"pt{n}", f"rt{n}")],
-        *f_cols,
+        *[f"chrf{n}" for n in range(1, 4)],
     )
 
 

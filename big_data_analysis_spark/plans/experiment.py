@@ -15,6 +15,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..api_lsh import (  # the table's names are also read from here by tests
+    _DP_EPS_DEN,
+    _DP_EPS_NUM,
+    _DP_TRUNC,
+    _DP_UBITS,
+    _dp_noise_case,
+    _dp_thresholds,
+    dp_noisy_counts,
+)
 from ..io import table
 from ..registry import query
 from ..operators.stats_ext import _CENTS_SQL, _GRID_SQL, _day_grid
@@ -544,46 +553,6 @@ def pipeline_group_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
 # differentially-private histogram release (r11 wave 1)
 # ------------------------------------------------------------------ #
 
-_DP_EPS_NUM, _DP_EPS_DEN = 1, 1  # epsilon = 1 (sensitivity 1 per count)
-_DP_TRUNC = 8  # two-sided geometric truncated at +/-8 (renormalized)
-_DP_UBITS = 40  # uniform draw: top 40 bits of md5 -> [0, 2^40)
-
-
-def _dp_thresholds() -> list[tuple[int, int]]:
-    """Inverse-CDF thresholds of the truncated two-sided geometric
-    (discrete Laplace) with alpha = exp(-eps), as EXACT int64
-    literals over the 2^40 uniform space — computed once at import
-    from the same closed form on both sides, so the noise drawn for
-    a given md5 uniform is identical cross-engine (no transcendental
-    evaluated inside either engine)."""
-    import math
-
-    a = math.exp(-_DP_EPS_NUM / _DP_EPS_DEN)
-    ks = list(range(-_DP_TRUNC, _DP_TRUNC + 1))
-    probs = [(1 - a) / (1 + a) * a ** abs(k) for k in ks]
-    tot = sum(probs)
-    u_max = 1 << _DP_UBITS
-    out, cum = [], 0.0
-    for k, p in zip(ks, probs):
-        cum += p / tot
-        out.append((k, min(u_max, round(cum * u_max))))
-    out[-1] = (out[-1][0], u_max)
-    return out
-
-
-def _dp_noise_case(u: str) -> str:
-    """CASE ladder mapping a 40-bit uniform to its geometric noise —
-    identical SQL text on both engines."""
-    return (
-        "CASE "
-        + " ".join(
-            f"WHEN {u} < {t} THEN CAST({k} AS BIGINT)"
-            for k, t in _dp_thresholds()
-        )
-        + " END"
-    )
-
-
 _DP_SHARED = """
 WITH base AS (
   SELECT event_type, {dow} AS dow, CAST(COUNT(*) AS BIGINT) AS true_cnt
@@ -614,45 +583,15 @@ def _dp_oracle() -> str:
 
 @query("pipeline_dp_histogram", oracle=_dp_oracle(), category="pipelines")
 def pipeline_dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Epsilon-DP histogram release (the aggregate-statistics export a
-    training-data pipeline publishes about a private corpus): per
-    (event_type, weekday) counts plus two-sided-geometric noise — the
-    discrete Laplace mechanism, the integer-valued mechanism of
-    Ghosh-Roughgarden-Sundararajan — drawn by inverse CDF from a
-    40-bit md5 uniform keyed on the released cell.  The CDF is a
-    17-entry EXACT integer literal table (alpha = e^-1 evaluated once
-    in Python at import), so no engine ever evaluates exp/ln and the
-    release is hash-exact cross-engine while still being a faithful
-    geometric sample per cell.  Released counts clamp at 0
-    (post-processing keeps DP).  Deterministic salt = cell key: the
-    demo trades the secret seed for replayability — swap the salt
-    for a vault secret in production, nothing else changes.
-
-    Execution shape: one groupBy over the bounded (type x weekday)
-    domain (map-side partial agg — the only data-proportional
-    stage), then a per-row literal CASE ladder; at 100 TB the noise
-    addition costs nothing beyond the count itself."""
-    ev = table(spark, sf_dir, "events")
-    base = (
-        ev.groupBy(
-            "event_type",
-            F.expr("CAST(dayofweek(ts) AS BIGINT)").alias("dow"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("true_cnt"))
+    """Epsilon-DP (eps = 1) histogram release of the per (event_type,
+    weekday) event counts, with the absolute noise as the audit
+    column.  Spark's dayofweek is 1=Sunday..7 (the oracle shifts
+    DuckDB's 0..6).  Thin adapter over api.dp_noisy_counts."""
+    ev = table(spark, sf_dir, "events").select(
+        "event_type", F.expr("CAST(dayofweek(ts) AS BIGINT)").alias("dow")
     )
-    u = (
-        "CAST(conv(substring(md5(concat('dp|', event_type, '|',"
-        " CAST(dow AS STRING))), 1, 10), 16, 10) AS BIGINT)"
+    return (
+        dp_noisy_counts(ev, ["event_type", "dow"])
+        .withColumn("abs_err", F.abs("noise"))
+        .orderBy("event_type", "dow")
     )
-    noised = base.withColumn("u", F.expr(u))
-    noise = _dp_noise_case("u")
-    return noised.select(
-        "event_type",
-        "dow",
-        "true_cnt",
-        F.expr(noise).alias("noise"),
-        F.expr(
-            f"GREATEST(CAST(0 AS BIGINT), true_cnt + ({noise}))"
-        ).alias("released_cnt"),
-        F.expr(f"ABS({noise})").alias("abs_err"),
-    ).orderBy("event_type", "dow")

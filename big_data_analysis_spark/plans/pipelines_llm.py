@@ -67,19 +67,11 @@ FROM s
     category="pipelines",
 )
 def pipeline_eval_em_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LLM EVAL-harness scoring — exact-match and token-level F1 of a
-    prediction against a reference, the per-example metrics every
-    generation benchmark reduces to. References are the first 6
-    tokens of each document; predictions are a deterministic
-    perturbation exercising all three regimes (identical -> EM=1;
-    shifted window -> partial F1; sorted-descending permutation ->
-    EM=0 but F1=1, the case that separates the two metrics).
-
-    Token F1 uses the MULTISET overlap (sum over distinct predicted
-    tokens of min(count_pred, count_ref)) computed entirely in
-    per-row array lambdas — zero explode, zero shuffle: at 100 TB
-    eval scoring is a pure map over (pred, ref) pairs. The one
-    division per row is the only float op (2*overlap/denom)."""
+    """LLM eval-harness exact-match and token F1.  References are the
+    first 6 tokens of each document; predictions exercise all three
+    regimes (identical -> EM=1; shifted window -> partial F1;
+    sorted-descending permutation -> EM=0 but F1=1, the case that
+    separates the two metrics).  Thin adapter over api.token_f1."""
     d = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     ref = F.slice(toks, 1, 6)
@@ -89,21 +81,8 @@ def pipeline_eval_em_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.reverse(F.array_sort(F.slice(toks, 1, 6))))
     )
     p = d.select("doc_id", ref.alias("ref"), pred.alias("pred"))
-    count_in = lambda arr, tk: F.size(F.filter(arr, lambda x: x == tk))
-    overlap = F.aggregate(
-        F.array_distinct(F.col("pred")),
-        F.lit(0),
-        lambda acc, tk: acc
-        + F.least(count_in(F.col("pred"), tk), count_in(F.col("ref"), tk)),
-    ).cast("long")
-    denom = (F.size("pred") + F.size("ref")).cast("long")
-    s = p.select("doc_id", "ref", "pred", overlap.alias("overlap"), denom.alias("denom"))
-    return s.select(
-        "doc_id",
-        (F.array_join("pred", " ") == F.array_join("ref", " ")).cast("int").alias("em"),
-        "overlap",
-        "denom",
-        ((F.lit(2) * F.col("overlap")).cast("double") / F.col("denom")).alias("f1"),
+    return api.token_f1(p, "pred", "ref").select(
+        "doc_id", "em", "overlap", "denom", "f1"
     )
 
 
@@ -130,34 +109,17 @@ FROM q
     category="pipelines",
 )
 def pipeline_kanonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K-ANONYMITY audit — the privacy gate before a data release:
-    group rows by their quasi-identifier tuple (nation, market
-    segment, coarse balance band) and report how many equivalence
-    classes fall below k=5, how many rows those classes contain (the
-    suppression/generalization workload), and the minimum class size
-    (the release's actual k). The one-row ledger a release pipeline
-    asserts on, next to pipeline_dq_checks.
-
-    Shape: one hash-agg on the quasi-id tuple, then a scalar
-    reduction over the (bounded) class table — at 100 TB the class
-    count is capped by the quasi-id domain, not the row count."""
+    """K-anonymity release audit at k=5 over the customer
+    quasi-identifier tuple (nation, market segment, coarse balance
+    band neg/low/high).  Thin adapter over api.kanonymity."""
     c = table(spark, sf_dir, "customer")
     band = (
         F.when(F.col("c_acctbal") < 0, "neg")
         .when(F.col("c_acctbal") < 5000, "low")
         .otherwise("high")
     )
-    q = c.groupBy("c_nationkey", "c_mktsegment", band.alias("bal_band")).agg(
-        F.count(F.lit(1)).alias("grp_n")
-    )
-    below = F.col("grp_n") < 5
-    return q.agg(
-        F.count(F.lit(1)).alias("n_classes"),
-        F.sum(below.cast("int")).cast("long").alias("n_classes_below_k"),
-        F.sum(F.when(below, F.col("grp_n")).otherwise(0)).alias("n_rows_to_suppress"),
-        F.min("grp_n").alias("min_class_size"),
-        F.sum("grp_n").alias("n_rows"),
-    )
+    q = c.select("c_nationkey", "c_mktsegment", band.alias("bal_band"))
+    return api.kanonymity(q, ["c_nationkey", "c_mktsegment", "bal_band"], k=5)
 
 
 @query("pipeline_incremental_minhash", oracle=None, category="pipelines")
@@ -395,13 +357,11 @@ FROM m
     category="pipelines",
 )
 def pipeline_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-classifier CONFUSION MATRIX — the third leg of the eval
-    family (EM/F1, calibration, now thresholded classification): the
-    deterministic pseudo-confidence thresholds at 0.5 against the
-    purchase outcome, and TP/FP/FN/TN are exact integer sums;
-    precision/recall/F1 are single divisions over those integers
-    (F1 via the 2TP identity, avoiding a float p·r intermediate).
-    One global agg, map-side partials — scan-speed at any size."""
+    """Binary-classifier confusion matrix: the prediction is the
+    event value's cents >= 50 (a deterministic pseudo-confidence
+    thresholded at 0.5), the label is the purchase outcome.  Thin
+    adapter over api.confusion_matrix; precision/recall are renamed
+    precision_/recall_."""
     e = table(spark, sf_dir, "events")
     pred = (
         ((F.col("value").cast("decimal(18,2)") * 100).cast("long") % 100 >= 50)
@@ -409,23 +369,8 @@ def pipeline_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("pred")
     )
     actual = (F.col("event_type") == "purchase").cast("int").alias("actual")
-    s = e.select(pred, actual)
-    m = s.agg(
-        F.sum(F.col("pred") * F.col("actual")).alias("tp"),
-        F.sum(F.col("pred") * (1 - F.col("actual"))).alias("fp"),
-        F.sum((1 - F.col("pred")) * F.col("actual")).alias("fn"),
-        F.sum((1 - F.col("pred")) * (1 - F.col("actual"))).alias("tn"),
-    )
-    tp, fp, fn, tn = F.col("tp"), F.col("fp"), F.col("fn"), F.col("tn")
-    return m.select(
-        "tp",
-        "fp",
-        "fn",
-        "tn",
-        (tp.cast("double") / F.nullif(tp + fp, F.lit(0))).alias("precision_"),
-        (tp.cast("double") / F.nullif(tp + fn, F.lit(0))).alias("recall_"),
-        ((2 * tp).cast("double") / F.nullif(2 * tp + fp + fn, F.lit(0))).alias("f1"),
-    )
+    m = api.confusion_matrix(e.select(pred, actual), "pred", "actual")
+    return m.withColumnsRenamed({"precision": "precision_", "recall": "recall_"})
 
 
 def _bpe_chain_expr(text_expr: str = "text") -> str:
