@@ -189,9 +189,7 @@ def main() -> int:
 
     execute(reg["tpch_q1"].fn(spark, sf_dir))  # untimed JVM warmup
 
-    from big_data_analysis_spark.operators.windows import (
-        release_kernel_persists,
-    )
+    from big_data_analysis_spark.lifecycle import release_kernel_persists
 
     times: dict[str, float] = {}
     for name in BENCH_QUERIES:
@@ -201,15 +199,16 @@ def main() -> int:
             execute(reg[name].fn(spark, sf_dir))
             runs.append(time.monotonic() - t0)
         times[name] = round(sorted(runs)[1], 3)
-        # Free kernel persists BETWEEN queries, not between runs:
+        # Free what the package persisted or checkpointed (everything
+        # it handed to lifecycle) BETWEEN queries, not between runs:
         # Spark's CacheManager matches the canonicalized plan, so
         # runs 2-3 of the same query legitimately reuse run 1's
-        # materialized blocks (the era baseline was measured that
-        # way); releasing per-run forces a cold re-materialization
-        # and inflates the kernel queries ~2-3x. Between queries the
+        # persisted blocks (the era baseline was measured that way);
+        # releasing per-run forces a cold re-materialization and
+        # inflates the kernel queries ~2-3x. Between queries the
         # blocks are dead weight — releasing there keeps executor
-        # memory flat across the 46-query suite without changing
-        # what the median measures.
+        # memory flat across the suite without changing what the
+        # median measures.
         release_kernel_persists()
 
     total = round(sum(times.values()), 3)

@@ -22,6 +22,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import lifecycle
 
 
 # ---------------------------------------------------------------- text
@@ -320,14 +321,16 @@ def bpe_train(
     semantics. Returns (step, left, right, merged, freq)."""
     import re as _re
 
-    w = words.toDF("word", "freq").select(
-        F.concat(
-            F.lit(" "),
-            F.trim(F.regexp_replace(F.col("word"), "(.)", "$1 ")),
-            F.lit(" "),
-        ).alias("syms"),
-        "freq",
-    ).localCheckpoint()
+    w = lifecycle.checkpoint(
+        words.toDF("word", "freq").select(
+            F.concat(
+                F.lit(" "),
+                F.trim(F.regexp_replace(F.col("word"), "(.)", "$1 ")),
+                F.lit(" "),
+            ).alias("syms"),
+            "freq",
+        )
+    )
 
     merges = []
     for step in range(1, n_merges + 1):
@@ -360,10 +363,12 @@ def bpe_train(
         # semantics) — escape both so non-alphanumeric vocabularies
         # merge literally instead of corrupting the symbol stream.
         repl = (left + right).replace("\\", "\\\\").replace("$", "\\$")
-        w = w.select(
-            F.regexp_replace(F.col("syms"), pat, repl).alias("syms"),
-            "freq",
-        ).localCheckpoint()
+        w = lifecycle.checkpoint(
+            w.select(
+                F.regexp_replace(F.col("syms"), pat, repl).alias("syms"),
+                "freq",
+            )
+        )
     return spark.createDataFrame(
         merges, "step int, left string, right string, merged string, freq bigint"
     )
@@ -446,7 +451,9 @@ def knn_brute(
     product, then cut per query with a rank window (deterministic
     neighbor-id tie-break). Returns (query_id, neighbor_id, cosine).
     This is the recall oracle the LSH/IVF approximate paths are
-    tested against."""
+    tested against.  ``k`` must be >= 1 (ValueError otherwise)."""
+    if k < 1:
+        raise ValueError(f"knn_brute: k must be >= 1, got {k}")
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qe")
     )
@@ -1092,7 +1099,10 @@ def maxsim(
     of the max dot against any of its vectors. Returns the top-k
     (doc_col, rank, maxsim). All arithmetic is exact int64
     (1e-6-quantized) until one final division; the global top-k is
-    a TakeOrdered, never a single-task sort."""
+    a TakeOrdered, never a single-task sort.  ``k`` must be >= 1
+    (ValueError otherwise)."""
+    if k < 1:
+        raise ValueError(f"maxsim: k must be >= 1, got {k}")
     q = queries.select(
         F.monotonically_increasing_id().alias("__qid"),
         quantize_vec(F.col(vec_col)).alias("__qe"),
@@ -1158,13 +1168,12 @@ def link_prediction(edges: DataFrame, a_col: str, b_col: str) -> DataFrame:
     join in broadcast-able.  Hub-degree capping is the caller's
     contract on web-scale graphs (see dedup_ngram_jaccard's
     stop-gram cap for the pattern)."""
-    u = (
+    u = lifecycle.checkpoint(
         edges.select(
             F.least(a_col, b_col).alias("a"), F.greatest(a_col, b_col).alias("b")
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n = u.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionAll(
         u.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
@@ -1278,7 +1287,8 @@ def weighted_sample(
     ln(u)/weight, and the k LARGEST keys are the sample — provably
     equivalent to sequential weighted draws without replacement.
     Rows with weight <= 0 are excluded (A-ES is undefined there).
-    Returns (id, weight, u, key) for the sampled rows.
+    ``k`` must be >= 1 (ValueError otherwise).  Returns (id, weight,
+    u, key) for the sampled rows.
 
     The importance-sampling primitive of a data-mixing recipe (draw
     documents proportional to quality score / token count) — unlike
@@ -1288,6 +1298,8 @@ def weighted_sample(
     per-partition RNG coordination, scan-speed at 100 TB.  ⊘ class:
     ln() is libm, so cross-engine equality is 1-ulp, not bit-exact —
     tests assert NumPy agreement and exact sample-set equality."""
+    if k < 1:
+        raise ValueError(f"weighted_sample: k must be >= 1, got {k}")
     h = F.pmod(F.col(id_col).bitwiseAND(2147483647) * F.lit(2654435761), F.lit(4294967296))
     u = (h + 1).cast("double") / F.lit(4294967297.0)
     key = F.log(u) / F.col(weight_col).cast("double")
@@ -1306,11 +1318,11 @@ def weighted_sample(
 
 def walk_adjacency(edges: DataFrame, a_col: str, b_col: str) -> DataFrame:
     """Build the PERSISTED adjacency frame random_walk iterates
-    over: the undirected edge set folded to one row per node with
-    the ascending UNIQUE-neighbor array (array_distinct inside the
-    fold — an input carrying both orientations of an edge, or a
-    self-loop, must still yield each neighbor once; degree is the
-    count of unique neighbors).
+    over (owned by ``lifecycle``): the undirected edge set folded
+    to one row per node with the ascending UNIQUE-neighbor array
+    (array_distinct inside the fold — an input carrying both
+    orientations of an edge, or a self-loop, must still yield each
+    neighbor once; degree is the count of unique neighbors).
 
     r13 (guide §2.4/§5, measured): this replaced a bucketBy-table
     write.  The r8-r12 shape paid a parquet write + Hive-metastore
@@ -1327,10 +1339,10 @@ def walk_adjacency(edges: DataFrame, a_col: str, b_col: str) -> DataFrame:
     bucketed table once at ingest."""
     u = edges.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
     und = u.unionAll(u.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    return (
-        und.groupBy(F.col("a").alias("node"))
-        .agg(F.sort_array(F.array_distinct(F.collect_list("b"))).alias("nbrs"))
-        .persist()
+    return lifecycle.persist(
+        und.groupBy(F.col("a").alias("node")).agg(
+            F.sort_array(F.array_distinct(F.collect_list("b"))).alias("nbrs")
+        )
     )
 
 
@@ -1448,20 +1460,18 @@ def random_walk(
     parquet write + metastore round-trip per run).  Each frontier is
     lazily persisted so the step unions share one materialization
     under a single driving action instead of one eager checkpoint
-    job per step.  All persists are registered with the kernel
-    registry (released between bench queries).  The neighbor pick is
+    job per step.  All persists are owned by ``lifecycle``
+    (released between bench queries).  The neighbor pick is
     element_at(nbrs, idx+1) — no window, no row_number stage.
     Hub-node arrays are the skew caveat — cap or sample mega-hub
     neighbor lists upstream if degree is unbounded."""
-    from .operators.windows import _register_persist
-
-    adj = _register_persist(walk_adjacency(edges, a_col, b_col))
-    walks = _register_persist(
+    adj = walk_adjacency(edges, a_col, b_col)
+    walks = lifecycle.persist(
         adj.select(
             F.col("node").alias("walker_id"),
             F.lit(0).alias("step"),
             F.col("node"),
-        ).persist()
+        )
     )
     frontier = walks
     for t in range(1, steps + 1):
@@ -1469,16 +1479,14 @@ def random_walk(
             F.col("walker_id") * 1000003 + F.col("node") * 97 + F.lit(t) * 31,
             F.lit(2147483647),
         )
-        nxt = _register_persist(
-            frontier.join(adj, "node")
-            .select(
+        nxt = lifecycle.persist(
+            frontier.join(adj, "node").select(
                 "walker_id",
                 F.lit(t).alias("step"),
                 F.element_at(
                     "nbrs", (F.pmod(mix, F.size("nbrs")) + 1).cast("int")
                 ).alias("node"),
             )
-            .persist()
         )
         walks = walks.unionAll(nxt)
         frontier = nxt
@@ -1509,7 +1517,7 @@ def modularity(
     # intra rollup and the degree rollup) — without it the distinct +
     # double label join re-executes per branch (same discipline as
     # label_propagation / k_core)
-    tagged = u.join(la, "a").join(lb, "b").localCheckpoint(eager=True)
+    tagged = lifecycle.checkpoint(u.join(la, "a").join(lb, "b"))
     m_edges = tagged.count()
     intra = (
         tagged.where(F.col("la") == F.col("lb"))
@@ -1715,9 +1723,11 @@ def kmeans_lloyd(
     fixpointed; a nonzero value makes non-convergence VISIBLE in the
     graded output instead of silently reporting a mid-trajectory
     state."""
-    q = df.select(
-        F.col(id_col).alias("__id"), quantize_vec(F.col(vec_col)).alias("xq")
-    ).persist()
+    q = lifecycle.persist(
+        df.select(
+            F.col(id_col).alias("__id"), quantize_vec(F.col(vec_col)).alias("xq")
+        )
+    )
     cents = [
         r["xq"]
         for r in q.orderBy("__id").limit(k).collect()
@@ -1749,9 +1759,9 @@ def kmeans_lloyd(
     prev_assign = None
     for r_idx in range(rounds):
         if certificate and r_idx == rounds - 1:
-            prev_assign = q.select(
-                "__id", assign_col()["c"].alias("c_prev")
-            ).localCheckpoint(eager=True)
+            prev_assign = lifecycle.checkpoint(
+                q.select("__id", assign_col()["c"].alias("c_prev"))
+            )
         a = q.select("xq", assign_col().alias("b"))
         sums = (
             a.select(F.col("b")["c"].alias("cl"), F.posexplode("xq"))
@@ -1795,8 +1805,8 @@ def kmeans_lloyd(
             )
         )
         res = res.crossJoin(F.broadcast(cert))
-    res = res.localCheckpoint(eager=True)
-    q.unpersist()
+    res = lifecycle.checkpoint(res)
+    lifecycle.free(q)
     return res
 
 

@@ -11,6 +11,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import lifecycle
+
+
 def _ngrams_expr(arr: str, n: int) -> str:
     """Overlapping n-grams of a token-array column as space-joined
     strings (guarded: Spark's sequence(1, 0) yields [1, 0])."""
@@ -104,7 +107,8 @@ def wer(
     both sides are capped at `cap` tokens, recoded through the
     per-row vocab (<= 2*cap distinct entries) onto single ASCII
     chars, and scored with the JVM levenshtein — char-level distance
-    on the recode IS token-level WER.  Adds edit_ops / wer.  Keep
+    on the recode IS token-level WER.  Adds edit_ops and
+    wer = edit_ops / ref length (NULL for an empty reference).  Keep
     2*cap <= 200 so every code point stays a single char."""
     if 2 * cap > 200:
         raise ValueError("cap too large for single-char recoding")
@@ -120,13 +124,13 @@ def wer(
         .withColumn("__ep", enc(p))
         .withColumn("__er", enc(r))
     )
-    dist = F.levenshtein("__er", "__ep")
     return (
-        out.withColumn("edit_ops", dist.cast("long"))
+        out.withColumn("edit_ops", F.levenshtein("__er", "__ep").cast("long"))
         .withColumn(
             "wer",
             F.when(
-                F.size(r) > 0, dist.cast("double") / F.size(r).cast("double")
+                F.size(r) > 0,
+                F.col("edit_ops").cast("double") / F.size(r).cast("double"),
             ),
         )
         .drop(p, r, v, "__ep", "__er")
@@ -242,11 +246,10 @@ def bloom_prefilter(
     bits = b.select(F.explode("__pos").alias("pos")).distinct()
     # assign the row id ONCE and checkpoint it: two separately-derived
     # monotonically_increasing_id lineages are not guaranteed to agree
-    p = (
+    p = lifecycle.checkpoint(
         probe.withColumn("__h", F.md5(key_col))
         .withColumn("__pos", F.expr(arr))
         .withColumn("__rid", F.monotonically_increasing_id())
-        .localCheckpoint(eager=True)
     )
     hits = (
         p.select("__rid", F.explode("__pos").alias("pos"))

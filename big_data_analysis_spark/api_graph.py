@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import lifecycle
 from .fixpoint import counted_checkpoint, fixpoint
 
 
@@ -113,8 +114,8 @@ def connected_components(pairs: DataFrame, id_name: str) -> DataFrame:
     budget is the node count: min-label converges within
     diameter + 1 <= n rounds, so the loop always reaches the fixpoint."""
     a, b = pairs.columns
-    edges = (
-        pairs.union(pairs.select(F.col(b), F.col(a))).toDF("src", "dst").persist()
+    edges = lifecycle.persist(
+        pairs.union(pairs.select(F.col(b), F.col(a))).toDF("src", "dst")
     )
     labels, n = counted_checkpoint(
         edges.select(F.col("src").alias(id_name))
@@ -128,7 +129,7 @@ def connected_components(pairs: DataFrame, id_name: str) -> DataFrame:
         max_rounds=n,
         changed=_n_flagged(F.col("__delta")),
     )
-    edges.unpersist()
+    lifecycle.free(edges)
     return labels.select(id_name, "label")
 
 
@@ -148,12 +149,12 @@ def pagerank(
     first.  Rounds run through ``fixpoint``; the dangling mass is a
     1-row aggregate folded in as a broadcast crossJoin, never a driver
     collect."""
-    e = edges.toDF("src", "dst").persist()
-    nodes = _nodes(e).persist()
+    e = lifecycle.persist(edges.toDF("src", "dst"))
+    nodes = lifecycle.persist(_nodes(e))
     n = nodes.count()
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    dang = nodes.join(deg, nodes.node == deg.src, "left_anti").persist()
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint()
+    dang = lifecycle.persist(nodes.join(deg, nodes.node == deg.src, "left_anti"))
+    ranks = lifecycle.checkpoint(nodes.withColumn("rank", F.lit(1.0 / n)))
 
     def step(ranks: DataFrame) -> DataFrame:
         dmass = ranks.join(dang, "node", "left_semi").agg(
@@ -188,9 +189,9 @@ def pagerank(
         max_rounds=iters,
         changed=_n_flagged(F.abs(F.col("rank") - F.col("prev")) >= tol),
     )
-    e.unpersist()
-    nodes.unpersist()
-    dang.unpersist()
+    lifecycle.free(e)
+    lifecycle.free(nodes)
+    lifecycle.free(dang)
     return ranks.select("node", "rank", F.lit(n_moved == 0).alias("converged"))
 
 
@@ -239,15 +240,13 @@ def label_propagation(
     Shape per half-round: one shuffle joining the label table to the
     adjacency on the neighbor key + one (node, label) count-argmax
     aggregation; rounds run through ``fixpoint``."""
-    u = edges.select(
-        F.col(a_col).alias("a"), F.col(b_col).alias("b")
-    ).distinct().localCheckpoint(eager=True)
+    u = lifecycle.checkpoint(
+        edges.select(F.col(a_col).alias("a"), F.col(b_col).alias("b")).distinct()
+    )
     a_nodes = u.select(F.col("a").alias("node")).distinct()
     b_nodes = u.select(F.col("b").alias("node")).distinct()
-    labels = (
-        a_nodes.unionAll(b_nodes)
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=True)
+    labels = lifecycle.checkpoint(
+        a_nodes.unionAll(b_nodes).select("node", F.col("node").alias("label"))
     )
     # adjacency oriented "update DST from SRC": b<-a then a<-b
     adj_b = u.select(F.col("b").alias("node"), F.col("a").alias("nbr"))

@@ -21,6 +21,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import lifecycle
+
 
 def lsh_cells(
     df: DataFrame, id_col: str, keys: Sequence[Column], carry: Sequence[str] = ()
@@ -288,21 +290,19 @@ def _minhash_token_pairs(
         numFeatures=num_features,
         binary=True,
     )
-    feats = (
-        tf.transform(d)
-        .select(id_col, "features")
-        .localCheckpoint(eager=True)
-    )
+    feats = lifecycle.checkpoint(tf.transform(d).select(id_col, "features"))
     mh = MinHashLSH(
         inputCol="features", outputCol="hashes", numHashTables=num_tables, seed=seed
     ).fit(feats)
     bkts = F.unwrap_udt("features")["indices"]
-    cells = lsh_cells(
-        mh.transform(feats).withColumn("n", F.size(bkts)),
-        id_col,
-        [vector_to_array(F.col("hashes")[t])[0] for t in range(num_tables)],
-        ["n"],
-    ).localCheckpoint(eager=True)
+    cells = lifecycle.checkpoint(
+        lsh_cells(
+            mh.transform(feats).withColumn("n", F.size(bkts)),
+            id_col,
+            [vector_to_array(F.col("hashes")[t])[0] for t in range(num_tables)],
+            ["n"],
+        )
+    )
     elems = feats.select(id_col, F.explode(bkts).alias("bkt"))
     i = F.col("inter_cnt").cast("double")
     dist = F.lit(1.0) - i / ((F.col("n_a") + F.col("n_b")).cast("double") - i)

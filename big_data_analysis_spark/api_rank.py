@@ -17,6 +17,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import lifecycle
+
 
 def _range_prefix(
     df: DataFrame,
@@ -32,8 +34,6 @@ def _range_prefix(
     group's earlier partitions, NULL for its first) and ``__n`` (the
     group's ``total``).  ``group_cols + order_cols`` must be a total
     order; a NULL group key is a group of its own, as in PARTITION BY."""
-    from .operators.windows import _register_persist
-
     keep = df.columns
     pid = F.spark_partition_id()
     part = df.repartitionByRange(num_partitions, *group_cols, *order_cols).select(
@@ -45,9 +45,9 @@ def _range_prefix(
     )
     # The offsets rollup forks the DAG: without the persist everything
     # upstream evaluates once per branch (quadratic when kernels chain,
-    # as rfm's three scores do).  Registered so release_kernel_persists()
-    # frees it between queries; correctness never depends on the cache.
-    part = _register_persist(part.persist())
+    # as rfm's three scores do).  Freed between queries by
+    # lifecycle.release_kernel_persists(); correctness never depends on it.
+    part = lifecycle.persist(part)
     # the rollup's keys are renamed so the join below needs no aliases
     gkeys = [f"__g{i}" for i in range(len(group_cols))]
     groups = Window.partitionBy(*gkeys)

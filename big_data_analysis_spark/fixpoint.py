@@ -9,6 +9,8 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from . import lifecycle
+
 
 def fixpoint(
     name: str,
@@ -28,7 +30,11 @@ def fixpoint(
     the count comes back from the same jobs that fill the checkpoint
     and lineage stays one round deep.  The checkpoint must be eager:
     a lazy one leaves the observation unfilled until a later action,
-    which reads the checkpoint and not the observed plan.
+    which reads the checkpoint and not the observed plan.  At most two
+    rounds stay in memory: once round k exists, round k-2's checkpoint
+    is freed (``lifecycle.free``).  The caller's seed is never freed,
+    and the returned ``state`` and ``prev`` are released by
+    ``lifecycle.release_kernel_persists`` with the rest of the query.
 
     A semi-naive step (SSSP, min-label, longest path) relaxes only from
     the rows flagged in the round before; for min/max-plus relaxation
@@ -61,7 +67,9 @@ def fixpoint(
             sc.setJobDescription(f"{name} round {rounds}")
             obs = Observation()
             nxt = step(state).observe(obs, changed.alias("n_changed"))
-            prev, state = state, nxt.localCheckpoint(eager=True)
+            older, prev, state = prev, state, lifecycle.checkpoint(nxt)
+            if rounds > 2:  # ``older`` is round rounds-2, not the seed
+                lifecycle.free(older)
             n_changed = obs.get["n_changed"]
             if not n_changed:
                 break
@@ -75,5 +83,5 @@ def counted_checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
     by the jobs that fill the checkpoint: a seed state sizes its
     ``max_rounds`` budget without a separate count job."""
     obs = Observation()
-    cp = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    cp = lifecycle.checkpoint(df.observe(obs, F.count(F.lit(1)).alias("n")))
     return cp, obs.get["n"]

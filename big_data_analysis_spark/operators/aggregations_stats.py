@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..exact import davg, dsum
 from .. import api
+from .. import lifecycle
 from ..io import table
 from ..registry import query
 
@@ -427,15 +428,17 @@ def agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = table(spark, sf_dir, "events").where(F.col("event_type") == "purchase")
     cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-    v = global_rank_distributed(
-        ev.select(cents.alias("cents"), "event_id"), ["event_id"], "rk"
-    ).select(
-        "cents", (F.col("rk") - 1).alias("i")
-    ).crossJoin(
-        F.broadcast(
-            ev.agg(F.count(F.lit(1)).cast("long").alias("n"))
+    v = lifecycle.persist(
+        global_rank_distributed(
+            ev.select(cents.alias("cents"), "event_id"), ["event_id"], "rk"
+        ).select(
+            "cents", (F.col("rk") - 1).alias("i")
+        ).crossJoin(
+            F.broadcast(
+                ev.agg(F.count(F.lit(1)).cast("long").alias("n"))
+            )
         )
-    ).persist()
+    )
     h0 = (F.col("b") * F.col("n") + F.col("i")) % _BOOT_MOD
     h1 = (F.shiftright(h0, 16).bitwiseXOR(h0) * _BOOT_MIX) % _BOOT_MOD
     h2 = (F.shiftright(h1, 16).bitwiseXOR(h1) * _BOOT_MIX) % _BOOT_MOD
@@ -482,8 +485,8 @@ def agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(_BOOT_B).cast("long").alias("n_replicates"),
         )
     )
-    result = out.localCheckpoint(eager=True)
-    v.unpersist()
+    result = lifecycle.checkpoint(out)
+    lifecycle.free(v)
     return result
 
 

@@ -29,6 +29,7 @@ from ..api_lsh import (
     minhash_band_keys,
     pair_overlap,
 )
+from .. import lifecycle
 from ..io import spread_table, table
 from ..registry import query
 
@@ -98,9 +99,8 @@ def _grams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The gram table feeds FOUR consumers inside one query (doc sizes,
     gram df, both pair-join sides), so it is persisted — but built
-    and registered PER CALL with the kernel-persist registry
-    (released between bench queries, like every other kernel
-    intermediate), not memoized at module level keyed on sf_dir:
+    and handed to ``lifecycle`` PER CALL (released between bench
+    queries, like every other kernel intermediate), not memoized at module level keyed on sf_dir:
     a cross-query module cache would let later queries skip the
     corpus explode entirely, which the bench protocol counts as
     result caching, not optimization.  Runs 2-3 of the SAME query
@@ -108,8 +108,6 @@ def _grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching, the documented bench policy.  (At 100 TB:
     MEMORY_AND_DISK, or a checkpointed table shared by the whole
     dedup stage.)"""
-    from .windows import _register_persist
-
     d = table(spark, sf_dir, "documents").select(
         "doc_id", _tokens().alias("toks")
     )
@@ -127,8 +125,8 @@ def _grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams_arr = F.when(n_toks >= 3, F.array_distinct(tri)).otherwise(
         F.array().cast("array<string>")
     )
-    return _register_persist(
-        d.select("doc_id", F.explode(grams_arr).alias("gram")).persist()
+    return lifecycle.persist(
+        d.select("doc_id", F.explode(grams_arr).alias("gram"))
     )
 
 
@@ -158,9 +156,9 @@ def _gram_pair_counts(grams: DataFrame, df_cap: int) -> DataFrame:
         .where(F.col("df") > df_cap)
         .select("gram")
     )
-    kept = grams.join(
-        F.broadcast(hot_grams), "gram", "left_anti"
-    ).localCheckpoint(eager=True)
+    kept = lifecycle.checkpoint(
+        grams.join(F.broadcast(hot_grams), "gram", "left_anti")
+    )
     g1, g2 = kept.alias("g1"), kept.hint("shuffle_hash").alias("g2")
     return (
         g1.join(
@@ -1297,13 +1295,13 @@ def dedup_minhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     its broadcast-semi filter must reach the parquet scan, and a
     repartition between them would shuffle the whole corpus."""
     d = table(spark, sf_dir, "documents")
-    sig = _mhx_signatures(
-        spread_table(spark, sf_dir, "documents", "doc_id")
-    ).localCheckpoint(eager=True)
+    sig = lifecycle.checkpoint(
+        _mhx_signatures(spread_table(spark, sf_dir, "documents", "doc_id"))
+    )
     bands = minhash_band_keys(_MHX_K, _MHX_K // _MHX_BANDS)
-    cand = lsh_candidates(
-        lsh_cells(sig, "doc_id", bands, ["n_sh"])
-    ).localCheckpoint(eager=True)
+    cand = lifecycle.checkpoint(
+        lsh_candidates(lsh_cells(sig, "doc_id", bands, ["n_sh"]))
+    )
     # verification touches only candidate docs: broadcast-semi-filter
     # the document scan down to them BEFORE the shingle explode, so
     # the corpus-sized relation is neither re-hashed nor shuffled on
@@ -1416,8 +1414,8 @@ def dedup_simhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     task before the distinct Exchange (no-op on a splittable
     layout).  1.56 -> 0.85 s isolated."""
     d = spread_table(spark, sf_dir, "documents", "doc_id")
-    sig = api.simhash_signature(d, "doc_id", "text", bits=_SHX_BITS).localCheckpoint(
-        eager=True
+    sig = lifecycle.checkpoint(
+        api.simhash_signature(d, "doc_id", "text", bits=_SHX_BITS)
     )
     bytes_ = [F.expr(f"(simhash >> {8 * i}) & 255") for i in range(4)]
     ham = F.expr("CAST(bit_count(simhash_a ^ simhash_b) AS BIGINT)")

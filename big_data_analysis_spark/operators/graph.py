@@ -27,6 +27,7 @@ from ..api_graph import (
     _with_certificate,
 )
 from ..fixpoint import fixpoint
+from .. import lifecycle
 from ..io import table
 from ..registry import query
 
@@ -154,14 +155,13 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     no rank moves; each round carries the previous rank to flag the
     rows that moved)."""
     S = _PR_SCALE
-    e = _edges(spark, sf_dir).localCheckpoint(eager=True)
+    e = lifecycle.checkpoint(_edges(spark, sf_dir))
     deg = e.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("d"))
     nodes = _nodes(e)
     meta = nodes.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    r = (
+    r = lifecycle.checkpoint(
         nodes.crossJoin(F.broadcast(meta))
         .select("node", F.expr(f"CAST({S} AS BIGINT) DIV n").alias("pr"))
-        .localCheckpoint(eager=True)
     )
 
     def step(r: DataFrame) -> DataFrame:
@@ -239,12 +239,11 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the undirected edge table is BOUNDED (100-node demo graph,
     # <= 4950 rows) and read three times below — eager localCheckpoint
     # materializes it once without pinning a session-lifetime cache.
-    u = (
+    u = lifecycle.checkpoint(
         e.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     e1 = u.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = u.select(F.col("a").alias("y2"), F.col("b").alias("z"))
@@ -254,8 +253,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(e3, (F.col("x3") == F.col("x")) & (F.col("z3") == F.col("z")))
         .agg(F.count(F.lit(1)).alias("n_triangles"))
     )
-    out = tri.localCheckpoint(eager=True)
-    u.unpersist()
+    out = lifecycle.checkpoint(tri)
+    lifecycle.free(u)
     return out
 
 
@@ -341,12 +340,14 @@ def _bfs(name: str, e: DataFrame, roots: DataFrame, max_hops: int) -> DataFrame:
             nxt.withColumn("frontier", F.lit(True))
         )
 
-    visited = roots.select(
-        F.col("node").alias("root"),
-        "node",
-        F.lit(0).alias("dist"),
-        F.lit(True).alias("frontier"),
-    ).localCheckpoint(eager=True)
+    visited = lifecycle.checkpoint(
+        roots.select(
+            F.col("node").alias("root"),
+            "node",
+            F.lit(0).alias("dist"),
+            F.lit(True).alias("frontier"),
+        )
+    )
     visited, _, _, _ = fixpoint(
         name,
         visited,
@@ -387,10 +388,10 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Execution shape: _bfs from the one root; the hop cap bounds the
     rounds.  At 100 TB this is Pregel's BFS on the DataFrame
     runtime: edges stay co-partitioned on src across rounds."""
-    e = _edges(spark, sf_dir).persist()
+    e = lifecycle.persist(_edges(spark, sf_dir))
     root = spark.range(1).select(F.col("id").alias("node"))
     visited = _bfs("graph_bfs_distance", e, root, _BFS_MAX_HOPS)
-    e.unpersist()
+    lifecycle.free(e)
     return visited.select("node", "dist")
 
 
@@ -437,14 +438,13 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitioned on src; rounds are bounded by the weight cap
     (every optimal path has ≤ {_SSSP_CAP} edges since weights ≥ 1).
     The Pregel SSSP shape on the DataFrame runtime."""
-    e = (
+    e = lifecycle.persist(
         _edges(spark, sf_dir)
         .select(
             "src",
             "dst",
             (1 + (F.col("src") * 7 + F.col("dst") * 13) % 5).alias("w"),
         )
-        .persist()
     )
     dist = spark.range(1).select(
         F.col("id").alias("node"), F.col("id").alias("dist"), F.lit(True).alias("__delta")
@@ -482,7 +482,7 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_rounds=_SSSP_CAP + 4,
         changed=_n_flagged(F.col("__delta")),
     )
-    e.unpersist()
+    lifecycle.free(e)
     return dist.where(F.col("dist") <= _SSSP_CAP).select("node", "dist")
 
 
@@ -720,11 +720,11 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     each normalization a 1-row broadcast crossJoin; at 100 TB the
     edge table stays co-partitioned and only the score tables
     move."""
-    e = _edges(spark, sf_dir).persist()
+    e = lifecycle.persist(_edges(spark, sf_dir))
     nodes = _nodes(e)
-    scores = nodes.select(
-        "node", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
-    ).localCheckpoint()
+    scores = lifecycle.checkpoint(
+        nodes.select("node", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth"))
+    )
 
     def half(scores: DataFrame, frm: str, to: str, src: str, dst: str) -> DataFrame:
         """One max-normalized half-step: ``dst`` = the ``src`` mass
@@ -757,7 +757,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_rounds=_HITS_ITERS,
         changed=F.count(F.lit(1)),
     )
-    e.unpersist()
+    lifecycle.free(e)
     return scores.select("node", "hub", "auth")
 
 
@@ -828,13 +828,12 @@ def graph_k_core_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     is peeled). At 100 TB the edge table stays partitioned on `a`
     across rounds; only survivor keys move."""
     li = table(spark, sf_dir, "lineitem")
-    e = (
+    e = lifecycle.checkpoint(
         li.select(
             F.col("l_orderkey").alias("a"), (-F.col("l_partkey") - 1).alias("b")
         )
         .distinct()
         .withColumn("alive", F.lit(True))
-        .localCheckpoint(eager=True)
     )
     peeled = ~F.col("alive")
     e, _, _, n_peeled = fixpoint(
@@ -926,7 +925,7 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     directions of every pair."""
     li = table(spark, sf_dir, "lineitem")
     o, p = F.col("l_orderkey") % 100, F.col("l_partkey") % 100
-    e = (
+    e = lifecycle.checkpoint(
         li.select(
             F.inline(
                 F.array(
@@ -937,7 +936,6 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     lbl = e.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label"), F.lit(True).alias("__delta")
@@ -1028,8 +1026,8 @@ def graph_hits_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     hub score moves). At 100 TB the edge table stays co-partitioned;
     only score rows move."""
     S = _HITS_SCALE
-    e = _edges(spark, sf_dir).localCheckpoint(eager=True)
-    nodes = _nodes(e).localCheckpoint(eager=True)
+    e = lifecycle.checkpoint(_edges(spark, sf_dir))
+    nodes = lifecycle.checkpoint(_nodes(e))
 
     def half(scores: DataFrame, to: str, frm: str) -> DataFrame:
         """One max-normalized half-step: every node sums ``scores``
@@ -1127,12 +1125,11 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     like graph_common_neighbors documents; the demo graph is 100
     nodes."""
     e = _edges(spark, sf_dir)
-    u = (
+    u = lifecycle.checkpoint(  # read by wedges AND the closing join
         e.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .distinct()
-        .localCheckpoint(eager=True)  # read by wedges AND the closing join
     )
     n = u.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionAll(
         u.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
@@ -1291,7 +1288,7 @@ def graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the mutual-pair count is the integer half.  Scale: one
     self-equi-join on the (dst, src) key — co-partitioned with the
     edge list's own (src, dst) shuffle."""
-    e = _edges(spark, sf_dir).localCheckpoint(eager=True)
+    e = lifecycle.checkpoint(_edges(spark, sf_dir))
     rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     recip = e.join(rev, ["src", "dst"], "left_semi")
     m = e.agg(F.count(F.lit(1)).cast("long").alias("n_edges")).crossJoin(
@@ -1405,10 +1402,10 @@ def graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     inherently quadratic in reachable mass; the kernel keeps every
     step key-partitioned (no broadcast of anything
     data-proportional)."""
-    e = _edges(spark, sf_dir).persist()
+    e = lifecycle.persist(_edges(spark, sf_dir))
     nodes = e.select(F.col("src").alias("node")).distinct()
     visited = _bfs("graph_closeness", e, nodes, _CLOSENESS_HOPS)
-    e.unpersist()
+    lifecycle.free(e)
     reached = F.count(F.when(F.col("dist") > 0, 1))
     return visited.groupBy(F.col("root").alias("src")).agg(
         reached.cast("long").alias("n_reached"),
@@ -1485,7 +1482,7 @@ def graph_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     the nodes whose distance rose in the round before (``__delta``),
     which yields the same table as relaxing every edge."""
     li = table(spark, sf_dir, "lineitem")
-    e = (
+    e = lifecycle.persist(
         li.select(
             (F.col("l_orderkey") % 100).alias("src"),
             (F.col("l_partkey") % 100).alias("dst"),
@@ -1493,12 +1490,13 @@ def graph_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("src") < F.col("dst"))
         .distinct()
         .select("src", "dst", (1 + (F.col("src") + F.col("dst")) % 5).alias("w"))
-        .persist()
     )
     n = _nodes(e)
-    l = n.select(
-        "node", F.lit(0).cast("long").alias("dist"), F.lit(True).alias("__delta")
-    ).localCheckpoint(eager=True)
+    l = lifecycle.checkpoint(
+        n.select(
+            "node", F.lit(0).cast("long").alias("dist"), F.lit(True).alias("__delta")
+        )
+    )
 
     def step(l: DataFrame) -> DataFrame:
         front = l.where("__delta")
@@ -1523,7 +1521,7 @@ def graph_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_rounds=_CP_ROUNDS,
         changed=_n_flagged(F.col("__delta")),
     )
-    e.unpersist()
+    lifecycle.free(e)
     return l.select(
         "node",
         F.col("dist").alias("longest_dist"),
@@ -1594,18 +1592,16 @@ def graph_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # u and n feed three plan branches each (n1, n2, deg, is_edge) —
     # checkpoint once so Catalyst doesn't re-derive the edge list per
     # branch (the _day_grid rationale; 12 -> ~6 Exchanges measured).
-    u = (
+    u = lifecycle.checkpoint(
         e.select(
             F.least("src", "dst").alias("a"),
             F.greatest("src", "dst").alias("b"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    n = (
+    n = lifecycle.checkpoint(
         u.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
         .unionAll(u.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-        .localCheckpoint(eager=True)
     )
     deg = n.groupBy("node").agg(F.count(F.lit(1)).cast("long").alias("d"))
     n1 = n.select(F.col("node").alias("node_a"), F.col("nbr").alias("z"))
@@ -1686,11 +1682,10 @@ def graph_bipartite_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the bipartite edge list feeds both self-join sides plus the
     # degree rollup — materialize once (15 -> ~7 Exchanges measured)
-    bi = (
+    bi = lifecycle.checkpoint(
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .select("cust", "part")
         .distinct()
-        .localCheckpoint(eager=True)
     )
     pdeg = bi.groupBy("part").agg(F.count(F.lit(1)).cast("long").alias("d"))
     b1 = bi.select("cust", F.col("part").alias("part_a"))
@@ -1761,10 +1756,10 @@ def graph_eccentricity(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching the oracle recursion bound.  Same
     quadratic-in-reachable-mass bound as all-pairs centrality;
     key-partitioned throughout."""
-    e = _edges(spark, sf_dir).persist()
+    e = lifecycle.persist(_edges(spark, sf_dir))
     nodes = e.select(F.col("src").alias("node")).distinct()
     visited = _bfs("graph_eccentricity", e, nodes, _CLOSENESS_HOPS)
-    e.unpersist()
+    lifecycle.free(e)
     return visited.groupBy(F.col("root").alias("src")).agg(
         F.max("dist").cast("long").alias("eccentricity"),
         F.count(F.when(F.col("dist") > 0, 1)).cast("long").alias(

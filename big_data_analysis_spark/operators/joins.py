@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..exact import dsum, revenue_dec, dsum_expr, sql_dsum, SQL_REVENUE, sql_dsum_expr
+from .. import lifecycle
 from ..io import table
 from ..registry import query
 from ..session import harden_session, scratch_dir
@@ -485,7 +486,7 @@ def join_runtime_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("revenue"),
             )
         )
-        return j.localCheckpoint()  # eager: bloom active during execution
+        return lifecycle.checkpoint(j)  # eager: bloom active during execution
     finally:
         for k, v in old.items():
             if v is None:

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import lifecycle
 from ..io import table
 from ..registry import query
 from .multimodal import (
@@ -1079,9 +1080,7 @@ def multimodal_ico_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         + ", ".join(blob_hex(m) for m in range(_ICO_ENTRIES))
         + ")"
     )
-    f = ids.select("doc_id", F.expr(hexf).alias("hexf")).localCheckpoint(
-        eager=True
-    )
+    f = lifecycle.checkpoint(ids.select("doc_id", F.expr(hexf).alias("hexf")))
 
     # --- parse from bytes alone ---
     def rd_u8(byte_off: str) -> str:
@@ -1241,9 +1240,7 @@ def multimodal_jpeg_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" 'FFDA', {be16('12')}, '03', '010002110311', '003F00',"
         f" {ent_hex}, 'FFD9')"
     )
-    f = ids.select("doc_id", F.expr(hexf).alias("hexf")).localCheckpoint(
-        eager=True
-    )
+    f = lifecycle.checkpoint(ids.select("doc_id", F.expr(hexf).alias("hexf")))
 
     def rd8(off: str) -> str:
         return (
@@ -1389,9 +1386,7 @@ def multimodal_tiff_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" {entry(273, str(_TIFF_STRIP_OFF))}, {entry(279, sb)},"
         f" {num('0', 4)}, {strip_hex})"
     )
-    f = ids.select("doc_id", F.expr(hexf).alias("hexf")).localCheckpoint(
-        eager=True
-    )
+    f = lifecycle.checkpoint(ids.select("doc_id", F.expr(hexf).alias("hexf")))
 
     # --- parse from bytes alone: every read branches on the flag ---
     flag = "substring(hexf, 1, 4)"
@@ -1562,9 +1557,7 @@ def multimodal_webp_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" {le(w, 2)}, {le(h, 2)},"
         f" {pad_hex})"
     )
-    f = ids.select("doc_id", F.expr(hexf).alias("hexf")).localCheckpoint(
-        eager=True
-    )
+    f = lifecycle.checkpoint(ids.select("doc_id", F.expr(hexf).alias("hexf")))
 
     def rd_u8(off: str) -> str:
         return f"CAST(conv(substring(hexf, 2 * ({off}) + 1, 2), 16, 10) AS BIGINT)"

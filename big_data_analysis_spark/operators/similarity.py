@@ -33,6 +33,7 @@ from pyspark.sql.window import Window
 
 from .. import api
 from ..api_lsh import lsh_candidates, lsh_cells
+from .. import lifecycle
 from ..io import spread, spread_table, table
 from ..registry import query
 
@@ -450,7 +451,7 @@ def sim_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join does not re-run scan+vectorize+hash on BOTH sides (same
     # seeded model => identical candidates).  r14 A/B: 0.75 s with
     # vs 1.09 s without — kept.
-    hashed = lsh.transform(e).localCheckpoint(eager=True)
+    hashed = lifecycle.checkpoint(lsh.transform(e))
     q = hashed.where(F.col("vec_id") < 5)
     pairs = lsh.approxSimilarityJoin(q, hashed, 1.2, distCol="eucl_dist")
     scored = pairs.where(
@@ -500,8 +501,8 @@ def _brp_gated_pairs(spark: SparkSession, sf_dir: str):
         seed=7,
     ).fit(e)
     tables = [vector_to_array(F.col("hashes")[t])[0] for t in range(8)]
-    cells = lsh_cells(lsh.transform(e), "vec_id", tables).localCheckpoint(
-        eager=True  # 8 narrow rows per vector
+    cells = lifecycle.checkpoint(  # 8 narrow rows per vector
+        lsh_cells(lsh.transform(e), "vec_id", tables)
     )
     cand = lsh_candidates(cells).toDF("vec_a", "vec_b")
     cand = spread(cand, sf_dir, "embeddings", "vec_a", "vec_b")
@@ -641,7 +642,7 @@ def vec_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings").select(
         F.col("embedding").cast("array<double>").alias("x")
     )
-    e = e.persist()
+    e = lifecycle.persist(e)
     d = 64
     v = [1.0 / d**0.5] * d
     for _ in range(12):
@@ -662,7 +663,7 @@ def vec_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
             w[r["pos"]] = r["s"]
         norm = sum(c * c for c in w) ** 0.5
         v = [c / norm for c in w]
-    e.unpersist()
+    lifecycle.free(e)
     out = [(i, v[i]) for i in range(d)]
     return spark.createDataFrame(out, "pos int, component double")
 
@@ -1171,7 +1172,7 @@ def vec_pca_top2(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings").select(
         F.col("embedding").cast("array<double>").alias("x")
     )
-    e = e.persist()
+    e = lifecycle.persist(e)
     d = 64
 
     def matvec(v):
@@ -1213,7 +1214,7 @@ def vec_pca_top2(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("sq")
     ).agg(F.sum("sq").alias("tr")).collect()[0]
     trace = trace_row["tr"]
-    e.unpersist()
+    lifecycle.free(e)
     out = [
         (ci, i, comps[ci][i], eigs[ci], eigs[ci] / trace)
         for ci in range(2)
@@ -1523,13 +1524,12 @@ def vec_power_iteration_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             names=["pos_j", "pos_k", "g"],
         )
 
-    gsum = (
+    gsum = lifecycle.checkpoint(
         xs.mapInArrow(
             _partial_gram, "pos_j int, pos_k int, g decimal(38,0)"
         )
         .groupBy("pos_j", "pos_k")
         .agg(F.sum("g").alias("g"))
-        .localCheckpoint(eager=True)
     )
     G = [[0] * (d + 1) for _ in range(d + 1)]
     for r in gsum.collect():

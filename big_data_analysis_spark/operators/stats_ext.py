@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import lifecycle
 from ..io import table
 from ..registry import query
 
@@ -57,7 +58,7 @@ def _day_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid = e.groupBy(
         "event_type", F.to_date(F.date_trunc("day", F.col("ts"))).alias("d")
     ).agg(F.sum(cents).alias("x"))
-    return grid.localCheckpoint(eager=True)
+    return lifecycle.checkpoint(grid)
 
 
 @query(
@@ -939,11 +940,10 @@ def agg_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back onto the grid."""
     e = table(spark, sf_dir, "events")
     cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-    grid = (
+    grid = lifecycle.checkpoint(  # referenced by bounds AND final sum
         e.select("event_type", cents.alias("cents"))
         .groupBy("event_type", "cents")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)  # referenced by bounds AND final sum
     )
     w_cum = (
         Window.partitionBy("event_type")
@@ -1788,11 +1788,10 @@ def agg_tukey_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-row quartile table joins back per type."""
     e = table(spark, sf_dir, "events")
     cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-    grid = (
+    grid = lifecycle.checkpoint(  # read by quartiles AND census
         e.select("event_type", cents.alias("cents"))
         .groupBy("event_type", "cents")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)  # read by quartiles AND census
     )
     w_cum = (
         Window.partitionBy("event_type")

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import lifecycle
 from ..io import table
 from ..registry import query
 from .stats_ext import _CENTS_SQL, _GRID_SQL, _day_grid
@@ -97,7 +98,7 @@ def agg_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything after is value-domain-bounded."""
     e = table(spark, sf_dir, "events")
     cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-    grid = (
+    grid = lifecycle.checkpoint(  # read by median pass AND census
         e.select("event_type", cents.alias("cents"))
         .groupBy("cents")
         .agg(
@@ -109,7 +110,6 @@ def agg_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
             F.count(F.lit(1)).cast("long").alias("nt"),
         )
-        .localCheckpoint(eager=True)  # read by median pass AND census
     )
     w_cum = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, 0)
     w_all = Window.partitionBy()
@@ -266,7 +266,7 @@ def agg_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(2 * F.col("x") > F.col("med2"), 1).otherwise(0).alias("hi"),
     )
     full_d = x.groupBy("d").agg(F.count(F.lit(1)).alias("k")).where(F.col("k") == 5)
-    b = x.join(full_d.select("d"), "d").localCheckpoint(eager=True)
+    b = lifecycle.checkpoint(x.join(full_d.select("d"), "d"))
     rows_ = b.groupBy("d").agg(F.sum("hi").cast("long").alias("r"))
     m = b.agg(
         *[
@@ -656,7 +656,7 @@ def agg_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(days^2/7) on the bounded grid; one event_type shuffle."""
     g = _day_grid(spark, sf_dir)
     s = g.select("event_type", "d", "x", F.dayofweek("d").alias("season"))
-    s = s.localCheckpoint(eager=True)  # pair join reads it twice
+    s = lifecycle.checkpoint(s)  # pair join reads it twice
     s1 = s.select(
         F.col("event_type").alias("et1"),
         F.col("d").alias("d1"),

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import lifecycle
 from ..io import table
 from ..registry import query
 from .stats_ext import _CENTS_SQL, _GRID_SQL, _day_grid
@@ -77,7 +78,7 @@ def _ohlc_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max_by("cents", "ts").alias("c"),
         )
     )
-    return g.localCheckpoint(eager=True)
+    return lifecycle.checkpoint(g)
 
 
 def _ohlcv_grid(spark: SparkSession, sf_dir: str, *, close_only: bool = False) -> DataFrame:
@@ -106,7 +107,7 @@ def _ohlcv_grid(spark: SparkSession, sf_dir: str, *, close_only: bool = False) -
         .groupBy("event_type", "d")
         .agg(*aggs)
     )
-    return g.localCheckpoint(eager=True)
+    return lifecycle.checkpoint(g)
 
 
 @query(
@@ -789,12 +790,14 @@ def win_cci(spark: SparkSession, sf_dir: str) -> DataFrame:
     one event_type shuffle feeds both the window pass and the join."""
     g = _ohlc_grid(spark, sf_dir)
     wo = Window.partitionBy("event_type").orderBy("d")
-    tp = g.select(
-        "event_type",
-        "d",
-        (F.col("h") + F.col("l") + F.col("c")).alias("tp3"),
-        F.row_number().over(wo).alias("idx"),
-    ).localCheckpoint(eager=True)  # read by window pass AND self-join
+    tp = lifecycle.checkpoint(  # read by window pass AND self-join
+        g.select(
+            "event_type",
+            "d",
+            (F.col("h") + F.col("l") + F.col("c")).alias("tp3"),
+            F.row_number().over(wo).alias("idx"),
+        )
+    )
     w14 = Window.partitionBy("event_type").orderBy("d").rowsBetween(-13, 0)
     w = tp.select(
         "event_type",
@@ -1632,11 +1635,10 @@ def agg_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-proportional groupBy builds the grid."""
     e = table(spark, sf_dir, "events")
     cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-    grid = (
+    grid = lifecycle.checkpoint(  # read by median pass AND deviations
         e.select("event_type", cents.alias("cents"))
         .groupBy("event_type", "cents")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)  # read by median pass AND deviations
     )
     w_cum = (
         Window.partitionBy("event_type")

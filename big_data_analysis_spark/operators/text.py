@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import api
+from .. import lifecycle
 from ..io import table
 from ..registry import query
 
@@ -1460,10 +1461,9 @@ def text_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("p")
     ).select("p.v", "p.w")
-    c = (
+    c = lifecycle.checkpoint(
         bg.groupBy("v", "w")
         .agg(F.count(F.lit(1)).cast("long").alias("c_vw"))
-        .localCheckpoint(eager=True)
     )
     cv = c.groupBy("v").agg(
         F.sum("c_vw").cast("long").alias("c_v"),
@@ -1912,10 +1912,9 @@ def pipeline_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # their three consumers each (two lookup joins + the total) reuse
     # the materialized rows instead of re-deriving the corpus explode
     # — the corpus is scanned exactly twice (once per gram order)
-    uc = (
+    uc = lifecycle.checkpoint(
         uni.groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=True)
     )
     n_tok = uc.agg(F.sum("c").cast("long").alias("n_tok"))
     bi = toks.where(F.size("toks") >= 2).select(
@@ -1926,10 +1925,9 @@ def pipeline_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("p")
     ).select("p.w1", "p.w2")
-    bc = (
+    bc = lifecycle.checkpoint(
         bi.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).cast("long").alias("c_xy"))
-        .localCheckpoint(eager=True)
     )
     n_bi = bc.agg(F.sum("c_xy").cast("long").alias("n_bi"))
     return (

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import lifecycle
 from ..io import table
 from ..registry import query
 
@@ -144,14 +145,16 @@ def vec_dbscan_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings").where(
         F.col("vec_id") < _DBSCAN_N
     )
-    q = e.select(
-        "vec_id",
-        F.expr(
-            f"transform(sequence(1, 64),"
-            " i -> CAST(round(CAST(element_at(embedding, i) AS DOUBLE)"
-            " * 1000000) AS BIGINT))"
-        ).alias("xq"),
-    ).localCheckpoint(eager=True)
+    q = lifecycle.checkpoint(
+        e.select(
+            "vec_id",
+            F.expr(
+                f"transform(sequence(1, 64),"
+                " i -> CAST(round(CAST(element_at(embedding, i) AS DOUBLE)"
+                " * 1000000) AS BIGINT))"
+            ).alias("xq"),
+        )
+    )
     a = q.select(F.col("vec_id").alias("ia"), F.col("xq").alias("qa"))
     b = q.select(F.col("vec_id").alias("ib"), F.col("xq").alias("qb"))
     # r13 (guide §1.2/§2.3): BIGINT distance — the 1e-6 lattice bounds
@@ -167,14 +170,13 @@ def vec_dbscan_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" * (element_at(qa, {k}) - element_at(qb, {k}))"
         for k in range(1, 65)
     )
-    pairs = (
+    pairs = lifecycle.checkpoint(
         a.crossJoin(b)
         .select(
             "ia",
             "ib",
             (F.expr(dist) <= _DBSCAN_EPS2).alias("near"),
         )
-        .localCheckpoint(eager=True)
     )
     nbr = pairs.groupBy("ia").agg(
         (
@@ -274,15 +276,17 @@ def vec_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts (the vec_centroid machinery) as the standard
     approximation."""
     e = table(spark, sf_dir, "embeddings").where(F.col("vec_id") < _SIL_N)
-    q = e.select(
-        "vec_id",
-        "label",
-        F.expr(
-            f"transform(sequence(1, 64),"
-            " i -> CAST(round(CAST(element_at(embedding, i) AS DOUBLE)"
-            " * 1000000) AS BIGINT))"
-        ).alias("xq"),
-    ).localCheckpoint(eager=True)
+    q = lifecycle.checkpoint(
+        e.select(
+            "vec_id",
+            "label",
+            F.expr(
+                f"transform(sequence(1, 64),"
+                " i -> CAST(round(CAST(element_at(embedding, i) AS DOUBLE)"
+                " * 1000000) AS BIGINT))"
+            ).alias("xq"),
+        )
+    )
     a = q.select(
         F.col("vec_id").alias("ia"), F.col("label").alias("la"),
         F.col("xq").alias("qa"),
@@ -304,7 +308,7 @@ def vec_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" * (element_at(qa, {k}) - element_at(qb, {k}))"
         for k in range(1, 65)
     )
-    pd_ = (
+    pd_ = lifecycle.checkpoint(
         a.join(b, F.col("ia") != F.col("ib"))
         .select("ia", "la", "lb", F.expr(dist).alias("d2"))
         .groupBy("ia", "la", "lb")
@@ -312,7 +316,6 @@ def vec_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("d2").alias("dsum"),
             F.count(F.lit(1)).cast("long").alias("dcnt"),
         )
-        .localCheckpoint(eager=True)
     )
     mean = F.col("dsum").cast("string").cast("double") / F.col("dcnt")
     aa = pd_.where(F.col("la") == F.col("lb")).select(

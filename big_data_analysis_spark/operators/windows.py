@@ -26,54 +26,6 @@ from ..api_rank import (  # noqa: F401 — still importable from operators.windo
 from ..io import table
 from ..registry import query
 
-# Kernels such as api_rank's distributed prefix persist() an
-# intermediate because their plan forks on it. The returned
-# DataFrame is lazy, so the kernel cannot unpersist before the caller
-# materializes it — instead every persisted handle is registered here
-# and harnesses that run many queries in one session (bench.py, long
-# test sessions) call release_kernel_persists() between queries.
-# Correctness never depends on the cache (Spark recomputes from
-# lineage); without release, blocks accumulate until LRU eviction.
-_KERNEL_PERSISTS: list[DataFrame] = []
-
-
-def _register_persist(df: DataFrame) -> DataFrame:
-    _KERNEL_PERSISTS.append(df)
-    return df
-
-
-def release_kernel_persists(blocking: bool = False) -> int:
-    """Unpersist every kernel intermediate registered since the last
-    call PLUS every RDD still pinned in the block manager — which
-    covers ``localCheckpoint`` blocks, the r13 bench-poisoning bug:
-    checkpointing persists its RDD outside any registry, and Python
-    garbage collection only frees the blocks when the lazy
-    ContextCleaner gets around to it, so a long suite accumulated
-    checkpoint blocks that squeezed execution memory (r13 driver run:
-    bench positions 17-25 collapsed 3-25x at 32 cores, recovered at
-    8).  Returns how many frames/RDDs were released.
-
-    CONTRACT: call only BETWEEN queries.  A registered persist() frame
-    simply recomputes its fork, but a localCheckpoint frame whose
-    blocks are dropped CANNOT be recomputed (checkpoint truncates
-    lineage) — any still-live handle must not be executed again.
-    bench.py / opt_measure satisfy this by construction: every query
-    re-derives its frames per invocation, nothing is memoized across
-    queries."""
-    n = len(_KERNEL_PERSISTS)
-    while _KERNEL_PERSISTS:
-        _KERNEL_PERSISTS.pop().unpersist(blocking)
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    if spark is not None:
-        # JavaSparkContext.getPersistentRDDs returns a SNAPSHOT copy,
-        # so unpersisting while iterating is safe.
-        for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            jrdd.unpersist(blocking)
-            n += 1
-    return n
-
 
 @query(
     "win_row_number",

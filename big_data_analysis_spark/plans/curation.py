@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..api_eval import importance_weights
+from .. import lifecycle
 from ..io import spread_table, table
 from ..api_rank import ntile_distributed
 from ..registry import query
@@ -1266,12 +1267,11 @@ def pipeline_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scale).  r14 A/B (shipped unverified in r13): 1.94 s with vs
     # 2.23 s without, isolated 32c medians — kept.
     li = spread_table(spark, sf_dir, "lineitem", "l_orderkey")
-    baskets = (
+    baskets = lifecycle.checkpoint(
         li.join(p, li["l_partkey"] == p["p_partkey"])
         .select(F.col("l_orderkey").alias("ok"), F.col("p_brand").alias("brand"))
         .groupBy("ok")
         .agg(F.sort_array(F.collect_set("brand")).alias("brands"))
-        .localCheckpoint(eager=True)
     )
     pairs = (
         baskets.select(

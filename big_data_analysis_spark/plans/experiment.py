@@ -24,6 +24,7 @@ from ..api_lsh import (  # the table's names are also read from here by tests
     _dp_thresholds,
     dp_noisy_counts,
 )
+from .. import lifecycle
 from ..io import table
 from ..registry import query
 from ..operators.stats_ext import _CENTS_SQL, _GRID_SQL, _day_grid
@@ -199,20 +200,22 @@ def pipeline_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings").where(
         F.col("vec_id") < _MMR_CANDS
     )
-    base = e.select(
-        "vec_id",
-        F.transform(
-            F.col("embedding"),
-            lambda v: F.round(v.cast("double") * 1_000_000).cast("long"),
-        ).alias("xq"),
-    ).localCheckpoint(eager=True)
+    base = lifecycle.checkpoint(
+        e.select(
+            "vec_id",
+            F.transform(
+                F.col("embedding"),
+                lambda v: F.round(v.cast("double") * 1_000_000).cast("long"),
+            ).alias("xq"),
+        )
+    )
     q_terms = " + ".join(
         f"element_at(xq, {j}) * {c}L"
         for j, c in enumerate(_MMR_QUERY, start=1)
     )
-    rel = base.select(
-        "vec_id", "xq", F.expr(q_terms).cast("long").alias("rel")
-    ).localCheckpoint(eager=True)
+    rel = lifecycle.checkpoint(
+        base.select("vec_id", "xq", F.expr(q_terms).cast("long").alias("rel"))
+    )
 
     picked = []  # [(rank, vec_id)]
     first = rel.orderBy(F.desc("rel"), F.asc("vec_id")).limit(1).collect()[0]

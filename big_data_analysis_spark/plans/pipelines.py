@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import api
+from .. import lifecycle
 from ..io import spread_table, table
 from ..registry import query
 
@@ -365,7 +366,7 @@ def cache_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache is released before returning; correctness never depends
     on it.)"""
     o = table(spark, sf_dir, "orders")
-    base = (
+    base = lifecycle.persist(
         o.groupBy("o_custkey")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
@@ -373,7 +374,6 @@ def cache_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("spend"),
         )
-        .persist()
     )
     try:
         top_count = (
@@ -387,9 +387,9 @@ def cache_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.lit("top_by_spend").alias("cohort"), "*")
         )
         out = top_count.unionByName(top_spend)
-        out = out.localCheckpoint(eager=True)  # materialize before unpersist
+        out = lifecycle.checkpoint(out)  # materialize before unpersist
     finally:
-        base.unpersist()
+        lifecycle.free(base)
     return out
 
 

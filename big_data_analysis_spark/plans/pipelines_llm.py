@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import api
+from .. import lifecycle
 from ..io import spread_table, table
 from ..registry import query
 from ..api_rank import global_rank_distributed, grouped_cumsum_distributed
@@ -752,17 +753,16 @@ def pipeline_eval_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (dp, vec_id) ordering key, packed so "outranks" is one struct
     # comparison: higher dp first, lower vec_id breaks ties.
     key = F.struct(F.col("dp").alias("dp"), (-F.col("vec_id")).alias("nid"))
-    # localCheckpoint (eager) instead of a session-lifetime persist:
-    # the four consumers below share the materialization, and the
-    # blocks are released with the reference instead of pinning the
+    # An eager checkpoint instead of a session-lifetime persist: the
+    # four consumers below share the materialization, and the blocks
+    # are released between queries instead of pinning the
     # corpus-sized intermediate in storage memory forever.
-    scored = (
+    scored = lifecycle.checkpoint(
         d.crossJoin(F.broadcast(q))
         .select(
             "query_id", "qlabel", "vec_id", "label",
             api.int_dot(F.col("de"), F.col("qe")).alias("dp"),
         )
-        .localCheckpoint(eager=True)
     )
     rel = scored.where(F.col("label") == F.col("qlabel"))
     best_rel = rel.groupBy("query_id").agg(F.max(key).alias("bk"))

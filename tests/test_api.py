@@ -5,6 +5,7 @@ values are computed by hand or with pandas/NumPy in-test."""
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from big_data_analysis_spark import api
@@ -152,6 +153,23 @@ def test_api_knn_brute_synthetic(spark):
     df = spark.createDataFrame(vecs, "vid long, v array<float>")
     out = api.knn_brute(df, df.where(F.col("vid") == 0), "vid", "v", k=2).collect()
     assert [r["neighbor_id"] for r in out] == [1, 2]  # by angle distance
+
+
+@pytest.mark.parametrize("kernel", ["knn_brute", "maxsim", "weighted_sample"])
+@pytest.mark.parametrize("k", [0, -1])
+def test_api_top_k_kernels_reject_k_below_one(spark, kernel, k):
+    """k = 0 used to return an empty frame without a word; it is an
+    argument error, raised when the kernel is called."""
+    vecs = spark.createDataFrame([(0, [1.0, 0.0])], "vid long, v array<float>")
+    call = {
+        "knn_brute": lambda: api.knn_brute(vecs, vecs, "vid", "v", k=k),
+        "maxsim": lambda: api.maxsim(vecs, vecs, "vid", "v", k=k),
+        "weighted_sample": lambda: api.weighted_sample(
+            spark.createDataFrame([(0, 1.0)], "id long, w double"), "id", "w", k=k
+        ),
+    }[kernel]
+    with pytest.raises(ValueError, match=f"{kernel}: k must be >= 1"):
+        call()
 
 
 def test_api_chunk_boundaries(spark):

@@ -133,6 +133,15 @@ def test_wer_matches_token_levenshtein(spark, sf_dir):
             assert r.edit_ops == 0
 
 
+def test_wer_computes_levenshtein_once(spark, sf_dir):
+    """``wer`` is derived from ``edit_ops``: the O(cap^2) distance runs
+    once per row, not once more inside the ``wer`` CASE branch."""
+    df = run("pipeline_eval_wer", spark, sf_dir)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("levenshtein(") == 1, plan
+
+
 def _grid_rel(sf_dir):
     docs = _docs(sf_dir)
     out = {}

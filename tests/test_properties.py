@@ -1728,22 +1728,3 @@ def test_dp_threshold_table_is_calibrated_partition(eps_den):
         assert abs(by_k[k] - expect) <= 2  # rounding only
         if k != 0:
             assert abs(by_k[k] - by_k[-k]) <= 2  # symmetry
-
-
-def test_release_kernel_persists_frees_checkpoint_blocks(spark):
-    """r14 (VERDICT r13 item 2): release_kernel_persists must drop
-    localCheckpoint RDD blocks too, not just registered persist()
-    frames — unreleased checkpoint blocks poisoned the r13 bench
-    suite (positions 17-25 collapsed 3-25x at 32 cores)."""
-    from big_data_analysis_spark.operators.windows import (
-        release_kernel_persists,
-    )
-
-    release_kernel_persists(blocking=True)  # clean slate
-    df = spark.range(10_000).localCheckpoint(eager=True)
-    assert df.count() == 10_000
-    jsc = spark.sparkContext._jsc
-    assert jsc.getPersistentRDDs().size() >= 1
-    released = release_kernel_persists(blocking=True)
-    assert released >= 1
-    assert jsc.getPersistentRDDs().size() == 0

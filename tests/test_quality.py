@@ -911,6 +911,38 @@ def test_every_public_kernel_is_called_by_a_registered_query():
     assert stale == set(), f"allowlisted kernels now called: {sorted(stale)}"
 
 
+def test_only_lifecycle_manages_storage():
+    """Every intermediate the package caches or checkpoints goes
+    through ``lifecycle``, so ``release_kernel_persists`` frees all of
+    it and nothing a caller owns.  A bare ``.persist(`` /
+    ``.localCheckpoint(`` / ``.unpersist(`` call anywhere else fails
+    here."""
+    import ast
+    import pathlib
+
+    import big_data_analysis_spark
+
+    storage = {"localCheckpoint", "checkpoint", "persist", "cache", "unpersist"}
+    root = pathlib.Path(big_data_analysis_spark.__file__).parent
+    bare = {}
+    for path in sorted(root.rglob("*.py")):
+        if path.name == "lifecycle.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in storage
+                and not (
+                    isinstance(node.func.value, ast.Name)
+                    and node.func.value.id == "lifecycle"
+                )
+            ):
+                rel = str(path.relative_to(root))
+                bare.setdefault(rel, []).append(node.lineno)
+    assert bare == {}, f"{len(bare)} files manage storage directly: {bare}"
+
+
 def _py_soundex(word: str) -> str:
     """Census Soundex incl. the H/W rule (consonants separated by h/w
     collapse; separated by vowels don't)."""

@@ -24,9 +24,7 @@ def main() -> int:
         return 2
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from big_data_analysis_spark.operators.windows import (
-        release_kernel_persists,
-    )
+    from big_data_analysis_spark.lifecycle import release_kernel_persists
     from big_data_analysis_spark.registry import load_all
     from big_data_analysis_spark.session import get_spark
 

@@ -31,7 +31,7 @@ def main() -> int:
 
     from big_data_analysis_spark.registry import load_all
     from big_data_analysis_spark.session import get_spark
-    from big_data_analysis_spark.operators.windows import release_kernel_persists
+    from big_data_analysis_spark.lifecycle import release_kernel_persists
 
     spark = get_spark("opt_measure")
     reg = load_all()
