@@ -363,12 +363,14 @@ def bpe_train(
         # semantics) — escape both so non-alphanumeric vocabularies
         # merge literally instead of corrupting the symbol stream.
         repl = (left + right).replace("\\", "\\\\").replace("$", "\\$")
-        w = lifecycle.checkpoint(
+        prev, w = w, lifecycle.checkpoint(
             w.select(
                 F.regexp_replace(F.col("syms"), pat, repl).alias("syms"),
                 "freq",
             )
         )
+        lifecycle.free(prev)  # each step reads only the one before
+    lifecycle.free(w)  # the merges are on the driver: nothing reads w
     return spark.createDataFrame(
         merges, "step int, left string, right string, merged string, freq bigint"
     )
@@ -924,15 +926,11 @@ def quantize_int8(
     is (a - pmod(a, b)) / b, an exact multiple of b, so its one double
     division is exact.  GREATEST(maxq, 1) maps the zero vector to
     all-zero codes.  Pure map stage."""
-
-    def q(v: Column) -> Column:
-        return F.round(v.cast("double") * 1_000_000).cast("long")
-
     maxq = F.greatest(
         F.array_max(F.transform(F.col("__qarr"), lambda v: F.abs(v))),
         F.lit(1).cast("long"),
     )
-    d = df.withColumn("__qarr", F.transform(F.col(vec_col), q)).withColumn(
+    d = df.withColumn("__qarr", quantize_vec(F.col(vec_col))).withColumn(
         "__maxq", maxq
     )
     mq = F.col("__maxq")
@@ -1242,10 +1240,7 @@ def pq_encode(
     if any(len(c) != dim for c in codebook_q):
         raise ValueError("ragged codebook: all centroids must have equal dim")
     sub = dim // n_subspaces
-    qe = F.transform(
-        F.col(vec_col),
-        lambda v: F.round(v.cast("double") * 1_000_000).cast("long"),
-    )
+    qe = quantize_vec(F.col(vec_col))
     out = df.select(F.col(id_col), qe.alias("__pq_qv"))
 
     # K*M codebook literals assembled as ONE SQL string per subspace

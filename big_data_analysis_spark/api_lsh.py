@@ -4,13 +4,17 @@ md5-keyed MinHash signatures and banded near-dup pairs with exact
 cross-multiplied Jaccard verify, shingle SimHash signatures, MLlib
 MinHash pairs, and two-sided-geometric DP released counts.
 
-Every banded LSH query in the package runs through the same two
+Every LSH candidate search in the package runs through the same two
 steps here: `lsh_cells` explodes one narrow (id, *carry, band, key)
-row per band key, and `lsh_candidates` runs the ONE self-equi-join
-on (band, key) that turns those cells into distinct id pairs.  They
-stay separate so a caller can localCheckpoint the cells between
-them.  `pair_overlap` is the matching exact verify: it counts the
-shared elements of each candidate pair and nothing else.
+row per band key, and `lsh_candidates` runs the ONE equi-join on
+(band, key) that turns those cells into distinct id pairs: a
+self-join, or two-sided (query or batch cells against base cells)
+when given a second cell table.  They stay separate so a caller can
+localCheckpoint the cells between them.  `pair_overlap` is the
+matching exact verify: it counts the shared elements of each
+candidate pair and nothing else.  MLlib's LSH models supply only
+hash values; no query calls their approxSimilarityJoin, whose
+candidate shuffle carries every collision's full vector payload.
 """
 
 from __future__ import annotations
@@ -44,21 +48,22 @@ def lsh_cells(
     ).select("id", *carry, "__bk.band", "__bk.key")
 
 
-def lsh_candidates(cells: DataFrame) -> DataFrame:
+def lsh_candidates(cells: DataFrame, other: DataFrame | None = None) -> DataFrame:
     """Distinct candidate pairs (id_a, id_b, <c>_a, <c>_b per carried
-    column c), id_a < id_b, from ONE self-equi-join of `lsh_cells`
-    output on (band, key): hash-partitioned on the bucket, so only
-    co-bucketed rows meet and no plan is ever id x id.  `distinct`
-    folds pairs that collide in several bands."""
+    column c) from ONE equi-join of `lsh_cells` output on (band, key):
+    hash-partitioned on the bucket, so only co-bucketed rows meet and
+    no plan is ever id x id.  `distinct` folds pairs that collide in
+    several bands.  Alone, `cells` is joined with itself and
+    id_a < id_b; given `other` (the same columns, hashed by the same
+    model), id_a comes from `cells`, id_b from `other`, and every
+    colliding pair is kept, an id paired with itself included."""
     carry = cells.columns[1:-2]
-    a, b = cells.alias("a"), cells.alias("b")
+    a, b = cells.alias("a"), (cells if other is None else other).alias("b")
+    on = (F.col("a.band") == F.col("b.band")) & (F.col("a.key") == F.col("b.key"))
+    if other is None:
+        on = on & (F.col("a.id") < F.col("b.id"))
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
+        a.join(b, on)
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
@@ -68,15 +73,20 @@ def lsh_candidates(cells: DataFrame) -> DataFrame:
     )
 
 
-def pair_overlap(cand: DataFrame, elems: DataFrame) -> DataFrame:
+def pair_overlap(
+    cand: DataFrame, elems: DataFrame, other: DataFrame | None = None
+) -> DataFrame:
     """`cand` plus `inter_cnt`, the number of elements ids id_a and
     id_b share.  `elems` holds two columns, (id, element), distinct
-    per id.  The verify joins cand to elems on id_a, then to elems
-    again on (id_b, element): it only ever touches candidate pairs,
-    and pairs sharing no element drop out."""
+    per id; id_b's elements come from `other` (the same columns) when
+    the candidates are two-sided.  The verify joins cand to elems on
+    id_a, then to elems again on (id_b, element): it only ever touches
+    candidate pairs, and pairs sharing no element drop out."""
     i, e = elems.columns
     side_a = elems.select(F.col(i).alias("id_a"), F.col(e).alias(e))
-    side_b = elems.select(F.col(i).alias("id_b"), F.col(e).alias(e))
+    side_b = (elems if other is None else other).select(
+        F.col(i).alias("id_b"), F.col(e).alias(e)
+    )
     return (
         cand.join(side_a, "id_a")
         .join(side_b, ["id_b", e])
@@ -256,14 +266,18 @@ def minhash_pairs(
 
 def _minhash_token_pairs(
     d: DataFrame,
+    other: DataFrame | None = None,
     *,
     threshold: float,
     num_tables: int,
     num_features: int,
     seed: int,
 ) -> DataFrame:
-    """(id_a, id_b, jaccard) for `d` = (id, distinct-token array), no
-    array empty (MinHash is undefined on an empty set).
+    """(id_a, id_b, jaccard) for `d` = (id, token array), no array
+    empty (MinHash is undefined on an empty set).  Alone, `d` is
+    joined with itself (id_a < id_b); given `other` (the same
+    columns), id_a comes from `d` and id_b from `other`, as
+    ``approxSimilarityJoin(d, other)`` pairs them.
 
     MLlib's approxSimilarityJoin shuffles the FULL (features sparse
     vector + hash vectors) struct per candidate collision through
@@ -278,8 +292,11 @@ def _minhash_token_pairs(
     dist < 1 - threshold, emitted as 1 - dist.  A MinHash collision
     implies a shared bucket (the hash is injective on indices), so
     dropping zero-overlap pairs drops nothing MLlib keeps.  The
-    feature and cell tables are localCheckpoint'ed: the join reads
-    narrow materialized rows, not the tokenizer per side."""
+    model's coefficients depend only on the seed and the vector
+    size, so fitting it on `d` alone hashes `other` as a model fitted
+    on both would.  The feature and cell tables are
+    localCheckpoint'ed: the join reads narrow materialized rows, not
+    the tokenizer per side."""
     from pyspark.ml.feature import HashingTF, MinHashLSH
     from pyspark.ml.functions import vector_to_array
 
@@ -290,24 +307,30 @@ def _minhash_token_pairs(
         numFeatures=num_features,
         binary=True,
     )
-    feats = lifecycle.checkpoint(tf.transform(d).select(id_col, "features"))
+    feats = [
+        lifecycle.checkpoint(tf.transform(s).select(id_col, "features"))
+        for s in ([d] if other is None else [d, other])
+    ]
     mh = MinHashLSH(
         inputCol="features", outputCol="hashes", numHashTables=num_tables, seed=seed
-    ).fit(feats)
+    ).fit(feats[0])
     bkts = F.unwrap_udt("features")["indices"]
-    cells = lifecycle.checkpoint(
-        lsh_cells(
-            mh.transform(feats).withColumn("n", F.size(bkts)),
-            id_col,
-            [vector_to_array(F.col("hashes")[t])[0] for t in range(num_tables)],
-            ["n"],
+    cells = [
+        lifecycle.checkpoint(
+            lsh_cells(
+                mh.transform(f).withColumn("n", F.size(bkts)),
+                id_col,
+                [vector_to_array(F.col("hashes")[t])[0] for t in range(num_tables)],
+                ["n"],
+            )
         )
-    )
-    elems = feats.select(id_col, F.explode(bkts).alias("bkt"))
+        for f in feats
+    ]
+    elems = [f.select(id_col, F.explode(bkts).alias("bkt")) for f in feats]
     i = F.col("inter_cnt").cast("double")
     dist = F.lit(1.0) - i / ((F.col("n_a") + F.col("n_b")).cast("double") - i)
     return (
-        pair_overlap(lsh_candidates(cells), elems)
+        pair_overlap(lsh_candidates(*cells), *elems)
         .select("id_a", "id_b", dist.alias("dist"))
         .where(F.col("dist") < 1.0 - threshold)
         .select("id_a", "id_b", (1 - F.col("dist")).alias("jaccard"))

@@ -16,7 +16,9 @@ The 1e-6 element quantization shifts cosines by ~1e-5 — the full-
 precision path stays available to the rows-only LSH/IVF operators.
 
 Scale ladder: brute force is the oracle/baseline (O(n*q) with
-broadcast queries — no shuffle); BucketedRandomProjectionLSH is the
+broadcast queries — no shuffle); BucketedRandomProjectionLSH hash
+cells through the id-only api_lsh candidate join (`_brp_gated_pairs`:
+a self-join for the threshold join, query-vs-corpus for kNN) are the
 sub-quadratic candidate path; IVF (KMeans-partitioned search) is the
 cluster-pruned path — both verified for recall against brute force
 in unit tests.
@@ -255,10 +257,7 @@ def sim_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     radius 0-1 with more planes."""
     e = table(spark, sf_dir, "embeddings")
     # r13: quantize once into qv; candidates score via qdot.
-    qe_arr = F.transform(
-        F.col("embedding"),
-        lambda v: F.round(v.cast("double") * 1_000_000).cast("long"),
-    )
+    qe_arr = api.quantize_vec(F.col("embedding"))
     sig = e.select(
         "vec_id",
         qe_arr.alias("qv"),
@@ -432,34 +431,16 @@ def vec_norm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate kNN via BucketedRandomProjectionLSH (random
     hyperplane buckets; unit-norm => euclidean dist = sqrt(2-2cos),
-    so a distance threshold of 1.2 covers cosine >= 0.28). Seeded,
-    rows-only; unit test measures recall vs sim_knn_brute."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", array_to_vector(F.col("embedding")).alias("features")
-    )
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=0.5,
-        numHashTables=6,
-        seed=42,
-    ).fit(e)
-    # r13 (guide §2.4): pre-hash ONCE and localCheckpoint so the
-    # join does not re-run scan+vectorize+hash on BOTH sides (same
-    # seeded model => identical candidates).  r14 A/B: 0.75 s with
-    # vs 1.09 s without — kept.
-    hashed = lifecycle.checkpoint(lsh.transform(e))
-    q = hashed.where(F.col("vec_id") < 5)
-    pairs = lsh.approxSimilarityJoin(q, hashed, 1.2, distCol="eucl_dist")
-    scored = pairs.where(
-        F.col("datasetA.vec_id") != F.col("datasetB.vec_id")
-    ).select(
-        F.col("datasetA.vec_id").alias("query_id"),
-        F.col("datasetB.vec_id").alias("neighbor_id"),
-        (1 - F.col("eucl_dist") * F.col("eucl_dist") / 2).alias("est_cosine"),
+    so a distance threshold of 1.2 covers cosine >= 0.28).  The 5
+    query vectors meet the corpus in the two-sided candidate join of
+    `_brp_gated_pairs`, which keeps exactly the pairs and distances of
+    MLlib's approxSimilarityJoin(q, e, 1.2) (tests/test_lsh.py).
+    Seeded, rows-only; unit test measures recall vs sim_knn_brute."""
+    gated, _ = _brp_gated_pairs(spark, sf_dir, **_BRP_KNN, queries=F.col("vec_id") < 5)
+    scored = gated.where(F.col("vec_a") != F.col("vec_b")).select(
+        F.col("vec_a").alias("query_id"),
+        F.col("vec_b").alias("neighbor_id"),
+        (1 - F.col("dist") * F.col("dist") / 2).alias("est_cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("est_cosine"), "neighbor_id")
     return (
@@ -469,13 +450,31 @@ def sim_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BRP_GATE = 1.0955  # cosine >= 0.4  <=>  euclidean <= sqrt(2 - 0.8) ~= 1.0954
+# Each BRP-LSH query's model (bucket length, tables, seed) and
+# euclidean gate.  Threshold join: cosine >= 0.4 <=> euclidean <=
+# sqrt(2 - 0.8) ~= 1.0954.
+_BRP_GATE = 1.0955
+_BRP_THRESHOLD = dict(bucket_length=0.7, num_tables=8, seed=7, gate=_BRP_GATE)
+_BRP_KNN = dict(bucket_length=0.5, num_tables=6, seed=42, gate=1.2)
 
 
-def _brp_gated_pairs(spark: SparkSession, sf_dir: str):
-    """(vec_a, vec_b, emb_a, emb_b, dist) for the pairs MLlib's
-    ``approxSimilarityJoin(e, e, _BRP_GATE)`` keeps (vec_a < vec_b,
-    embeddings widened to array<double>), and the fitted model.
+def _brp_gated_pairs(
+    spark: SparkSession,
+    sf_dir: str,
+    *,
+    bucket_length: float,
+    num_tables: int,
+    seed: int,
+    gate: float,
+    queries: Column | None = None,
+):
+    """(vec_a, vec_b, emb_a, emb_b, dist) for the embedding pairs
+    MLlib's ``approxSimilarityJoin`` keeps at distance < ``gate`` on a
+    BucketedRandomProjectionLSH model (embeddings widened to
+    array<double>), and the fitted model.  Without ``queries`` this
+    is ``approxSimilarityJoin(e, e)`` with vec_a < vec_b; with it,
+    ``approxSimilarityJoin(e.where(queries), e)``, every pair kept
+    (a query meets itself at distance 0).
 
     The fixture embeddings are LSH-degenerate (1.99 M of the 2.00 M
     pairs collide at sf0.1), and approxSimilarityJoin shuffles every
@@ -496,15 +495,18 @@ def _brp_gated_pairs(spark: SparkSession, sf_dir: str):
     lsh = BucketedRandomProjectionLSH(
         inputCol="features",
         outputCol="hashes",
-        bucketLength=0.7,
-        numHashTables=8,
-        seed=7,
+        bucketLength=bucket_length,
+        numHashTables=num_tables,
+        seed=seed,
     ).fit(e)
-    tables = [vector_to_array(F.col("hashes")[t])[0] for t in range(8)]
-    cells = lifecycle.checkpoint(  # 8 narrow rows per vector
-        lsh_cells(lsh.transform(e), "vec_id", tables)
-    )
-    cand = lsh_candidates(cells).toDF("vec_a", "vec_b")
+    tables = [vector_to_array(F.col("hashes")[t])[0] for t in range(num_tables)]
+
+    def hash_cells(df: DataFrame) -> DataFrame:  # num_tables rows per vector
+        return lsh_cells(lsh.transform(df), "vec_id", tables)
+
+    cells = lifecycle.checkpoint(hash_cells(e))
+    sides = [cells] if queries is None else [hash_cells(e.where(queries)), cells]
+    cand = lsh_candidates(*sides).toDF("vec_a", "vec_b")
     cand = spread(cand, sf_dir, "embeddings", "vec_a", "vec_b")
     emb = e.select("vec_id", F.col("embedding").cast("array<double>"))
     dist = key_distance(F.col("emb_a"), F.col("emb_b"))
@@ -512,7 +514,7 @@ def _brp_gated_pairs(spark: SparkSession, sf_dir: str):
         cand.join(emb.toDF("vec_a", "emb_a"), "vec_a")
         .join(emb.toDF("vec_b", "emb_b"), "vec_b")
         .withColumn("dist", dist)
-        .where(F.col("dist") < _BRP_GATE)
+        .where(F.col("dist") < gate)
     )
     return gated, lsh
 
@@ -529,7 +531,7 @@ def sim_threshold_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only by design: the candidate set depends on pyspark.ml's
     private hyperplane hash family, which no ANSI-SQL oracle can
     reproduce — the exact twin carries the hash grade."""
-    gated, _ = _brp_gated_pairs(spark, sf_dir)
+    gated, _ = _brp_gated_pairs(spark, sf_dir, **_BRP_THRESHOLD)
     pairs = gated.select(
         "vec_a", "vec_b", dot_dec(F.col("emb_a"), F.col("emb_b")).alias("cosine")
     )
@@ -748,10 +750,7 @@ def sim_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantized ONCE (r6 — per-element re-quantization in the argmin
     was uncodegennable, ~10x); r13 notes inline below."""
     e = table(spark, sf_dir, "embeddings")
-    qe = F.transform(
-        F.col("embedding"),
-        lambda v: F.round(v.cast("double") * 1_000_000).cast("long"),
-    )
+    qe = api.quantize_vec(F.col("embedding"))
     e2 = e.select("vec_id", qe.alias("qv"))
     cents = {
         r["vec_id"]: [int(x) for x in r["qv"]]
@@ -923,10 +922,7 @@ def vec_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_PQ_K} codebook rows (bounded scalar staging).  Emits scalar
     code columns per the driver convention, not an array."""
     e = table(spark, sf_dir, "embeddings")
-    qe = F.transform(
-        F.col("embedding"),
-        lambda v: F.round(v.cast("double") * 1_000_000).cast("long"),
-    )
+    qe = api.quantize_vec(F.col("embedding"))
     e2 = e.select("vec_id", "embedding", qe.alias("qv"))
     cents = {
         r["vec_id"]: [int(x) for x in r["qv"]]
@@ -1004,10 +1000,7 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders.  The graded contract here is the ADC *arithmetic*,
     which is bit-exact."""
     e = table(spark, sf_dir, "embeddings")
-    qe = F.transform(
-        F.col("embedding"),
-        lambda v: F.round(v.cast("double") * 1_000_000).cast("long"),
-    )
+    qe = api.quantize_vec(F.col("embedding"))
     e2 = e.select("vec_id", qe.alias("qv"))
     # ONE bounded collect: the centroid set (vec_id < _PQ_K) is a
     # subset of the query set (vec_id < 5)
@@ -1036,28 +1029,17 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         for qid, qvec in queries.items()
     }
 
-    # Codebook and LUT literals assembled as single F.expr SQL
-    # strings (the multimodal_audio_rms lesson: Column-by-Column
-    # construction costs hundreds of py4j round trips per bench run,
-    # ~1.2 s measured r8). Identical expressions.
-    def sub_dist2_sql(m: int, c: list) -> str:
-        lits = ",".join(str(x) for x in c[m * _PQ_SUB : (m + 1) * _PQ_SUB])
-        return (
-            f"aggregate(zip_with(slice(qv, {m * _PQ_SUB + 1}, {_PQ_SUB}),"
-            f" array({lits}), (x, y) -> (x - y) * (x - y)),"
-            f" CAST(0 AS BIGINT), (a, t) -> a + t)"
-        )
-
-    coded = e2
-    for m in range(_PQ_M):
-        structs = ",".join(
-            f"named_struct('d', {sub_dist2_sql(m, c)},"
-            f" 'k', CAST({k} AS BIGINT))"
-            for k, c in enumerate(c for _, c in sorted(cents.items()))
-        )
-        coded = coded.withColumn(
-            f"code_{m}", F.expr(f"array_min(array({structs})).k")
-        )
+    # the corpus codes are vec_pq_encode's; the LUT literals are
+    # assembled as single F.expr SQL strings (the multimodal_audio_rms
+    # lesson: Column-by-Column construction costs hundreds of py4j
+    # round trips per bench run, ~1.2 s measured r8)
+    coded = api.pq_encode(
+        e,
+        "vec_id",
+        "embedding",
+        codebook_q=[cents[k] for k in sorted(cents)],
+        n_subspaces=_PQ_M,
+    )
 
     per_query = ",".join(
         "named_struct('query_id', CAST({qid} AS BIGINT), 'adc_dist2', {s})".format(
@@ -1702,12 +1684,7 @@ def sim_centroid_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
     xq = e.select(
         "label",
-        F.posexplode(
-            F.transform(
-                F.col("embedding"),
-                lambda v: F.round(v.cast("double") * 1_000_000).cast("long"),
-            )
-        ).alias("pos0", "q"),
+        F.posexplode(api.quantize_vec(F.col("embedding"))).alias("pos0", "q"),
     )
     cs = xq.groupBy("label", F.col("pos0").alias("pos")).agg(
         F.sum("q").cast("long").alias("s"),
@@ -1921,10 +1898,7 @@ def vec_rq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
     q = e.select(
         "vec_id",
-        F.transform(
-            F.col("embedding"),
-            lambda v: F.round(v.cast("double") * 1_000_000).cast("long"),
-        ).alias("qv"),
+        api.quantize_vec(F.col("embedding")).alias("qv"),
     )
     c1 = q.where(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("code1"), F.col("qv").alias("cv1")

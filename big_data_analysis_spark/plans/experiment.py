@@ -24,7 +24,7 @@ from ..api_lsh import (  # the table's names are also read from here by tests
     _dp_thresholds,
     dp_noisy_counts,
 )
-from .. import lifecycle
+from .. import api, lifecycle
 from ..io import table
 from ..registry import query
 from ..operators.stats_ext import _CENTS_SQL, _GRID_SQL, _day_grid
@@ -203,10 +203,7 @@ def pipeline_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = lifecycle.checkpoint(
         e.select(
             "vec_id",
-            F.transform(
-                F.col("embedding"),
-                lambda v: F.round(v.cast("double") * 1_000_000).cast("long"),
-            ).alias("xq"),
+            api.quantize_vec(F.col("embedding")).alias("xq"),
         )
     )
     q_terms = " + ".join(

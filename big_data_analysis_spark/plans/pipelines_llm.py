@@ -23,6 +23,7 @@ from pyspark.sql.window import Window
 
 from .. import api
 from .. import lifecycle
+from ..api_lsh import _minhash_token_pairs
 from ..io import spread_table, table
 from ..registry import query
 from ..api_rank import global_rank_distributed, grouped_cumsum_distributed
@@ -126,13 +127,15 @@ def pipeline_kanonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("pipeline_incremental_minhash", oracle=None, category="pipelines")
 def pipeline_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL near-dup dedup — the fuzzy tier of
-    pipeline_incremental_dedup's ladder: the accepted corpus's
-    MinHash index is built once (model fit = hash coefficients only;
-    the banded signature table is what production persists), and an
-    arriving batch is transformed with the SAME coefficients and
-    band-joined against the base index — batch vs base only, never
-    batch vs batch, never base vs base, and the corpus text never
-    moves.
+    pipeline_incremental_dedup's ladder: the arriving batch is hashed
+    with the SAME MinHash coefficients as the accepted corpus (the
+    model is its seed and vector size; the banded signature table is
+    what production persists) and band-joined against the base index
+    by the two-sided api_lsh join: batch vs base only, never batch vs
+    batch, never base vs base, and the corpus text never moves.  The
+    pairs and their jaccard doubles are those of MLlib's
+    approxSimilarityJoin(batch, base, 0.5) on the same model
+    (tests/test_lsh.py), without its vector-payload shuffle.
 
     Synthetic wide-vocab corpus (shared _widevocab_tokens; planted
     4-doc clusters at Jaccard ~0.67): batch = every 4th doc, whose 3
@@ -141,12 +144,10 @@ def pipeline_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     admitted. Rows-only (sketch internals); the classification is
     asserted exactly in tests/test_quality.py.
 
-    At 100 TB: transform(batch) is a map stage, the band join touches
-    only colliding signatures, and the exact-Jaccard verify touches
-    only candidates — incremental cost scales with the BATCH, not the
-    corpus."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
+    At 100 TB: hashing the batch is a map stage, the band join moves
+    only the ids of colliding signatures, and the exact-Jaccard
+    verify touches only candidates — incremental cost scales with
+    the BATCH, not the corpus."""
     from ..operators.dedup import _widevocab_tokens
 
     d = table(spark, sf_dir, "documents").select(
@@ -163,17 +164,12 @@ def pipeline_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = d.where(F.col("doc_id") % 4 != 3)
     batch = d.where(F.col("doc_id") % 4 == 3)
-    tf = HashingTF(
-        inputCol="toks", outputCol="features", numFeatures=1 << 18, binary=True
-    )
-    base_f, batch_f = tf.transform(base), tf.transform(batch)
-    mh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=8, seed=42
-    ).fit(base_f)
     hits = (
-        mh.approxSimilarityJoin(batch_f, base_f, 0.5, distCol="jd")
-        .groupBy(F.col("datasetA.doc_id").alias("doc_id"))
-        .agg(F.max(1 - F.col("jd")).alias("best_jaccard"))
+        _minhash_token_pairs(
+            batch, base, threshold=0.5, num_tables=8, num_features=1 << 18, seed=42
+        )
+        .groupBy(F.col("id_a").alias("doc_id"))
+        .agg(F.max("jaccard").alias("best_jaccard"))
     )
     return (
         batch.select("doc_id")

@@ -67,13 +67,27 @@ def test_release_returns_persistent_rdds_to_baseline(spark, sf_dir, name):
     assert _persistent_ids(spark) - baseline == set()
 
 
+def _left_after(spark, sf_dir, name) -> set[int]:
+    """The RDDs query ``name`` leaves persisted once it has run."""
+    lifecycle.release_kernel_persists(blocking=True)
+    baseline = _persistent_ids(spark)
+    _execute(load_all()[name].fn(spark, sf_dir))
+    left = _persistent_ids(spark) - baseline
+    lifecycle.release_kernel_persists(blocking=True)
+    return left
+
+
 def test_graph_hits_keeps_at_most_two_rounds(spark, sf_dir):
     """fixpoint frees each round once two newer rounds exist, so HITS
     leaves its seed plus the last two rounds, whatever the JVM garbage
     collector has done."""
-    lifecycle.release_kernel_persists(blocking=True)
-    baseline = _persistent_ids(spark)
-    _execute(load_all()["graph_hits"].fn(spark, sf_dir))
-    left = _persistent_ids(spark) - baseline
-    lifecycle.release_kernel_persists(blocking=True)
+    left = _left_after(spark, sf_dir, "graph_hits")
     assert len(left) <= 3, sorted(left)
+
+
+def test_bpe_train_frees_every_merge_step(spark, sf_dir):
+    """api.bpe_train frees each merge step's word table once the next
+    exists, and the last once the merge list is on the driver: the
+    returned frame is built from that list, so nothing is left."""
+    left = _left_after(spark, sf_dir, "pipeline_bpe_train")
+    assert left == set(), sorted(left)

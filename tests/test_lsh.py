@@ -1,9 +1,12 @@
 """LSH family: the shared candidate kernels of api_lsh
-(`lsh_cells` / `lsh_candidates` / `pair_overlap`) and the queries
-built on them.  MLlib's approxSimilarityJoin stays here as the
-reference implementation of api.minhash_pairs; the deterministic
-md5 twins are replayed in pure Python (hashlib over DuckDB-extracted
-raw tables); plan checks pin the banded equi-join and the
+(`lsh_cells` / `lsh_candidates` / `pair_overlap`, self-joined or
+two-sided) and the queries built on them.  No query calls MLlib's
+approxSimilarityJoin; it lives on here as the reference that the
+MinHash pairs (api.minhash_pairs, the incremental batch-vs-base join)
+and the BRP gates (sim_threshold_join_lsh, sim_knn_lsh) must equal
+pair for pair and double for double.  The deterministic md5 twins
+are replayed in pure Python (hashlib over DuckDB-extracted raw
+tables); plan checks pin the banded equi-join and the
 candidate-bounded verify."""
 
 from __future__ import annotations
@@ -253,10 +256,11 @@ def test_brp_gate_equals_mllib_approx_similarity_join(spark, sf_dir):
 
     from big_data_analysis_spark.operators.similarity import (
         _BRP_GATE,
+        _BRP_THRESHOLD,
         _brp_gated_pairs,
     )
 
-    gated, model = _brp_gated_pairs(spark, sf_dir)
+    gated, model = _brp_gated_pairs(spark, sf_dir, **_BRP_THRESHOLD)
     got = sorted(tuple(r) for r in gated.select("vec_a", "vec_b", "dist").collect())
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", array_to_vector("embedding").alias("features")
@@ -265,6 +269,70 @@ def test_brp_gate_equals_mllib_approx_similarity_join(spark, sf_dir):
         model.approxSimilarityJoin(e, e, _BRP_GATE, distCol="dist")
         .where(F.col("datasetA.vec_id") < F.col("datasetB.vec_id"))
         .select(F.col("datasetA.vec_id"), F.col("datasetB.vec_id"), "dist")
+    )
+    want = sorted(tuple(r) for r in ref.collect())
+    assert len(want) > 0
+    assert got == want
+
+
+def test_knn_lsh_equals_mllib_two_sided_join(spark, sf_dir):
+    """sim_knn_lsh's two-sided candidate join and gate keep exactly the
+    (query, neighbor) pairs MLlib's approxSimilarityJoin(q, e, 1.2)
+    keeps on the same fitted model, each query's pair with itself
+    included, with bit-equal keyDistance doubles."""
+    from pyspark.ml.functions import array_to_vector
+
+    from big_data_analysis_spark.operators.similarity import (
+        _BRP_KNN,
+        _brp_gated_pairs,
+    )
+
+    gated, model = _brp_gated_pairs(
+        spark, sf_dir, **_BRP_KNN, queries=F.col("vec_id") < 5
+    )
+    got = sorted(tuple(r) for r in gated.select("vec_a", "vec_b", "dist").collect())
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", array_to_vector("embedding").alias("features")
+    )
+    q = e.where(F.col("vec_id") < 5)
+    ref = model.approxSimilarityJoin(q, e, 1.2, distCol="dist").select(
+        F.col("datasetA.vec_id"), F.col("datasetB.vec_id"), "dist"
+    )
+    want = sorted(tuple(r) for r in ref.collect())
+    assert {a for a, _, _ in want} == set(range(5))
+    assert got == want
+
+
+def test_incremental_minhash_equals_mllib_two_sided_join(spark, sf_dir):
+    """The batch-vs-base pairs of pipeline_incremental_minhash are
+    exactly those of MLlib's approxSimilarityJoin(batch_f, base_f,
+    0.5), jaccard doubles bit-equal.  The reference model is fitted
+    on the base and the kernel's on the batch: the coefficients
+    depend only on the seed and the vector size."""
+    from pyspark.ml.feature import HashingTF, MinHashLSH
+
+    from big_data_analysis_spark.api_lsh import _minhash_token_pairs
+
+    d = _documents(spark, sf_dir, "widevocab").select(
+        "doc_id", F.split("text", " ").alias("toks")
+    )
+    base = d.where(F.col("doc_id") % 4 != 3)
+    batch = d.where(F.col("doc_id") % 4 == 3)
+    got = sorted(
+        tuple(r)
+        for r in _minhash_token_pairs(
+            batch, base, threshold=0.5, num_tables=8, num_features=1 << 18, seed=42
+        ).collect()
+    )
+    tf = HashingTF(
+        inputCol="toks", outputCol="features", numFeatures=1 << 18, binary=True
+    )
+    base_f, batch_f = tf.transform(base), tf.transform(batch)
+    model = MinHashLSH(
+        inputCol="features", outputCol="hashes", numHashTables=8, seed=42
+    ).fit(base_f)
+    ref = model.approxSimilarityJoin(batch_f, base_f, 0.5, distCol="jd").select(
+        F.col("datasetA.doc_id"), F.col("datasetB.doc_id"), (1 - F.col("jd"))
     )
     want = sorted(tuple(r) for r in ref.collect())
     assert len(want) > 0

@@ -370,14 +370,14 @@ def test_ngram_df_cap_bounds_fanout(spark, sf_dir, monkeypatch):
     """With a tiny cap, hot grams must vanish from the pair join
     (bounded per-gram fan-out); with the default cap the result is
     identical to uncapped (fixture max df 25 << 1000)."""
-    import os
+    from big_data_analysis_spark.operators import dedup
 
     default = run("dedup_ngram_jaccard", spark, sf_dir).collect()
-    monkeypatch.setenv("SPARK_GRAFT_NGRAM_DF_CAP", "1")
+    monkeypatch.setattr(dedup, "_NGRAM_DF_CAP", 1)
     capped = run("dedup_ngram_jaccard", spark, sf_dir).collect()
     # cap=1 drops every shared gram -> no candidate pair survives
     assert len(capped) == 0
-    monkeypatch.setenv("SPARK_GRAFT_NGRAM_DF_CAP", "1000000")
+    monkeypatch.setattr(dedup, "_NGRAM_DF_CAP", 1_000_000)
     uncapped = run("dedup_ngram_jaccard", spark, sf_dir).collect()
     assert sorted(map(tuple, default)) == sorted(map(tuple, uncapped))
 
@@ -941,6 +941,30 @@ def test_only_lifecycle_manages_storage():
                 rel = str(path.relative_to(root))
                 bare.setdefault(rel, []).append(node.lineno)
     assert bare == {}, f"{len(bare)} files manage storage directly: {bare}"
+
+
+def test_no_mllib_similarity_join_in_the_package():
+    """Every LSH candidate search runs through api_lsh's id-only join:
+    MLlib supplies the hash family, never the join, whose candidate
+    shuffle carries each collision's full vector payload.  An
+    ``approxSimilarityJoin(`` call anywhere in the package fails here
+    (tests/test_lsh.py keeps it as the reference)."""
+    import ast
+    import pathlib
+
+    import big_data_analysis_spark
+
+    root = pathlib.Path(big_data_analysis_spark.__file__).parent
+    calls = {}
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "approxSimilarityJoin"
+            ):
+                calls.setdefault(str(path.relative_to(root)), []).append(node.lineno)
+    assert calls == {}, f"approxSimilarityJoin called in {calls}"
 
 
 def _py_soundex(word: str) -> str:

@@ -44,6 +44,7 @@ def main() -> int:
     )
     args = ap.parse_args()
 
+    from big_data_analysis_spark.lifecycle import release_kernel_persists
     from big_data_analysis_spark.registry import load_all
     from big_data_analysis_spark.session import get_spark
 
@@ -59,6 +60,8 @@ def main() -> int:
                 failed += 1
                 print(f"{name} {sf} ERROR {type(exc).__name__}: {exc}", flush=True)
                 continue
+            finally:  # the next pair does not need this one's blocks
+                release_kernel_persists()
             print(
                 f"{name} {sf} rows={n} rows_sha256={rows_sha}"
                 f" schema_sha256={schema_sha}",
