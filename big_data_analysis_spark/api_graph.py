@@ -46,25 +46,35 @@ def _min_label_step(edges: DataFrame, id_name: str):
     flagged ``__delta`` in the round before, and ``__delta`` flags the
     labels that dropped.  An unflagged neighbour sent its label the
     round it was set, so with every row flagged at the start the table
-    equals full min-label propagation's after every round."""
+    equals full min-label propagation's after every round.  As in
+    SSSP's step, a round is one union of (node, old, cand) rows and
+    one group-by taking the min of each column; every ``dst`` is a
+    node of the state, because ``edges`` is symmetric.  A null id
+    takes no candidate, as it would match no join key, and keeps its
+    own label."""
 
     def step(labels: DataFrame) -> DataFrame:
-        nmin = (
+        none = F.lit(None).cast(labels.schema["label"].dataType)
+        old = labels.select(id_name, F.col("label").alias("old"), none.alias("cand"))
+        cand = (
             edges.join(
                 labels.where("__delta").select(
-                    F.col(id_name).alias("src"), F.col("label").alias("nlabel")
+                    F.col(id_name).alias("src"), F.col("label").alias("cand")
                 ),
                 "src",
             )
-            .groupBy(F.col("dst").alias(id_name))
-            .agg(F.min("nlabel").alias("nmin"))
+            .where(F.col("dst").isNotNull())
+            .select(F.col("dst").alias(id_name), none.alias("old"), "cand")
         )
-        return labels.join(nmin, id_name, "left").select(
-            id_name,
-            F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias(
-                "label"
-            ),
-            F.coalesce(F.col("nmin") < F.col("label"), F.lit(False)).alias("__delta"),
+        return (
+            old.unionByName(cand)
+            .groupBy(id_name)
+            .agg(F.min("old").alias("old"), F.min("cand").alias("cand"))
+            .select(
+                id_name,
+                F.least("old", "cand").alias("label"),
+                F.coalesce(F.col("cand") < F.col("old"), F.lit(False)).alias("__delta"),
+            )
         )
 
     return step
@@ -114,7 +124,7 @@ def connected_components(pairs: DataFrame, id_name: str) -> DataFrame:
     budget is the node count: min-label converges within
     diameter + 1 <= n rounds, so the loop always reaches the fixpoint."""
     a, b = pairs.columns
-    edges = lifecycle.persist(
+    edges = lifecycle.checkpoint(
         pairs.union(pairs.select(F.col(b), F.col(a))).toDF("src", "dst")
     )
     labels, n = counted_checkpoint(

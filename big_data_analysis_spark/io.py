@@ -6,12 +6,18 @@ under ``{sf_dir}/{name}.parquet``.
 
 Scans go through ``spark.read.parquet`` so Catalyst gets predicate
 pushdown + column pruning for free; callers must select narrow and
-filter early (verified via .explain in tests).
+filter early (verified via .explain in tests).  A local file's
+inferred schema is memoized (``_read_parquet``), so only the first
+read of a file runs Spark's footer job.
 """
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .session import harden_session
 
@@ -33,11 +39,48 @@ TABLES = (
 BROADCAST_SAFE = ("region", "nation")
 
 
+_SCHEMAS: dict[tuple, StructType] = {}
+# the session settings that change what parquet schema inference returns
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, reading a local regular file
+    through the schema inferred at its first read.  Inference runs a
+    one-task job over the footer on every call; the memo key is the
+    file's realpath, mtime and size plus the settings that inference
+    reads.  Any other path (a directory, a URI, a glob) is inferred on
+    every call."""
+    try:
+        st = os.stat(path)
+    except (OSError, ValueError):
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (
+        os.path.realpath(path),
+        st.st_mtime_ns,
+        st.st_size,
+        *(spark.conf.get(k) for k in _INFER_CONFS),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     harden_session(spark)
     if name == "events":
         return _events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -54,7 +97,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Both match DuckDB's reading of the same file."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/events.parquet")
     from pyspark.sql import functions as F
 
     if dict(df.dtypes)["ts"] == "bigint":  # raw nanos

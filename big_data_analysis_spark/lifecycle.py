@@ -51,7 +51,14 @@ def checkpoint(df: DataFrame) -> DataFrame:
 def persist(df: DataFrame) -> DataFrame:
     """``df`` persisted (lazily, at the default storage level).  Unlike
     a checkpoint, a persisted frame keeps its ``outputPartitioning``,
-    so a join on the partitioning key reads it without a shuffle."""
+    so a join on the partitioning key reads it without a shuffle.  It
+    also keeps its partition count: AQE does not coalesce a cached
+    plan, so a frame persisted after a shuffle has all
+    ``spark.sql.shuffle.partitions`` partitions and every scan of it
+    runs that many tasks, however small it is.  Persist only where a
+    later join reuses the hash partitioning, as ``api.walk_adjacency``
+    does; a frame that is merely read many times (a fixpoint's edge
+    table) is a ``checkpoint``, whose width AQE sizes."""
     df = df.persist()
     _PERSISTED.append(df)
     return df

@@ -5,10 +5,12 @@ centralities.  Every round loop runs through fixpoint.fixpoint
 (join + groupBy per round, one eager localCheckpoint per round whose
 jobs also report the round's change count).
 
-At 100 TB the per-iteration cost is one shuffle of the rank table on
-dst — the edge table is re-used co-partitioned every round (persist +
-same key), which is exactly GraphX/Pregel's execution shape on the
-DataFrame runtime.
+At 100 TB the per-iteration cost is one join of the round's state
+with the loop-invariant edge table plus one group-by, GraphX/Pregel's
+superstep on the DataFrame runtime.  Each kernel builds its edge
+table once before the loop as a checkpoint, whose partitions AQE
+sizes (``api.pagerank`` still persists its own); each round shuffles
+it on its join key or broadcasts the smaller side.
 """
 
 from __future__ import annotations
@@ -387,9 +389,11 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Execution shape: _bfs from the one root; the hop cap bounds the
     rounds.  At 100 TB this is Pregel's BFS on the DataFrame
-    runtime: edges stay co-partitioned on src across rounds."""
-    e = lifecycle.persist(_edges(spark, sf_dir))
-    root = spark.range(1).select(F.col("id").alias("node"))
+    runtime.  The edge table is a checkpoint built once before the
+    loop; its distinct partitions it on (src, dst), not src, so each
+    round's join shuffles it on src or broadcasts the smaller side."""
+    e = lifecycle.checkpoint(_edges(spark, sf_dir))
+    root = spark.range(0, 1, 1, 1).select(F.col("id").alias("node"))
     visited = _bfs("graph_bfs_distance", e, root, _BFS_MAX_HOPS)
     lifecycle.free(e)
     return visited.select("node", "dist")
@@ -434,11 +438,13 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     (RaSQL): the frontier is the rows flagged ``__delta`` (added or
     lowered) in the round before, whose relaxation is the only one
     that can lower a distance, so every round's table equals
-    full Bellman-Ford's. Edges stay
-    co-partitioned on src; rounds are bounded by the weight cap
-    (every optimal path has ≤ {_SSSP_CAP} edges since weights ≥ 1).
-    The Pregel SSSP shape on the DataFrame runtime."""
-    e = lifecycle.persist(
+    full Bellman-Ford's.  Rounds are bounded by the weight cap (every
+    optimal path has ≤ {_SSSP_CAP} edges since weights ≥ 1).  The
+    Pregel SSSP shape on the DataFrame runtime.  The edge table is a
+    checkpoint built once before the loop; its distinct partitions it
+    on (src, dst), not src, so each round's join shuffles it on src or
+    broadcasts the smaller side."""
+    e = lifecycle.checkpoint(
         _edges(spark, sf_dir)
         .select(
             "src",
@@ -446,7 +452,7 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
             (1 + (F.col("src") * 7 + F.col("dst") * 13) % 5).alias("w"),
         )
     )
-    dist = spark.range(1).select(
+    dist = spark.range(0, 1, 1, 1).select(
         F.col("id").alias("node"), F.col("id").alias("dist"), F.lit(True).alias("__delta")
     )
     none = F.lit(None).cast("long")
@@ -717,10 +723,11 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Execution shape per fixpoint round: TWO bounded shuffles (hub
     mass grouped by dst -> auth; auth mass grouped by src -> hub),
-    each normalization a 1-row broadcast crossJoin; at 100 TB the
-    edge table stays co-partitioned and only the score tables
-    move."""
-    e = lifecycle.persist(_edges(spark, sf_dir))
+    each normalization a 1-row broadcast crossJoin.  The edge table is
+    a checkpoint built once before the loop; its distinct partitions
+    it on (src, dst), so each half-step's join shuffles it on the
+    endpoint it joins on or broadcasts the smaller side."""
+    e = lifecycle.checkpoint(_edges(spark, sf_dir))
     nodes = _nodes(e)
     scores = lifecycle.checkpoint(
         nodes.select("node", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth"))
@@ -920,7 +927,10 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     Execution shape per round: one join of the labels flagged
     ``__delta`` in the round before (the semi-naive frontier of
     api_graph._min_label_step) against the static symmetrized edge
-    table (co-partitioned on src across rounds) + one min aggregate.
+    table + one min aggregate.  The edge table is a checkpoint built
+    once before the loop; its distinct partitions it on (src, dst),
+    not src, so each round's join shuffles it on src or broadcasts
+    the smaller side.
     The edge table comes from one lineitem scan emitting both
     directions of every pair."""
     li = table(spark, sf_dir, "lineitem")
@@ -1023,8 +1033,8 @@ def graph_hits_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Execution shape per round: two bounded shuffles (hub mass by
     dst, authority mass by src), each max a 1-row broadcast
     crossJoin; the 10 rounds are a fixpoint budget (early exit once no
-    hub score moves). At 100 TB the edge table stays co-partitioned;
-    only score rows move."""
+    hub score moves).  The edge table is a checkpoint built before the
+    loop."""
     S = _HITS_SCALE
     e = lifecycle.checkpoint(_edges(spark, sf_dir))
     nodes = lifecycle.checkpoint(_nodes(e))
@@ -1402,7 +1412,7 @@ def graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     inherently quadratic in reachable mass; the kernel keeps every
     step key-partitioned (no broadcast of anything
     data-proportional)."""
-    e = lifecycle.persist(_edges(spark, sf_dir))
+    e = lifecycle.checkpoint(_edges(spark, sf_dir))
     nodes = e.select(F.col("src").alias("node")).distinct()
     visited = _bfs("graph_closeness", e, nodes, _CLOSENESS_HOPS)
     lifecycle.free(e)
@@ -1482,7 +1492,7 @@ def graph_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     the nodes whose distance rose in the round before (``__delta``),
     which yields the same table as relaxing every edge."""
     li = table(spark, sf_dir, "lineitem")
-    e = lifecycle.persist(
+    e = lifecycle.checkpoint(
         li.select(
             (F.col("l_orderkey") % 100).alias("src"),
             (F.col("l_partkey") % 100).alias("dst"),
@@ -1756,7 +1766,7 @@ def graph_eccentricity(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching the oracle recursion bound.  Same
     quadratic-in-reachable-mass bound as all-pairs centrality;
     key-partitioned throughout."""
-    e = lifecycle.persist(_edges(spark, sf_dir))
+    e = lifecycle.checkpoint(_edges(spark, sf_dir))
     nodes = e.select(F.col("src").alias("node")).distinct()
     visited = _bfs("graph_eccentricity", e, nodes, _CLOSENESS_HOPS)
     lifecycle.free(e)

@@ -490,7 +490,11 @@ def _brp_gated_pairs(
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "embedding",
-        array_to_vector(F.col("embedding")).alias("features"),
+        # the fixture vectors are SEM_DIM wide; with that size in the
+        # column metadata, fit runs no job to learn it
+        array_to_vector(F.col("embedding")).alias(
+            "features", metadata={"ml_attr": {"num_attrs": SEM_DIM}}
+        ),
     )
     lsh = BucketedRandomProjectionLSH(
         inputCol="features",

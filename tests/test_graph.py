@@ -263,6 +263,22 @@ def test_critical_path_matches_dag_dp(spark, sf_dir):
     assert max(dist.values()) > max(w.values())
 
 
+def _jobs(spark):
+    """Every job the status store holds, by job id."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    js = sc._jsc.sc().statusStore().jobsList(None)
+    return {js.apply(i).jobId(): js.apply(i) for i in range(js.size())}
+
+
+def _executions(spark):
+    """SQL executions by id: one per action, whatever number of jobs
+    AQE splits it into."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    ex = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return {ex.apply(i).executionId(): ex.apply(i) for i in range(ex.size())}
+
+
 def test_fixpoint_rounds_run_under_job_descriptions(spark):
     """Every fixpoint round runs its jobs under "<name> round <k>", and
     the caller's own job description is back in place afterwards.
@@ -272,21 +288,11 @@ def test_fixpoint_rounds_run_under_job_descriptions(spark):
     import re
 
     sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    sql_store = spark._jsparkSession.sharedState().statusStore()
 
     def jobs():
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        js = store.jobsList(None)
-        return {js.apply(i).jobId(): js.apply(i).description() for i in range(js.size())}
+        return {j: job.description() for j, job in _jobs(spark).items()}
 
-    def executions():
-        """SQL executions by id: one per action, whatever number of jobs
-        AQE splits it into."""
-        ex = sql_store.executionsList()
-        return {ex.apply(i).executionId(): ex.apply(i) for i in range(ex.size())}
-
-    seen_jobs, seen_executions = set(jobs()), set(executions())
+    seen_jobs, seen_executions = set(jobs()), set(_executions(spark))
     # triangle 1-2-3 plus a pendant node 4: round 1 peels node 4,
     # round 2 peels nothing
     edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (3, 4)], "a long, b long")
@@ -306,7 +312,7 @@ def test_fixpoint_rounds_run_under_job_descriptions(spark):
     # row count on the seed checkpoint (no separate count)
     new_actions = [
         (e.description(), re.search(r"Dataset\.(\w+)\(", e.details()).group(1))
-        for i, e in sorted(executions().items())
+        for i, e in sorted(_executions(spark).items())
         if i not in seen_executions
     ]
     assert new_actions == [
@@ -315,6 +321,53 @@ def test_fixpoint_rounds_run_under_job_descriptions(spark):
         ("k_core round 2", "localCheckpoint"),
         ("collect", "collectToPython"),
     ], new_actions
+
+
+# each query whose fixpoint joins a loop-invariant edge table, and the
+# name its rounds run under
+_EDGE_LOOPS = {
+    "graph_sssp_weighted": "graph_sssp_weighted",
+    "graph_bfs_distance": "graph_bfs_distance",
+    "graph_hits": "graph_hits",
+    "graph_closeness": "graph_closeness",
+    "graph_critical_path": "graph_critical_path",
+    "graph_eccentricity": "graph_eccentricity",
+    "graph_connected_components": "graph_connected_components",
+    "dedup_cluster_cc": "connected_components",
+}
+
+
+@pytest.mark.parametrize("name", sorted(_EDGE_LOOPS))
+def test_fixpoint_rounds_read_no_cached_plan(spark, sf_dir, name):
+    """The edge table a fixpoint round joins is a checkpoint built
+    before the loop, never a persisted frame: AQE does not coalesce a
+    cached plan, so a round that scans one runs a task for each of
+    its spark.sql.shuffle.partitions partitions, however small the
+    graph.  The query runs once to warm the parquet schema memo, then
+    once counted; graph_connected_components' min-label round is one
+    union and one group-by, which keeps its build plus collect at 13
+    jobs (18 with an aggregate and a left join per round)."""
+    import re
+
+    run(name, spark, sf_dir).collect()
+    seen_jobs, seen_executions = set(_jobs(spark)), set(_executions(spark))
+    run(name, spark, sf_dir).collect()
+    rounds = [
+        e
+        for i, e in _executions(spark).items()
+        if i not in seen_executions
+        and re.fullmatch(rf"{_EDGE_LOOPS[name]} round \d+", e.description() or "")
+    ]
+    assert rounds
+    cached = [
+        e.description()
+        for e in rounds
+        if "InMemoryTableScan" in e.physicalPlanDescription()
+    ]
+    assert not cached, cached
+    if name == "graph_connected_components":
+        n_jobs = len(set(_jobs(spark)) - seen_jobs)
+        assert n_jobs <= 13, n_jobs
 
 
 def test_fixpoint_on_empty_state_runs_one_round(spark):
@@ -457,3 +510,12 @@ def test_api_cc_and_k_core_match_python_models(spark, pairs, k):
     deg = Counter(v for e in kept for v in e)
     got = {(r.node, r.core_degree) for r in api.k_core(df, "x", "y", k=k).collect()}
     assert got == set(deg.items())
+
+
+def test_api_cc_null_id_keeps_a_null_label(spark):
+    """A null id in the pair list is a node of its own: it matches no
+    join key, so it sends and takes no label and keeps label null,
+    while the ids around it still join their components."""
+    df = spark.createDataFrame([(1, 2), (2, None), (None, 3), (3, 4)], "x long, y long")
+    got = {r.nid: r.label for r in api.connected_components(df, "nid").collect()}
+    assert got == {1: 1, 2: 1, 3: 3, 4: 3, None: None}

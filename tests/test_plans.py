@@ -990,3 +990,42 @@ def test_power_iteration_single_gram_pass(spark, sf_dir):
     tree = plan.split("\n\n")[0]
     assert "Scan parquet" not in tree
     assert tree.count("Scan ExistingRDD") <= 2
+
+
+def test_memoized_parquet_schema_reads_like_inference(spark, sf_dir, monkeypatch):
+    """io.table reads a local file through the schema inferred at its
+    first read, which spares every later read Spark's footer job.  For
+    every table of the test fixtures (and of the benchmark's, when
+    they were generated), the memoized read has the inferred read's
+    schema JSON and optimized plan (expression ids normalized), and
+    runs no job."""
+    import os
+    import re
+
+    import big_data_analysis_spark.io as io
+
+    sc = spark.sparkContext
+    group = "memoized parquet reads"
+
+    def plan(df):
+        return re.sub(r"#\d+L?", "#", df._jdf.queryExecution().optimizedPlan().toString())
+
+    bench_data = os.path.join(os.path.dirname(os.path.dirname(__file__)), ".perfbench", "data")
+    dirs = [sf_dir]
+    if os.path.isdir(bench_data):
+        dirs.append(bench_data)
+    monkeypatch.setattr(io, "_SCHEMAS", {})
+    for d in dirs:
+        for name in io.TABLES:
+            inferred = io.table(spark, d, name)
+            sc.setJobGroup(group, group)
+            try:
+                memo = io.table(spark, d, name)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            assert memo.schema.json() == inferred.schema.json(), (d, name)
+            assert plan(memo) == plan(inferred), (d, name)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert len(io._SCHEMAS) == len(dirs) * len(io.TABLES)
