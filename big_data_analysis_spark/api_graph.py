@@ -12,7 +12,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import lifecycle
-from .fixpoint import counted_checkpoint, fixpoint
+from .fixpoint import fixpoint, observed_checkpoint
 
 
 def _nodes(e: DataFrame) -> DataFrame:
@@ -127,16 +127,17 @@ def connected_components(pairs: DataFrame, id_name: str) -> DataFrame:
     edges = lifecycle.checkpoint(
         pairs.union(pairs.select(F.col(b), F.col(a))).toDF("src", "dst")
     )
-    labels, n = counted_checkpoint(
+    labels, seen = observed_checkpoint(
         edges.select(F.col("src").alias(id_name))
         .distinct()
-        .select(id_name, F.col(id_name).alias("label"), F.lit(True).alias("__delta"))
+        .select(id_name, F.col(id_name).alias("label"), F.lit(True).alias("__delta")),
+        n=F.count(F.lit(1)),
     )
     labels, _, _, _ = fixpoint(
         "connected_components",
         labels,
         _min_label_step(edges, id_name),
-        max_rounds=n,
+        max_rounds=seen["n"],
         changed=_n_flagged(F.col("__delta")),
     )
     lifecycle.free(edges)
@@ -215,16 +216,17 @@ def k_core(edges: DataFrame, a_col: str, b_col: str, *, k: int = 3) -> DataFrame
     the edge count + 1 bounds the rounds and the fixpoint is always
     reached.  Order-independent, hence deterministic under any
     partitioning."""
-    u, n = counted_checkpoint(
+    u, seen = observed_checkpoint(
         edges.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
         .distinct()
-        .withColumn("alive", F.lit(True))
+        .withColumn("alive", F.lit(True)),
+        n=F.count(F.lit(1)),
     )
     core, _, _, _ = fixpoint(
         "k_core",
         u,
         _peel_step(k),
-        max_rounds=n + 1,
+        max_rounds=seen["n"] + 1,
         changed=_n_flagged(~F.col("alive")),
     )
     return _degrees(core.where("alive"), "core_degree")
@@ -248,8 +250,11 @@ def label_propagation(
     first.
 
     Shape per half-round: one shuffle joining the label table to the
-    adjacency on the neighbor key + one (node, label) count-argmax
-    aggregation; rounds run through ``fixpoint``."""
+    adjacency on the neighbor key, one (node, label) count-argmax
+    aggregation, and the label table LEFT JOIN the picked labels, so a
+    node that picked nothing (the other side) keeps its label.  Each
+    round carries the labels it started from as ``prev``; rounds run
+    through ``fixpoint``."""
     u = lifecycle.checkpoint(
         edges.select(F.col(a_col).alias("a"), F.col(b_col).alias("b")).distinct()
     )
@@ -262,28 +267,24 @@ def label_propagation(
     adj_b = u.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
     adj_a = u.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
 
-    def _half(labels_df: DataFrame, adj: DataFrame, side: DataFrame) -> DataFrame:
-        nbr_lbl = labels_df.select(
-            F.col("node").alias("nbr"), F.col("label").alias("nlbl")
-        )
+    def _half(lbl: DataFrame, adj: DataFrame) -> DataFrame:
+        nbr_lbl = lbl.select(F.col("node").alias("nbr"), F.col("label").alias("nlbl"))
         votes = (
             adj.join(nbr_lbl, "nbr")
             .groupBy("node", "nlbl")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
         # argmax by (count desc, label asc): max of (cnt, -label)
-        picked = votes.groupBy("node").agg(
-            F.max(F.struct(F.col("cnt"), (-F.col("nlbl")).alias("neg"))).alias(
-                "m"
-            )
-        ).select("node", (-F.col("m.neg")).alias("label"))
-        other = labels_df.join(side, "node", "left_anti")
-        return other.unionAll(picked)
+        m = F.max(F.struct(F.col("cnt"), (-F.col("nlbl")).alias("neg")))
+        picked = votes.groupBy("node").agg(m.alias("m"))
+        picked = picked.select("node", (-F.col("m.neg")).alias("pick"))
+        return lbl.join(picked, "node", "left").select(
+            "node", F.coalesce("pick", "label").alias("label"), "prev"
+        )
 
     def step(lbl: DataFrame) -> DataFrame:
-        cur = lbl.select("node", "label")
-        nxt = _half(_half(cur, adj_b, b_nodes), adj_a, a_nodes)
-        return nxt.join(cur.withColumnRenamed("label", "prev"), "node")
+        cur = lbl.select("node", "label", F.col("label").alias("prev"))
+        return _half(_half(cur, adj_b), adj_a)
 
     labels, _, _, n_moved = fixpoint(
         "label_propagation",

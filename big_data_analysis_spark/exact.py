@@ -58,10 +58,6 @@ def revenue_dec() -> Column:
 
 # --- SQL-side twins (DuckDB), textually parallel ---
 
-def sql_dcol(expr: str) -> str:
-    return f"CAST({expr} AS DECIMAL(18,2))"
-
-
 def sql_dsum(expr: str) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(18,2))) AS DOUBLE)"
 

@@ -7,7 +7,6 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Observation
-from pyspark.sql import functions as F
 
 from . import lifecycle
 
@@ -25,14 +24,11 @@ def fixpoint(
     ``changed`` is an aggregate Column over the rows of ``step(state)``
     that counts the rows the round moved, typically
     ``F.count(F.when(F.col("__delta"), 1))`` over a boolean flag the
-    step emits.  Each round attaches it to ``step(state)`` with
-    ``DataFrame.observe`` and runs one EAGER ``localCheckpoint``, so
-    the count comes back from the same jobs that fill the checkpoint
-    and lineage stays one round deep.  The checkpoint must be eager:
-    a lazy one leaves the observation unfilled until a later action,
-    which reads the checkpoint and not the observed plan.  At most two
-    rounds stay in memory: once round k exists, round k-2's checkpoint
-    is freed (``lifecycle.free``).  The caller's seed is never freed,
+    step emits.  Each round checkpoints ``step(state)`` through
+    ``observed_checkpoint``, so the count comes back from the same
+    jobs that fill the checkpoint and lineage stays one round deep.
+    At most two rounds stay in memory: once round k exists, round
+    k-2's checkpoint is freed (``lifecycle.free``).  The caller's seed is never freed,
     and the returned ``state`` and ``prev`` are released by
     ``lifecycle.release_kernel_persists`` with the rest of the query.
 
@@ -65,12 +61,11 @@ def fixpoint(
     try:
         for rounds in range(1, max_rounds + 1):
             sc.setJobDescription(f"{name} round {rounds}")
-            obs = Observation()
-            nxt = step(state).observe(obs, changed.alias("n_changed"))
-            older, prev, state = prev, state, lifecycle.checkpoint(nxt)
+            older, prev = prev, state
+            state, seen = observed_checkpoint(step(state), n_changed=changed)
             if rounds > 2:  # ``older`` is round rounds-2, not the seed
                 lifecycle.free(older)
-            n_changed = obs.get["n_changed"]
+            n_changed = seen["n_changed"]
             if not n_changed:
                 break
     finally:
@@ -78,10 +73,13 @@ def fixpoint(
     return state, prev, rounds, n_changed
 
 
-def counted_checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
-    """``df`` eagerly localCheckpoint'ed, and its row count, observed
-    by the jobs that fill the checkpoint: a seed state sizes its
-    ``max_rounds`` budget without a separate count job."""
+def observed_checkpoint(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict]:
+    """``df`` eagerly localCheckpoint'ed, and the aggregates ``aggs``
+    over its rows as ``{name: value}``, observed by the jobs that fill
+    the checkpoint (an eager one: a lazy checkpoint is filled by a
+    later action that reads it, not the observed plan).  Over no rows
+    a count is 0 and a max None.  A retried task adds its rows again,
+    so observe only a max, a min, a zero test or a round budget."""
     obs = Observation()
-    cp = lifecycle.checkpoint(df.observe(obs, F.count(F.lit(1)).alias("n")))
-    return cp, obs.get["n"]
+    cp = lifecycle.checkpoint(df.observe(obs, *(c.alias(k) for k, c in aggs.items())))
+    return cp, obs.get

@@ -3,7 +3,8 @@
 HITS, k-core, connected components, shortest paths and BFS
 centralities.  Every round loop runs through fixpoint.fixpoint
 (join + groupBy per round, one eager localCheckpoint per round whose
-jobs also report the round's change count).
+jobs also report the round's change count; HITS checkpoints each
+half-step too, whose jobs report its max-normalizer).
 
 At 100 TB the per-iteration cost is one join of the round's state
 with the loop-invariant edge table plus one group-by, GraphX/Pregel's
@@ -28,7 +29,7 @@ from ..api_graph import (
     _peel_step,
     _with_certificate,
 )
-from ..fixpoint import fixpoint
+from ..fixpoint import fixpoint, observed_checkpoint
 from .. import lifecycle
 from ..io import table
 from ..registry import query
@@ -150,21 +151,20 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the conserved mass (ranks sum to ≤ 1e12, short by < n per
     round), they never reorder it.
 
-    Execution shape per round (identical to api.pagerank): one
-    broadcast degree join, one equi-join on src, one groupBy dst
-    shuffle; n and the dangling mass are 1-row broadcast
-    crossJoins.  The 15 rounds are a fixpoint budget (early exit once
-    no rank moves; each round carries the previous rank to flag the
-    rows that moved)."""
+    Execution shape per round (as in api.pagerank): one broadcast
+    degree join, one equi-join on src, one groupBy dst shuffle; n is a
+    literal, the exact count of the checkpointed node table, and the
+    dangling mass stays a 1-row broadcast crossJoin in the plan (a
+    sum is not safe to observe).  The 15 rounds are a fixpoint budget
+    (early exit once no rank moves; each round carries the previous
+    rank to flag the rows that moved)."""
     S = _PR_SCALE
     e = lifecycle.checkpoint(_edges(spark, sf_dir))
     deg = e.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    nodes = _nodes(e)
-    meta = nodes.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    r = lifecycle.checkpoint(
-        nodes.crossJoin(F.broadcast(meta))
-        .select("node", F.expr(f"CAST({S} AS BIGINT) DIV n").alias("pr"))
-    )
+    nodes = lifecycle.checkpoint(_nodes(e))
+    # exact, not observed: it feeds the arithmetic (1 spares an empty graph S DIV 0)
+    n = max(nodes.count(), 1)
+    r = nodes.select("node", F.lit(S // n).cast("long").alias("pr"))
 
     def step(r: DataFrame) -> DataFrame:
         rd = r.join(F.broadcast(deg), r["node"] == deg["src"]).select(
@@ -183,14 +183,13 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             r.select("node", F.col("pr").alias("prev"))
             .join(contrib, "node", "left")
-            .crossJoin(F.broadcast(meta))
             .crossJoin(F.broadcast(dm))
             .select(
                 "node",
                 F.expr(
-                    f"(15 * CAST({S} AS BIGINT)) DIV (100 * n)"
+                    f"CAST({15 * S // (100 * n)} AS BIGINT)"
                     " + coalesce(contrib, CAST(0 AS BIGINT))"
-                    " + (85 * dm) DIV (100 * n)"
+                    f" + (85 * dm) DIV CAST({100 * n} AS BIGINT)"
                 )
                 .cast("long")
                 .alias("pr"),
@@ -722,8 +721,10 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     1e-9 agreement plus determinism across two runs.
 
     Execution shape per fixpoint round: TWO bounded shuffles (hub
-    mass grouped by dst -> auth; auth mass grouped by src -> hub),
-    each normalization a 1-row broadcast crossJoin.  The edge table is
+    mass grouped by dst -> auth; auth mass grouped by src -> hub).
+    Each half-step's max is observed on the checkpoint of its raw
+    scores (``observed_checkpoint``; a max is safe to observe) and
+    divides them as a literal.  The edge table is
     a checkpoint built once before the loop; its distinct partitions
     it on (src, dst), so each half-step's join shuffles it on the
     endpoint it joins on or broadcasts the smaller side."""
@@ -741,15 +742,19 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col(to).alias("node"))
             .agg(F.sum(src).alias("raw"))
         )
-        x = (
+        x, seen = observed_checkpoint(
             scores.select("node", src)
             .join(flow, "node", "left")
-            .withColumn("raw", F.coalesce(F.col("raw"), F.lit(0.0)))
+            .withColumn("raw", F.coalesce(F.col("raw"), F.lit(0.0))),
+            m=F.max("raw"),
         )
-        m = x.agg(F.greatest(F.max("raw"), F.lit(1e-300)).alias("m"))
-        return x.crossJoin(F.broadcast(m)).select(
-            "node", src, (F.col("raw") / F.col("m")).alias(dst)
-        )
+        while last:  # the previous half-step's checkpoint is read by now
+            lifecycle.free(last.pop())
+        last.append(x)
+        m = max(seen["m"] or 0.0, 1e-300)  # None: no node, nothing to scale
+        return x.select("node", src, (F.col("raw") / F.lit(m)).alias(dst))
+
+    last: list[DataFrame] = []  # the latest half-step checkpoint
 
     def step(scores: DataFrame) -> DataFrame:
         auth = half(scores, "src", "dst", "hub", "auth")
@@ -764,7 +769,8 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_rounds=_HITS_ITERS,
         changed=F.count(F.lit(1)),
     )
-    lifecycle.free(e)
+    for x in [e, *last]:
+        lifecycle.free(x)
     return scores.select("node", "hub", "auth")
 
 
@@ -1031,32 +1037,42 @@ def graph_hits_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     round STRUCTURE against an independent engine.
 
     Execution shape per round: two bounded shuffles (hub mass by
-    dst, authority mass by src), each max a 1-row broadcast
-    crossJoin; the 10 rounds are a fixpoint budget (early exit once no
-    hub score moves).  The edge table is a checkpoint built before the
-    loop."""
+    dst, authority mass by src), each max observed on the checkpoint
+    of the half-step's raw sums and divided in as a literal.  The
+    second half-step groups over the round's hub table, so the hubs it
+    started from ride along as ``prev``.  The 10 rounds are a fixpoint
+    budget (early exit once no hub score moves).  The edge table is a
+    checkpoint built before the loop."""
     S = _HITS_SCALE
     e = lifecycle.checkpoint(_edges(spark, sf_dir))
     nodes = lifecycle.checkpoint(_nodes(e))
 
-    def half(scores: DataFrame, to: str, frm: str) -> DataFrame:
-        """One max-normalized half-step: every node sums ``scores``
-        over its in-edges (to="dst") or out-edges (to="src")."""
-        raw = (
-            nodes.join(e, F.col("node") == F.col(to), "left")
+    def half(base: DataFrame, scores: DataFrame, to: str, frm: str) -> DataFrame:
+        """One max-normalized half-step: every node of ``base`` sums
+        ``scores`` over its in-edges (to="dst") or out-edges
+        (to="src"), and keeps the other columns of ``base``."""
+        raw, seen = observed_checkpoint(
+            base.join(e, F.col("node") == F.col(to), "left")
             .join(scores.toDF("sn", "sv"), F.col(frm) == F.col("sn"), "left")
-            .groupBy("node")
-            .agg(F.coalesce(F.sum("sv"), F.lit(0)).cast("long").alias("raw"))
+            .groupBy(*base.columns)
+            .agg(F.coalesce(F.sum("sv"), F.lit(0)).cast("long").alias("raw")),
+            m=F.max("raw"),
         )
-        m = raw.agg(F.max("raw").alias("m"))
-        return raw.crossJoin(F.broadcast(m)).select(
-            "node", F.expr(f"CAST(raw * {S} DIV m AS BIGINT)").alias("score")
+        while last:  # the previous half-step's checkpoint is read by now
+            lifecycle.free(last.pop())
+        last.append(raw)
+        # m is None only when there is no node: a null literal, not SQL text
+        return raw.withColumn("m", F.lit(seen["m"]).cast("long")).select(
+            *base.columns, F.expr(f"CAST(raw * {S} DIV m AS BIGINT)").alias("score")
         )
+
+    last: list[DataFrame] = []  # the latest half-step checkpoint
 
     def step(h: DataFrame) -> DataFrame:
         h = h.select("node", "score")
-        nxt = half(half(h, "dst", "src"), "src", "dst")
-        return nxt.join(h.withColumnRenamed("score", "prev"), "node")
+        a = half(nodes, h, "dst", "src")
+        # the hubs' table drives the second half, so it carries ``prev``
+        return half(h.withColumnRenamed("score", "prev"), a, "src", "dst")
 
     h = nodes.select("node", F.lit(S).cast("long").alias("score"))
     h, h_prev, _, _ = fixpoint(
@@ -1068,7 +1084,7 @@ def graph_hits_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the final round's authorities were computed from the hubs one
     # round before the final ones
-    a = half(h_prev.select("node", "score"), "dst", "src").toDF("node", "a")
+    a = half(nodes, h_prev.select("node", "score"), "dst", "src").toDF("node", "a")
     # convergence certificate: the max hub-score movement in the final
     # round on the 1e6 lattice (0 = the iteration has fixpointed; a
     # nonzero value at larger scale is graded, not silently stale)

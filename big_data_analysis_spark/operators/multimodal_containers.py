@@ -217,18 +217,6 @@ _TAR_MEMBERS = 3
 _TAR_CONST_SUM = 2509
 
 
-def _ascii_sum(scol):
-    """Byte sum of an ASCII string column (pure codegen fold)."""
-    return F.aggregate(
-        F.transform(
-            F.sequence(F.lit(1), F.length(scol)),
-            lambda i: F.ascii(F.substr(scol, i, F.lit(1))),
-        ),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x.cast("long"),
-    )
-
-
 def _synth_tars(d) -> DataFrame:
     """Synthesize a real POSIX-ustar archive per doc_id < 40: three
     members "doc{d}/part{i}.txt" with formula-driven sizes

@@ -370,6 +370,69 @@ def test_fixpoint_rounds_read_no_cached_plan(spark, sf_dir, name):
         assert n_jobs <= 13, n_jobs
 
 
+# the most jobs one round of each kernel may run at sf0.001, and the
+# name its rounds run under.  HITS reads each half-step's max, and
+# exact PageRank its node count, as a literal; label propagation and
+# exact HITS carry each round's previous state as ``prev``.  Where each
+# round crossJoined a 1-row aggregate or re-joined its own state, the
+# busiest rounds ran 15, 14, 16 and 16 jobs.  Exact HITS runs 12 or 13
+# from run to run (AQE's stage timing), so its budget has one to spare.
+_ROUND_JOB_BUDGET = {
+    "graph_hits": ("graph_hits", 11),
+    "graph_hits_exact": ("graph_hits_exact", 14),
+    "graph_pagerank_exact": ("graph_pagerank_exact", 11),
+    "graph_label_propagation": ("label_propagation", 11),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_ROUND_JOB_BUDGET))
+def test_fixpoint_round_job_budget(spark, sf_dir, name):
+    """No round of a query's fixpoint runs more jobs than its budget."""
+    import re
+
+    loop, budget = _ROUND_JOB_BUDGET[name]
+    seen = set(_jobs(spark))
+    run(name, spark, sf_dir).collect()
+    per_round = Counter(
+        job.description().get()
+        for j, job in _jobs(spark).items()
+        if j not in seen
+        and job.description().isDefined()
+        and re.fullmatch(rf"{loop} round \d+", job.description().get())
+    )
+    assert per_round
+    assert max(per_round.values()) <= budget, per_round
+
+
+def test_observed_checkpoint_on_an_empty_frame(spark):
+    """Over no rows a max observes None and a count 0, and both come
+    back from the one SQL execution that fills the checkpoint."""
+    from pyspark.sql import functions as F
+
+    from big_data_analysis_spark.fixpoint import observed_checkpoint
+
+    seen = set(_executions(spark))
+    cp, values = observed_checkpoint(
+        spark.range(0), m=F.max("id"), n=F.count(F.lit(1))
+    )
+    assert values == {"m": None, "n": 0}
+    assert len(set(_executions(spark)) - seen) == 1
+    assert cp.count() == 0
+
+
+def test_normalized_graph_kernels_on_an_empty_graph(spark, sf_dir, monkeypatch):
+    """An empty edge table gives no rows: the observed HITS max is
+    None there, which becomes a null literal rather than SQL text, and
+    exact PageRank's node count is 0."""
+    import big_data_analysis_spark.operators.graph as g
+
+    monkeypatch.setattr(
+        g, "_edges", lambda spark, sf_dir: spark.createDataFrame([], "src long, dst long")
+    )
+    for fn in (g.graph_hits, g.graph_hits_exact, g.graph_pagerank_exact):
+        assert fn(spark, sf_dir).collect() == [], fn.__name__
+
+
 def test_fixpoint_on_empty_state_runs_one_round(spark):
     """An empty state counts 0 changed rows: one round, then stop."""
     from pyspark.sql import functions as F
